@@ -25,13 +25,15 @@ from __future__ import annotations
 from typing import Dict, List, Optional
 
 from .entities import find_charrefs, find_entityrefs, unescape
-from .parse import HTML_VOID, EventPump
+from .parse import HTML_VOID
+from .pump import pump_document
 
 __all__ = ['CallbackParser']
 
 
 class _Middleware:
-    """event sink bridging EventPump events to CallbackParser hooks"""
+    """composer-protocol sink forwarding pump events to CallbackParser
+    hooks"""
 
     # plain attribute so EventPump's `target.fix_broken = ...` works
     fix_broken = False
@@ -100,13 +102,10 @@ class CallbackParser:
     def close(self) -> None:
         data = b''.join(self._chunks)
         self._chunks = []
-        pump = EventPump(
-            data, target=_Middleware(self), encoding=self.encoding,
-            fix_broken=self.fix_broken,
-            empty=HTML_VOID if self.mode == 'html' else None,
-            unescape_fn=self._unescape)
-        while pump.step():
-            pass
+        pump_document(data, _Middleware(self), encoding=self.encoding,
+                      fix_broken=self.fix_broken,
+                      empty=HTML_VOID if self.mode == 'html' else None,
+                      unescape=self._unescape)
 
     def _unescape(self, value: str) -> str:
         if self.convert_charefs:

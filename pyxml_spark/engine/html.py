@@ -5,8 +5,8 @@ void-tag autoclose + never-shortened style/script on serialize. Raw-text
 script/style lexing lives in the scanner (always on, like the reference).
 
 The reference's SAX-style ``HTMLParser`` callback class (html/parser.py:62-122)
-is intentionally not ported: the pipeline consumes trees, not callbacks
-(SURVEY.md §2-B last row).
+is dead on arrival there; its working equivalent is
+:class:`~pyxml_spark.engine.callbacks.CallbackParser`.
 """
 from __future__ import annotations
 

@@ -1,4 +1,5 @@
-"""Event dispatch: scanner events -> composer calls.
+"""Parse entry points (run the fused loop in ``pump.py``) and ``EventPump``,
+the unfused scanner-events -> composer-calls dispatch kept as its oracle.
 
 Behavior parity target: /root/reference/pyxml/parser.py (Parser.next /
 parse_tag / process_pi), including:
@@ -63,7 +64,11 @@ class ParseFailure(SyntaxError):
 
 
 class EventPump:
-    """drives one Scanner into one TreeComposer"""
+    """drives one Scanner into one TreeComposer, one event at a time.
+
+    No entry point runs this; they all use the fused ``pump_document``.
+    It is the unfused oracle the differential tests check that loop
+    against, until the pyxml reference ships with the checkout."""
 
     __slots__ = ('scanner', 'target', 'encoding', 'fix_broken', 'empty',
                  'track_spans', 'unescape', '_stash')
@@ -183,14 +188,19 @@ def parse_document(data,
     if isinstance(data, str):
         data = data.encode()
     empty = HTML_VOID if mode == 'html' else None
-    if target is None:
-        target = TreeComposer(fix_broken=fix_broken)
-    else:
-        target.fix_broken = fix_broken
     from .pump import pump_document
-    return pump_document(data, target, encoding=encoding,
-                         fix_broken=fix_broken, empty=empty,
-                         track_spans=track_spans)
+    return pump_document(data, _composer(target, fix_broken),
+                         encoding=encoding, fix_broken=fix_broken,
+                         empty=empty, track_spans=track_spans)
+
+
+def _composer(target: Optional[TreeComposer],
+              fix_broken: bool) -> TreeComposer:
+    """``target`` set to the parse's repair mode, or a fresh composer"""
+    if target is None:
+        return TreeComposer(fix_broken=fix_broken)
+    target.fix_broken = fix_broken
+    return target
 
 
 def fromstring(text, fix_broken: bool = True, **kwargs) -> Element:
@@ -264,7 +274,8 @@ class Parser:
             # reference parity (parser.py:140): closing with no source is a
             # protocol error, not an empty parse
             raise RuntimeError('no data-stream provided')
-        pump = EventPump(self._drain(), target=self.target,
-                         encoding=self.encoding, fix_broken=self.fix_broken,
-                         empty=self.empty)
-        return pump.run()
+        from .pump import pump_document
+        return pump_document(self._drain(),
+                             _composer(self.target, self.fix_broken),
+                             encoding=self.encoding,
+                             fix_broken=self.fix_broken, empty=self.empty)

@@ -1,28 +1,31 @@
-"""Fused scan+dispatch loop: one function that parses a whole document.
+"""The parse loop: one function that lexes a whole document into a sink.
 
-This is a performance fusion of :class:`~pyxml_spark.engine.scanner.Scanner`'s
-classification loop with :class:`~pyxml_spark.engine.parse.EventPump`'s event
-dispatch (``step``/``_open_tag``/``_instruction``).  Semantics are identical by
+Every entry point parses here — ``parse_document``, ``Parser``,
+``CallbackParser`` and the extraction kernel's ``gather_document`` — and
+events reach the sink only through the composer protocol
+(``start/end/startend/data/comment/declaration/pi/close``).  The loop fuses
+:class:`~pyxml_spark.engine.scanner.Scanner`'s classification with
+:class:`~pyxml_spark.engine.parse.EventPump`'s event dispatch
+(``step``/``_open_tag``/``_instruction``).  Semantics are identical by
 construction — the state machine below is the same machine, inlined so that
 
 * no per-event tuple is allocated (kind/value/position live in locals),
 * cursor state (``i``/``line``/``col``/``prev``) stays in locals across the
   whole document instead of being loaded/stored per ``scan()`` call,
-* tag-attribute runs feed the composer without a generator round-trip.
+* tag-attribute runs feed the sink without a generator round-trip.
 
 Parity targets are therefore the same reference lines the unfused path cites:
-``/root/reference/pyxml/lexer.py:207-278`` (master token dispatch),
-``_tokenize.py:125-135`` (empty-UNDEFINED stream end), ``parser.py:173-267``
-(tag runs, bare-attr ``'true'`` default, fix_broken stash/replay, PI encoding
-switch).  ``tests/test_pump_fused.py`` differentially checks this loop against
-the unfused ``EventPump`` over the fuzz corpus; the oracle-diff/fuzz suites
-check it against the reference itself (``parse_document`` routes here).
+pyxml ``lexer.py:207-278`` (master token dispatch), ``_tokenize.py:125-135``
+(empty-UNDEFINED stream end), ``parser.py:173-267`` (tag runs, bare-attr
+``'true'`` default, fix_broken stash/replay, PI encoding switch).
+``tests/test_pump_fused.py`` differentially checks the tree, feed/close and
+callback entry points against the unfused ``EventPump`` over the fuzz corpus.
 """
 from __future__ import annotations
 
 from typing import Optional, Set
 
-from .compose import ComposeError, TreeComposer
+from .compose import TreeComposer
 from .doc import Element
 from .entities import unescape
 from .scanner import (E_ANAME, E_AVAL, E_DECL, E_GT, E_NONE, E_OPEN, E_PI,
@@ -53,8 +56,12 @@ def pump_document(data: bytes,
                   encoding: str = 'utf-8',
                   fix_broken: bool = False,
                   empty: Optional[Set[str]] = None,
-                  track_spans: bool = False) -> Element:
-    """parse one payload straight into ``target`` and return the closed tree.
+                  track_spans: bool = False,
+                  unescape=unescape) -> Element:
+    """parse one payload straight into ``target``; returns ``target.close()``.
+
+    ``unescape`` decodes text, comments and attribute values containing
+    ``&``, like the reference's overridable ``Parser.unescape``.
 
     Raises exactly what the unfused path raises (``ParseFailure`` with the
     same message/code/position, composer/decoder errors untouched).
@@ -66,126 +73,13 @@ def pump_document(data: bytes,
     n = sc.n
     enc = encoding
 
-    # Composer fast path: for a fresh default TreeComposer the event sink is
-    # inlined as closures over local tree state (no per-event method chain —
-    # TreeComposer.start alone is 4 frames).  Semantics mirror compose.py
-    # line for line, including the ''-not-None text quirk (builder.py:39),
-    # fix_broken repairs (builder.py:44-58, 68-75, 97-110, 143-145) and the
-    # multi-root 'document' wrapper.  tests/test_pump_fused.py differentially
-    # fuzzes this against the unfused EventPump+TreeComposer path.
-    fast = (type(target) is TreeComposer and target.root is None
-            and target.last is None and not target.open
-            and not target.frags
-            and target.element_factory is Element
-            and not (target.insert_comments or target.insert_declares
-                     or target.insert_pis))
-    if fast:
-        c_root: Optional[Element] = None
-        c_last: Optional[Element] = None
-        c_open: list = []
-        c_frags: list = []
-        c_spans: list = []
-        c_in_tail = False
-        _new = Element.__new__
-
-        def settle():
-            # compose.TreeComposer._settle
-            nonlocal c_frags, c_spans
-            last = c_last
-            if last is None:
-                c_frags = []
-                c_spans = []
-                return
-            text = ''.join(c_frags)
-            spans = c_spans
-            if c_in_tail:
-                if last.tail:
-                    if fix_broken:
-                        last.tail += text
-                        return  # buffer deliberately kept (builder.py:47-49)
-                    raise ComposeError('Element tail already assigned')
-                last.tail = text
-                if spans:
-                    last.tail_spans = (last.tail_spans or []) + spans
-            else:
-                if last.text:
-                    if fix_broken:
-                        last.text += text
-                        return
-                    raise ComposeError('Element text already assigned')
-                last.text = text
-                if spans:
-                    last.text_spans = (last.text_spans or []) + spans
-            c_frags = []
-            c_spans = []
-
-        def do_start(tag, attrs):
-            # compose.TreeComposer.start + _adopt, element alloc inlined
-            nonlocal c_root, c_last, c_in_tail
-            settle()
-            elem = _new(Element)
-            elem.tag = tag
-            elem.attrib = attrs
-            elem.parent = None
-            elem.children = []
-            elem.text = None
-            elem.tail = None
-            elem.text_spans = None
-            elem.tail_spans = None
-            c_last = elem
-            if c_open:
-                c_open[-1].append(elem)
-            elif c_root is None:
-                c_root = elem
-            elif fix_broken:
-                shell = Element('document')
-                shell.text = '\n'
-                shell.append(c_root)
-                c_root = shell
-                c_open.insert(0, shell)
-                shell.append(elem)
-            else:
-                raise ComposeError('more than one tree present')
-            c_open.append(elem)
-            c_in_tail = False
-
-        def do_end(tag):
-            # compose.TreeComposer.end, recursion flattened to a loop
-            nonlocal c_last, c_in_tail
-            while True:
-                if not c_open:
-                    if fix_broken:
-                        return
-                    raise ComposeError(
-                        f'Unexpected End. Tree Is Empty: {tag}')
-                settle()
-                c_last = c_open.pop()
-                if c_last.tag != tag:
-                    if not fix_broken:
-                        raise ComposeError(
-                            f'End Tag Mismatch (Expected {c_last.tag}, '
-                            f'Got {tag})')
-                    deeper = False
-                    for e in c_open:
-                        if e.tag == tag:
-                            deeper = True
-                            break
-                    if deeper:
-                        continue
-                c_in_tail = True
-                return
-
-        def do_startend(tag, attrs):
-            do_start(tag, attrs)
-            do_end(tag)
-    else:
-        do_start = target.start
-        do_startend = target.startend
-        do_end = target.end
-        t_data = target.data
-        t_comment = target.comment
-        t_declaration = target.declaration
-        t_pi = target.pi
+    do_start = target.start
+    do_startend = target.startend
+    do_end = target.end
+    t_data = target.data
+    t_comment = target.comment
+    t_declaration = target.declaration
+    t_pi = target.pi
 
     i = 0
     line = 1
@@ -498,41 +392,21 @@ def pump_document(data: bytes,
         if kind == E_TEXT:
             if '&' in value:
                 value = unescape(value)
-            if fast:
-                c_frags.append(value)
-                if track_spans:
-                    c_spans.append((start, i))
-            else:
-                t_data(value, (start, i) if track_spans else None)
+            t_data(value, (start, i) if track_spans else None)
         elif kind == E_REM:
-            # unescape runs even when the comment is dropped — its charref
+            # unescape runs even when the sink drops comments — its charref
             # errors are observable (parser.py:252-255)
-            value = unescape(value) if '&' in value else value
-            if not fast:
-                t_comment(value)
+            t_comment(unescape(value) if '&' in value else value)
         elif kind == E_DECL:
-            if not fast:
-                t_declaration(value)
+            t_declaration(value)
         elif kind == E_PI:
             # <?xml ... encoding=X?> switches the decoder (parser.py:229-238)
             pi_target, pi_value = value.split(' ', 1)
             if pi_target == 'xml':
                 for match in _ENCODING_RX.finditer(pi_value):
                     enc = match.groups()[0].strip('\'"')
-            if not fast:
-                t_pi(pi_target, pi_value)
+            t_pi(pi_target, pi_value)
         else:
             raise ParseFailure('Unexpected Next Token', ev)
 
-    if fast:
-        # compose.TreeComposer.close
-        if c_open:
-            if not fix_broken:
-                raise ComposeError(
-                    f'Missing End Tags {[e.tag for e in c_open]}')
-            while c_open:
-                do_end(c_open[-1].tag)
-        if c_root is None:
-            raise ComposeError('Missing Toplevel Element')
-        return c_root
     return target.close()

@@ -92,11 +92,6 @@ class Scanner:
             self.col += 1
         return b
 
-    def _back(self, k: int = 1):
-        """rewind k just-read bytes (callers never rewind across a newline)"""
-        self.i -= k
-        self.col -= k
-
     def _advance_to(self, j: int):
         """bulk-consume up to offset j with the same line/col arithmetic a
         byte-at-a-time loop would produce"""

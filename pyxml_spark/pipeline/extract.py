@@ -2,8 +2,9 @@
 
 The Spark operator required by the north_star: "batched Arrow/pandas UDFs
 that tokenize and tree-build whole columns of turn payloads per partition (no
-per-row Python)". One ``mapInPandas`` stage; each Arrow batch crosses the
-JVM/Python boundary once and the engine parses each payload in-process.
+per-row Python)". One ``mapInArrow`` stage; each Arrow batch crosses the
+JVM/Python boundary once, with no pandas conversion on either side, and the
+engine parses each payload in-process.
 
 Scale design (SURVEY.md §2-F / §4):
 
@@ -17,23 +18,13 @@ Scale design (SURVEY.md §2-F / §4):
 """
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Optional
+from typing import Optional
 
-import pandas as pd
-
-from ..engine import parse_document  # noqa: F401 (DOM path for callers)
-from ..engine.compose import ComposeError  # noqa: F401 (re-export for callers)
 from .gather import gather_document
-from .heuristics import (ExtractConfig, extract_main,  # noqa: F401
-                         score_fragments, select_main)
+from .heuristics import ExtractConfig, score_fragments, select_main
 from .schema import EXTRACTION_SCHEMA
 
-__all__ = ['extract_payload', 'extract_batches', 'extract_arrow_batches',
-           'extract_turns',
-           'FAST_PATH_MARKUP']
-
-#: payloads containing neither < nor > skip the parser entirely
-FAST_PATH_MARKUP = ('<', '>')
+__all__ = ['extract_payload', 'extract_arrow_batches', 'extract_turns']
 
 
 def _extract_row(payload: Optional[str], config: ExtractConfig) -> tuple:
@@ -76,34 +67,12 @@ def extract_payload(payload: Optional[str],
                 n_text_chars=n_text_chars)
 
 
-def extract_batches(batches: Iterable[pd.DataFrame],
-                    config: ExtractConfig = ExtractConfig()
-                    ) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: one call per Arrow batch, plain python loop per
-    document inside the batch"""
-    for pdf in batches:
-        conv = pdf['conv_id']
-        turn = pdf['turn_idx']
-        rows = [extract_payload(t, config) for t in pdf['text']]
-        yield pd.DataFrame({
-            'conv_id': conv.values,
-            'turn_idx': turn.values,
-            'main_text': [r['main_text'] for r in rows],
-            'spans': [r['spans'] for r in rows],
-            'parse_error': [r['parse_error'] for r in rows],
-            'n_nodes': [r['n_nodes'] for r in rows],
-            'n_text_chars': [r['n_text_chars'] for r in rows],
-            'n_raw_chars': [len(t) if t is not None else 0
-                            for t in pdf['text']],
-        })
-
-
 def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
     """mapInArrow kernel: pyarrow RecordBatch in/out, no pandas layer.
 
-    Skipping the Arrow->pandas->Arrow conversions roughly halves the
-    per-batch overhead: input strings come out once via ``to_pylist`` and
-    results go back as arrays built directly.
+    Input strings come out once via ``to_pylist`` and results go back as
+    arrays built directly, so no Arrow->pandas->Arrow copy is paid per
+    batch.
     """
     import pyarrow as pa
 
@@ -157,26 +126,18 @@ def extract_turns(df,
                   config: ExtractConfig = ExtractConfig(),
                   partitions: Optional[int] = None,
                   salt: int = 16,
-                  sort_output: bool = True,
-                  use_arrow: bool = True):
+                  sort_output: bool = True):
     """transcripts DataFrame -> extraction DataFrame.
 
     ``partitions``/``salt`` control the explicit salted repartition; with
     ``partitions=None`` the session's shuffle parallelism is used.
-    ``use_arrow`` selects the pyarrow kernel (default; the pandas kernel is
-    kept as a fallback/reference).
     """
     from .skew import salted_repartition
 
     cols = df.select('conv_id', 'turn_idx', 'text')
     spread = salted_repartition(cols, partitions, salt=salt)
-    if use_arrow:
-        out = spread.mapInArrow(
-            lambda it: extract_arrow_batches(it, config),
-            schema=EXTRACTION_SCHEMA)
-    else:
-        out = spread.mapInPandas(
-            lambda it: extract_batches(it, config), schema=EXTRACTION_SCHEMA)
+    out = spread.mapInArrow(lambda it: extract_arrow_batches(it, config),
+                            schema=EXTRACTION_SCHEMA)
     if sort_output:
         out = out.sortWithinPartitions('conv_id', 'turn_idx')
     return out

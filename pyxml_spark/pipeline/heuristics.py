@@ -15,7 +15,7 @@ children) so it runs identically over our Element and the reference's Element
 from __future__ import annotations
 
 import re
-from typing import Any, List, NamedTuple, Optional, Tuple
+from typing import List, NamedTuple, Optional, Tuple
 
 __all__ = ['ExtractConfig', 'Extraction', 'score_blocks', 'score_fragments',
            'select_main', 'extract_main']
@@ -80,14 +80,6 @@ def _norm(text: str) -> str:
 def _hint_boiler(attrib) -> bool:
     hint = attrib.get('class', '') + ' ' + attrib.get('id', '')
     return bool(_BOILER_HINT_RX.search(hint.lower()))
-
-
-def _is_boiler_elem(tag: Any, attrib) -> bool:
-    if tag in BOILER_TAGS:
-        return True
-    if not attrib:
-        return False
-    return _hint_boiler(attrib)
 
 
 def _gather(root) -> Tuple[list, List[bool], int]:

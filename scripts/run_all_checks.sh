@@ -14,7 +14,7 @@ python3 scripts/explain_plans.py
 
 echo '== 4. bench (one JSON line) =='
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" python3 bench.py
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" python3 bench.py
 
 echo '== 5. scaling evidence (writes BENCH/BASELINE.md; ~15 min) =='
 python3 scripts/scaling_bench.py

@@ -88,14 +88,26 @@ def test_elementtree_wrapper(root):
         ElementTree().getroot()
 
 
-def test_special_nodes_roundtrip():
-    from pyxml_spark.engine.compose import TreeComposer
+def _special_via_event_pump(payload, composer):
     from pyxml_spark.engine.parse import EventPump
+    return EventPump(payload, target=composer, fix_broken=True).run()
+
+
+def _special_via_parser(payload, composer):
+    parser = Parser(target=composer, fix_broken=True)
+    parser.feed(payload)
+    return parser.close()
+
+
+@pytest.mark.parametrize('parse', [_special_via_event_pump,
+                                   _special_via_parser],
+                         ids=['EventPump', 'Parser'])
+def test_special_nodes_roundtrip(parse):
+    from pyxml_spark.engine.compose import TreeComposer
     composer = TreeComposer(insert_comments=True, insert_declares=True,
-                            insert_pis=True, fix_broken=True)
-    pump = EventPump(b'<!DOCTYPE html><a><!--note--><?php echo 1?>x</a>',
-                     target=composer, fix_broken=True)
-    root = pump.run()
+                            insert_pis=True)
+    root = parse(b'<!DOCTYPE html><a><!--note--><?php echo 1?>x</a>',
+                 composer)
     kinds = [type(n).__name__ for n in root.iter()]
     assert 'Comment' in kinds and 'ProcessingInstruction' in kinds
     out = tostring(root, method='html')

@@ -1,6 +1,9 @@
 """Differential check: the fused pump loop (engine/pump.py) must be
 observably identical to the unfused Scanner+EventPump path over the whole
-corpus — same trees, same errors, same char spans.  The reference-parity
+corpus — same trees, same errors, same char spans, same callback events.
+Every entry point that runs the fused loop is paired with the oracle:
+``pump_document`` itself, the ``Parser``/``HTMLTreeParser`` feed+close shim,
+and ``CallbackParser`` with either unescape hook.  The reference-parity
 suites cover fused-vs-pyxml; this one pins fused-vs-unfused so the two
 in-repo state machines cannot drift."""
 from __future__ import annotations
@@ -9,8 +12,11 @@ import pytest
 
 from tests.conftest import (EXTRA_PAYLOADS, PARSER_FIXTURES, dirty_html_corpus,
                             norm_error)
+from tests.test_callbacks import Recorder
+from pyxml_spark.engine.callbacks import _Middleware
 from pyxml_spark.engine.compose import TreeComposer
-from pyxml_spark.engine.parse import HTML_VOID, EventPump
+from pyxml_spark.engine.html import HTMLTreeParser
+from pyxml_spark.engine.parse import HTML_VOID, EventPump, Parser
 from pyxml_spark.engine.pump import pump_document
 
 hypothesis = pytest.importorskip('hypothesis')
@@ -43,24 +49,58 @@ def shape_with_spans(root):
     return out
 
 
+def outcome(fn):
+    try:
+        return ('ok', fn())
+    except Exception as exc:  # noqa: BLE001 - intentional broad compare
+        return ('err', norm_error(exc), str(exc))
+
+
 def run_both(payload: bytes, fix_broken: bool, empty, track_spans: bool):
-    def unfused():
-        pump = EventPump(payload, fix_broken=fix_broken, empty=empty,
-                         track_spans=track_spans)
-        return pump.run()
+    """(unfused oracle, fused entry point) outcome pairs"""
+    def unfused(spans=track_spans):
+        return shape_with_spans(EventPump(
+            payload, fix_broken=fix_broken, empty=empty,
+            track_spans=spans).run())
 
     def fused():
-        return pump_document(payload, TreeComposer(fix_broken=fix_broken),
-                             fix_broken=fix_broken, empty=empty,
-                             track_spans=track_spans)
+        return shape_with_spans(pump_document(
+            payload, TreeComposer(fix_broken=fix_broken),
+            fix_broken=fix_broken, empty=empty, track_spans=track_spans))
 
-    results = []
-    for fn in (unfused, fused):
-        try:
-            results.append(('ok', shape_with_spans(fn())))
-        except Exception as exc:  # noqa: BLE001 - intentional broad compare
-            results.append(('err', norm_error(exc), str(exc)))
-    return results
+    def feed_close():
+        # a default composer: close() must hand it the parser's fix_broken
+        cls = HTMLTreeParser if empty else Parser
+        parser = cls(target=TreeComposer(), fix_broken=fix_broken)
+        half = len(payload) // 2
+        parser.feed(payload[:half])
+        parser.feed(payload[half:])
+        return shape_with_spans(parser.close())
+
+    pairs = [(outcome(unfused), outcome(fused)),
+             (outcome(lambda: unfused(spans=False)), outcome(feed_close))]
+
+    def callbacks_unfused(rec):
+        pump = EventPump(payload, target=_Middleware(rec),
+                         encoding=rec.encoding, fix_broken=fix_broken,
+                         empty=empty, unescape_fn=rec._unescape)
+        while pump.step():
+            pass
+
+    def callbacks_fused(rec):
+        rec.feed(payload)
+        rec.close()
+
+    for convert_charefs in (True, False):
+        got = []
+        for drive in (callbacks_unfused, callbacks_fused):
+            rec = Recorder(convert_charefs=convert_charefs,
+                           mode='html' if empty else 'xml',
+                           fix_broken=fix_broken)
+            # events delivered before an error must match too
+            got.append((outcome(lambda: drive(rec)), rec.events))
+        pairs.append(tuple(got))
+    return pairs
 
 
 @pytest.mark.parametrize('fix_broken', [False, True])
@@ -69,10 +109,9 @@ def test_corpus_fused_equals_unfused(fix_broken, empty):
     for payload in CORPUS:
         if isinstance(payload, str):
             payload = payload.encode()
-        a, b = run_both(payload, fix_broken, empty, track_spans=False)
-        assert a == b, payload
-        a, b = run_both(payload, fix_broken, empty, track_spans=True)
-        assert a == b, payload
+        for track_spans in (False, True):
+            for a, b in run_both(payload, fix_broken, empty, track_spans):
+                assert a == b, payload
 
 
 @settings(max_examples=500, deadline=None,
@@ -80,5 +119,5 @@ def test_corpus_fused_equals_unfused(fix_broken, empty):
 @given(payloads, st.booleans(), st.booleans())
 def test_fuzz_fused_equals_unfused(payload, fix_broken, html):
     empty = frozenset(HTML_VOID) if html else None
-    a, b = run_both(payload, fix_broken, empty, track_spans=True)
-    assert a == b, payload
+    for a, b in run_both(payload, fix_broken, empty, track_spans=True):
+        assert a == b, payload
