@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 
 import pandas as pd
 
@@ -110,16 +111,33 @@ def _run_extraction(df: DataFrame) -> DataFrame:
                       'parse_error', 'spans')
 
 
-def _xpath_count_batches(batches):
+def _xpath_batches(batches, paths: dict, reduce):
+    """mapInPandas body for the xpath rows: parse each payload once, run
+    every path of ``paths`` (output column -> xpath) on it and emit one
+    column per path holding ``reduce(hits)``"""
     from pyxml_spark.engine.html import fromstring
     from pyxml_spark.engine.xq import compile_path, run_steps
-    prog = compile_path('//p')  # compiled once per worker, reused per doc
+    # compiled once per worker, reused per doc
+    progs = {name: compile_path(p) for name, p in paths.items()}
     for pdf in batches:
-        counts = []
+        cols = {name: [] for name in progs}
         for payload in pdf['payload']:
             root = fromstring(payload.encode())
-            counts.append(len(run_steps(prog, (root,))))
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, 'n_p': counts})
+            for name, prog in progs.items():
+                cols[name].append(reduce(run_steps(prog, (root,))))
+        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, **cols})
+
+
+def _first_hit(hits):
+    return str(hits[0]) if hits else None
+
+
+def _run_xpaths(src: DataFrame, paths: dict, reduce,
+                col_type: str) -> DataFrame:
+    """(doc_id, one ``col_type`` column per path) over src's payloads"""
+    schema = ', '.join(['doc_id long'] + [f'{c} {col_type}' for c in paths])
+    return src.mapInPandas(
+        partial(_xpath_batches, paths=paths, reduce=reduce), schema=schema)
 
 
 def _serialize_batches(batches):
@@ -196,9 +214,7 @@ def q_xpath_count(spark, sf_dir) -> DataFrame:
         F.repeat(F.lit('<p>x</p>'), (F.col('doc_id') % 5 + 1).cast('int')),
         F.lit('</div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    out = src.mapInPandas(_xpath_count_batches, schema=StructType([
-        StructField('doc_id', LongType()), StructField('n_p', LongType())]))
-    return out.select('doc_id', F.col('n_p').cast('long').alias('n_p'))
+    return _run_xpaths(src, {'n_p': '//p'}, len, 'long')
 
 
 def q_node_table_stats(spark, sf_dir) -> DataFrame:
@@ -294,51 +310,29 @@ _SUBWORD_RX = '[A-Za-z]+|[0-9]|[^\\sA-Za-z0-9]'
 
 def q_token_count(spark, sf_dir) -> DataFrame:
     """whitespace token count + BPE-ish subword count per document"""
+    from pyxml_spark.pipeline.curate import token_count
     docs = _table(spark, sf_dir, 'documents')
-    trimmed = F.trim(F.col('text'))
-    n = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+')))
     subwords = F.size(F.regexp_extract_all('text', F.lit(_SUBWORD_RX), 0))
-    return docs.select('doc_id', n.cast('long').alias('n_tokens'),
+    return docs.select('doc_id', token_count('text').alias('n_tokens'),
                        subwords.cast('long').alias('n_subwords'))
 
 
 def q_quality_score(spark, sf_dir) -> DataFrame:
-    """length/word-shape quality gate with integer-only math"""
+    """length/word-shape quality gate (pipeline/curate.quality_columns)"""
+    from pyxml_spark.pipeline.curate import quality_columns
     docs = _table(spark, sf_dir, 'documents')
-    trimmed = F.trim(F.col('text'))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    chars_ns = F.length(F.regexp_replace('text', r'\s+', '')).cast('long')
-    d = docs.select('doc_id', n_tokens.alias('n_tokens'),
-                    chars_ns.alias('chars_ns'))
-    is_q = ((F.col('n_tokens') >= 5) & (F.col('n_tokens') <= 500)
-            & (F.col('chars_ns') >= 3 * F.col('n_tokens'))
-            & (F.col('chars_ns') <= 12 * F.col('n_tokens')))
-    return d.select('doc_id', 'n_tokens', 'chars_ns',
-                    is_q.alias('is_quality'))
-
-
-#: high-frequency English character trigrams for the n-gram scorer
-_EN_TRIGRAMS = ('the', 'ing', 'ent', 'ion', 'and')
+    return docs.select('doc_id', *(c.alias(k) for k, c in
+                                   quality_columns('text').items()))
 
 
 def q_lang_id(spark, sf_dir) -> DataFrame:
-    """language-ID heuristic: stopword hits + character-trigram frequency
-    (occurrence counting via length-difference — exact in both engines)"""
+    """language-ID heuristic (pipeline/curate.lang_columns)"""
+    from pyxml_spark.pipeline.curate import lang_columns
     docs = _table(spark, sf_dir, 'documents')
-    padded = F.concat(F.lit(' '), F.col('text'), F.lit(' '))
-    hits = sum((F.instr(padded, f' {w} ') > 0).cast('long')
-               for w in ('the', 'and', 'of', 'to', 'in'))
-    tri = sum(((F.length('text')
-                - F.length(F.replace(F.col('text'), F.lit(g)))) / 3)
-              .cast('long') for g in _EN_TRIGRAMS)
-    d = docs.select('doc_id', hits.alias('en_hits'),
-                    tri.alias('tri_hits'))
-    return d.select('doc_id', 'en_hits', 'tri_hits',
-                    F.when((F.col('en_hits') >= 2)
-                           | (F.col('tri_hits') >= 3), F.lit('en'))
-                    .otherwise(F.lit('unk')).alias('predicted'))
+    cols = lang_columns('text')
+    return docs.select('doc_id', cols['en_hits'].alias('en_hits'),
+                       cols['tri_hits'].alias('tri_hits'),
+                       cols['lang'].alias('predicted'))
 
 
 def q_source_boilerplate_strip(spark, sf_dir) -> DataFrame:
@@ -400,42 +394,10 @@ def q_pii_scrub(spark, sf_dir) -> DataFrame:
 
 def q_gopher_repetition(spark, sf_dir) -> DataFrame:
     """Gopher-style repetition signal: fraction of the document's word
-    bigrams taken by the most frequent bigram (integer x10000).
-
-    Linear plan: the bigram array is staged in a Project, explode_outer'd
-    (so zero-bigram docs keep their row), counted per (doc_id, bigram),
-    then reduced per doc — two hash aggregates with map-side partial
-    combine. The previous row-local form (array_distinct + a nested filter
-    per distinct bigram) rescanned the whole array once per distinct
-    bigram: O(D*N) inside a single row's expression, ~1e10 comparisons on
-    a 100k-token document. tests/test_textops.py pins the flat cost on a
-    50k-token doc and asserts array_distinct is gone from the plan."""
-    docs = _table(spark, sf_dir, 'documents')
-    # stage the split token array in its own Project: element_at inside the
-    # transform lambda would otherwise re-evaluate the split per element
-    # (no common-subexpression elimination across higher-order-function
-    # boundaries) — quadratic bigram *construction* on long documents
-    ws = docs.select('doc_id',
-                     F.split(F.trim('text'), r'\s+').alias('ws'))
-    n = F.size('ws')
-    bg = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat(F.element_at('ws', i), F.lit(' '),
-                           F.element_at('ws', i + 1)))) \
-        .otherwise(F.array().cast('array<string>'))
-    staged = ws.select('doc_id', bg.alias('bg'))
-    exploded = staged.select('doc_id', F.explode_outer('bg').alias('bigram'))
-    cnt = F.when(F.col('bigram').isNull(), F.lit(0)).otherwise(F.col('cnt'))
-    per_doc = (exploded.groupBy('doc_id', 'bigram')
-               .agg(F.count('*').alias('cnt'))
-               .groupBy('doc_id')
-               .agg(F.sum(cnt).cast('long').alias('n_bigrams'),
-                    F.max(cnt).cast('long').alias('top_count')))
-    rep = F.when(F.col('n_bigrams') <= 0, F.lit(0)).otherwise(
-        F.floor(F.col('top_count') * 10000 / F.col('n_bigrams'))) \
-        .cast('long')
-    return per_doc.select('doc_id', 'n_bigrams', 'top_count',
-                          rep.alias('rep_x10k'))
+    bigrams taken by the most frequent bigram (integer x10000;
+    pipeline/curate.repetition_x10k)"""
+    from pyxml_spark.pipeline.curate import repetition_x10k
+    return repetition_x10k(_table(spark, sf_dir, 'documents'))
 
 
 def q_gopher_ngram_fractions(spark, sf_dir) -> DataFrame:
@@ -557,29 +519,18 @@ def q_tfidf_top_terms(spark, sf_dir) -> DataFrame:
 
 
 def q_conversation_assemble(spark, sf_dir) -> DataFrame:
-    """SFT-sample assembly, bounded: documents are packed into
-    (source, pack_id) groups by the same running-token-count window as
-    q_sequence_pack (budget 512 tokens), then each pack's documents are
+    """SFT-sample assembly, bounded: pack_sequences (budget 512) groups
+    documents into (source, pack_id), then each pack's documents are
     concatenated in stable doc_id order (collect_list + array_sort — the
     text never crosses the driver). Every aggregation buffer holds at most
-    one pack (budget plus the boundary doc that starts inside it), so no
-    group grows with corpus size — the previous per-source grouping
-    buffered a whole source's text in one aggregate buffer, an OOM at
-    100x on a popular source. tests/test_textops.py asserts the per-group
-    token bound. The running token count uses the chunked two-phase
-    prefix sum (pipeline/prefix.py) so no single task sorts a whole
-    source."""
-    from pyxml_spark.pipeline.prefix import running_sum_before
-    budget = 512
+    one pack plus its boundary doc, so no group grows with corpus size (a
+    per-source grouping would buffer a whole source's text).
+    tests/test_textops.py asserts the per-group token bound."""
+    from pyxml_spark.pipeline.curate import pack_sequences, token_count
     docs = _table(spark, sf_dir, 'documents')
-    trimmed = F.trim(F.col('text'))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    d = docs.select('doc_id', 'source', 'text', n_tokens.alias('n_tokens'))
-    d = running_sum_before(d, 'source', 'doc_id', 'n_tokens', 'before')
-    d = d.select('doc_id', 'source', 'text', 'n_tokens',
-                 F.floor(F.col('before') / budget).cast('long')
-                 .alias('pack_id'))
+    d = pack_sequences(docs.select('doc_id', 'source', 'text',
+                                   token_count('text').alias('n_tokens')),
+                       512)
     ordered = F.transform(
         F.array_sort(F.collect_list(F.struct('doc_id', 'text'))),
         lambda s: s['text'])
@@ -590,25 +541,13 @@ def q_conversation_assemble(spark, sf_dir) -> DataFrame:
 
 
 def q_sequence_pack(spark, sf_dir) -> DataFrame:
-    """context-window packing: assign each document (in stable doc_id order
-    per source) to a pack by running token count — pack_id = tokens seen
-    before this doc // budget; boundary docs belong to the pack where they
-    start. The cumulative sum is the chunked two-phase prefix scan
-    (pipeline/prefix.py): no driver loop AND no task ever sorts a whole
-    source (a bare per-source window would single-task a popular
-    source's sort at 10^12 rows)."""
-    from pyxml_spark.pipeline.prefix import running_sum_before
-    budget = 512
+    """context-window packing (pipeline/curate.pack_sequences, budget 512
+    tokens): pack_id = tokens seen before this doc in its source // budget"""
+    from pyxml_spark.pipeline.curate import pack_sequences, token_count
     docs = _table(spark, sf_dir, 'documents')
-    trimmed = F.trim(F.col('text'))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    d = docs.select('doc_id', 'source', n_tokens.alias('n_tokens'))
-    d = running_sum_before(d, 'source', 'doc_id', 'n_tokens',
-                           'tokens_before')
-    return d.select('doc_id', 'source', 'n_tokens', 'tokens_before',
-                    F.floor(F.col('tokens_before') / budget).cast('long')
-                    .alias('pack_id'))
+    return pack_sequences(docs.select('doc_id', 'source',
+                                      token_count('text').alias('n_tokens')),
+                          512)
 
 
 def q_fingerprint_shingle(spark, sf_dir) -> DataFrame:
@@ -753,56 +692,14 @@ def q_extract_spans(spark, sf_dir) -> DataFrame:
         .cast('long').alias('span_end'))
 
 
-_ATTR_SCHEMA = StructType([
-    StructField('doc_id', LongType()),
-    StructField('cls', StringType()),
-])
-
-_XFN_SCHEMA = StructType([
-    StructField('doc_id', LongType()),
-    StructField('cls_k', StringType()),
-    StructField('z_upper', StringType()),
-    StructField('z_first', StringType()),
-    StructField('n_b', StringType()),
-    StructField('second_cls', StringType()),
-])
-
 #: the xpath-function battery (each reference-diffed; see q_xpath_functions).
 #: count() needs >= 2 matches for a numeric result (1 match returns True —
 #: reference quirk, verified identical), hence the doc_id%4+2 repeat below
-_XFN_PATHS = ('//p[starts-with(@class, "k")]/@class',
-              '//p[contains(@class, "z")]/upper-case(@class)',
-              '//p[2]/substring(@class, 0, 1)',
-              '//div/count(b)',
-              '//p[2]/@class')
-
-
-def _xpath_fn_batches(batches):
-    from pyxml_spark.engine.html import fromstring
-    from pyxml_spark.engine.xq import compile_path, run_steps
-    progs = [compile_path(p) for p in _XFN_PATHS]  # compiled once per worker
-    for pdf in batches:
-        cols = {name: [] for name in
-                ('cls_k', 'z_upper', 'z_first', 'n_b', 'second_cls')}
-        for payload in pdf['payload']:
-            root = fromstring(payload.encode())
-            for name, prog in zip(cols, progs):
-                hits = run_steps(prog, (root,))
-                cols[name].append(str(hits[0]) if hits else None)
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, **cols})
-
-
-def _attr_batches(batches):
-    from pyxml_spark.engine.html import fromstring
-    from pyxml_spark.engine.xq import compile_path, run_steps
-    prog = compile_path('//p[@class]/@class')
-    for pdf in batches:
-        vals = []
-        for payload in pdf['payload']:
-            root = fromstring(payload.encode())
-            hits = run_steps(prog, (root,))
-            vals.append(hits[0] if hits else None)
-        yield pd.DataFrame({'doc_id': pdf['doc_id'].values, 'cls': vals})
+_XFN_PATHS = {'cls_k': '//p[starts-with(@class, "k")]/@class',
+              'z_upper': '//p[contains(@class, "z")]/upper-case(@class)',
+              'z_first': '//p[2]/substring(@class, 0, 1)',
+              'n_b': '//div/count(b)',
+              'second_cls': '//p[2]/@class'}
 
 
 def q_xpath_attr_extract(spark, sf_dir) -> DataFrame:
@@ -814,7 +711,8 @@ def q_xpath_attr_extract(spark, sf_dir) -> DataFrame:
         (F.col('doc_id') % 7).cast('string'),
         F.lit('">styled</p></div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    return src.mapInPandas(_attr_batches, schema=_ATTR_SCHEMA)
+    return _run_xpaths(src, {'cls': '//p[@class]/@class'}, _first_hit,
+                       'string')
 
 
 _HEX = '0123456789abcdef'
@@ -833,7 +731,7 @@ def q_xpath_functions(spark, sf_dir) -> DataFrame:
         F.repeat(F.lit('<b>x</b>'), (F.col('doc_id') % 4 + 2).cast('int')),
         F.lit('</div>'))
     src = docs.select('doc_id', payload.alias('payload'))
-    return src.mapInPandas(_xpath_fn_batches, schema=_XFN_SCHEMA)
+    return _run_xpaths(src, _XFN_PATHS, _first_hit, 'string')
 
 
 def q_simhash16(spark, sf_dir) -> DataFrame:
@@ -1315,6 +1213,7 @@ def q_bucketed_join(spark, sf_dir) -> DataFrame:
     fact-fact join on the bucket key is Exchange-free. Tables are
     EXTERNAL (explicit path under the staging dir) so the shared session
     catalog entry never owns repo-local warehouse files."""
+    from pyxml_spark.pipeline.curate import token_count
     docs = _table(spark, sf_dir, 'documents')
     tmp = _staging_dir('pyxml_bucketed_')
     spark.sql('DROP TABLE IF EXISTS bj_docs')
@@ -1322,10 +1221,7 @@ def q_bucketed_join(spark, sf_dir) -> DataFrame:
     (docs.select('doc_id', 'source', 'n_chars')
      .write.mode('overwrite').bucketBy(8, 'doc_id').sortBy('doc_id')
      .option('path', f'{tmp}/docs').saveAsTable('bj_docs'))
-    trimmed = F.trim(F.col('text'))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    (docs.select('doc_id', n_tokens.alias('n_tokens'))
+    (docs.select('doc_id', token_count('text').alias('n_tokens'))
      .write.mode('overwrite').bucketBy(8, 'doc_id').sortBy('doc_id')
      .option('path', f'{tmp}/stats').saveAsTable('bj_stats'))
     j = spark.table('bj_docs').join(spark.table('bj_stats'), 'doc_id')
@@ -1446,91 +1342,47 @@ def q_turn_context(spark, sf_dir) -> DataFrame:
 
 def q_curate_pipeline(spark, sf_dir) -> DataFrame:
     """the composed curation job (jobs/curate.py) as ONE driver-checkable
-    row: gates (quality shape + lang + repetition — the exact
-    ``is_quality & lang=='en' & rep_x10k<=REP_MAX_X10K`` predicate the
-    spark-submit job applies, via the same pipeline/curate.py
-    score_documents face) -> decontaminate against the doc_id%50==0 eval
-    slice -> sequence-pack the survivors with the chunked prefix scan.
-    This is the job's chain minus the MinHash dedup stage (separately
-    pinned by dedup_minhash_pairs/dedup_keeper, and its keeper choice is
-    engine-dependent so it would break the closed form). Each stage
-    already has a closed-form oracle; the SQL twin composes them as
-    CTEs, so the driver now pins the STAGE COMPOSITION, not just the
-    stages.
+    row: score_documents + passes_gates -> decontaminate against the
+    doc_id%50==0 eval slice -> pack_sequences. This is the job's chain
+    minus the MinHash dedup stage (pinned by dedup_minhash_pairs/
+    dedup_keeper; its keeper choice is engine-dependent). The SQL twin
+    composes the stages' oracles as CTEs, so the oracle check pins the
+    STAGE COMPOSITION, not just the stages.
 
-    Stage outputs are STAGED TO PARQUET exactly as the job does —
-    composing everything into one lazy plan re-evaluates the gate+rep
-    subtree ~4x (decontaminate references ``gated``, the prefix scan
-    references ``clean`` twice for its broadcast stats), which at 100 TB
-    means scanning the corpus four times instead of once per stage. The
-    stage boundary is the recompute firewall, same reason the job
-    commits gated.parquet."""
-    from pyxml_spark.pipeline.curate import (REP_MAX_X10K, decontaminate,
-                                             score_documents)
-    from pyxml_spark.pipeline.prefix import running_sum_before
+    Stage outputs are STAGED TO PARQUET exactly as the job does — one lazy
+    plan re-evaluates the gate+rep subtree ~4x (decontaminate references
+    ``gated``, the prefix scan references ``clean`` twice for its
+    broadcast stats). The stage boundary is the recompute firewall."""
+    from pyxml_spark.pipeline.curate import (decontaminate, pack_sequences,
+                                             passes_gates, score_documents)
     docs = _table(spark, sf_dir, 'documents')
     corpus = docs.where(F.col('doc_id') % 50 != 0) \
         .select('doc_id', 'source', 'text')
     bench = docs.where(F.col('doc_id') % 50 == 0).select('text')
     tmp = _staging_dir('pyxml_curate_pipe_')
-    scored = score_documents(corpus)
-    (scored.where(F.col('is_quality') & (F.col('lang') == 'en')
-                  & (F.col('rep_x10k') <= REP_MAX_X10K))
-     .write.mode('overwrite').parquet(f'{tmp}/gated'))
+    score_documents(corpus).where(passes_gates()) \
+        .write.mode('overwrite').parquet(f'{tmp}/gated')
     gated = spark.read.parquet(f'{tmp}/gated')
     deco = decontaminate(gated, bench)
     (gated.join(deco.where(~F.col('contaminated')).select('doc_id'),
                 'doc_id')
      .select('doc_id', 'source', 'n_tokens')
      .write.mode('overwrite').parquet(f'{tmp}/clean'))
-    clean = spark.read.parquet(f'{tmp}/clean')
-    d = running_sum_before(clean, 'source', 'doc_id', 'n_tokens',
-                           'tokens_before')
-    return d.select('doc_id', 'source', 'n_tokens', 'tokens_before',
-                    F.floor(F.col('tokens_before') / 512).cast('long')
-                    .alias('pack_id'))
+    return pack_sequences(spark.read.parquet(f'{tmp}/clean'), 512)
 
 
 def q_benchmark_overlap(spark, sf_dir) -> DataFrame:
-    """decontamination: flag documents sharing any exact 8-token n-gram
-    with a benchmark/eval set (GPT-3/Gopher-style n-gram decontamination;
-    the deterministic doc_id % 50 == 0 slice stands in for the eval
-    suite). Scale shape: the benchmark gram set is distinct-small and
-    BROADCASTs into the corpus gram join; the corpus side reduces to
-    distinct (doc, gram-hash) rows — grams travel as 60-bit md5 hashes
-    (deterministic in both engines, collision odds ~n²/2^60), so the
-    distinct/join shuffles move 8-byte keys instead of ~50-char strings.
-    Cost is two hash shuffles, never a corpus x corpus comparison. The
-    token array is staged in a Project (HOF common-subexpression rule),
-    and the gram sequence is guarded with when(n >= K) because Spark's
-    sequence(1, stop) turns descending for stop < 1."""
-    K = 8
+    """decontamination (pipeline/curate.decontaminate) of the corpus
+    against the deterministic doc_id % 50 == 0 slice standing in for the
+    eval suite; benchmark docs themselves are never flagged"""
+    from pyxml_spark.pipeline.curate import decontaminate
     docs = _table(spark, sf_dir, 'documents')
-    ws = docs.where(F.trim('text') != '').select(
-        'doc_id', F.split(F.trim('text'), r'\s+').alias('ws'))
-    n = F.size('ws')
-    grams = F.when(n >= K, F.transform(
-        F.sequence(F.lit(1), n - (K - 1)),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(' ', F.slice('ws', i, K)).cast('binary')),
-            1, 15), 16, 10).cast('long'))) \
-        .otherwise(F.array().cast('array<long>'))
-    staged = ws.select('doc_id', grams.alias('grams'))
-    dg = staged.select('doc_id', F.explode('grams').alias('g')).distinct()
-    # build the benchmark gram set from the benchmark slice only — deriving
-    # it from dg would re-run the full-corpus tokenize+hash+explode a
-    # second time for the broadcast side
-    bench = (staged.where(F.col('doc_id') % 50 == 0)
-             .select(F.explode('grams').alias('g')).distinct())
-    hits = (dg.join(F.broadcast(bench), 'g')
-            .groupBy('doc_id').agg(F.count('*').alias('n')))
-    n_hits = F.coalesce('n', F.lit(0)).cast('long')
-    return (docs.select('doc_id').join(hits, 'doc_id', 'left')
-            .select('doc_id',
-                    n_hits.alias('n_gram_hits'),
-                    (F.col('doc_id') % 50 == 0).alias('is_benchmark'),
-                    ((F.col('doc_id') % 50 != 0) & (n_hits > 0))
-                    .alias('contaminated')))
+    is_bench = F.col('doc_id') % 50 == 0
+    flags = decontaminate(docs, docs.where(is_bench))
+    return flags.select('doc_id', 'n_gram_hits',
+                        is_bench.alias('is_benchmark'),
+                        (~is_bench & F.col('contaminated'))
+                        .alias('contaminated'))
 
 
 def _drain_stream_utc(spark, build, sink_name: str,

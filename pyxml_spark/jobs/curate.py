@@ -97,11 +97,12 @@ def main(argv=None) -> int:
 
     from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.curate import (REP_MAX_X10K, decontaminate,
+                                             pack_sequences, passes_gates,
                                              score_documents)
     from pyxml_spark.pipeline.dedup import (PAIR_WINDOW, candidate_pairs,
                                             dup_components, jaccard_pairs,
                                             minhash_bands, token_sets)
-    from pyxml_spark.pipeline.prefix import running_sum_before
+    from pyxml_spark.pipeline.resume import mark_stage, stage_committed
 
     max_rep = args.max_rep_x10k if args.max_rep_x10k is not None \
         else REP_MAX_X10K
@@ -135,21 +136,8 @@ def main(argv=None) -> int:
                 p.update(mixture={k: weights[k] for k in sorted(weights)})
             return p
 
-        def committed(path: str, stage: str) -> bool:
-            if not (args.resume
-                    and os.path.exists(os.path.join(path, '_SUCCESS'))):
-                return False
-            try:
-                with open(path + '.manifest.json') as f:
-                    return json.load(f) == stage_params(stage)
-            except (OSError, ValueError):
-                return False
-
-        def mark(path: str, stage: str) -> None:
-            with open(path + '.manifest.json', 'w') as f:
-                json.dump(stage_params(stage), f, sort_keys=True)
-
         stages_run = []
+        resume = args.resume
         docs = spark.read.parquet(args.input).select(
             F.col(args.id_col).alias('doc_id'),
             F.col(args.source_col).alias('source'),
@@ -157,13 +145,11 @@ def main(argv=None) -> int:
 
         # stage 1: scores + gates (staged so dedup reuses it on resume)
         gated_path = os.path.join(out_dir, 'gated.parquet')
-        if not committed(gated_path, 'gated'):
+        if not stage_committed(gated_path, stage_params('gated'), resume):
             scored = score_documents(docs)
-            scored = scored.withColumn(
-                'passes', (F.col('is_quality') & (F.col('lang') == 'en')
-                           & (F.col('rep_x10k') <= max_rep)))
+            scored = scored.withColumn('passes', passes_gates(max_rep))
             scored.write.mode('overwrite').parquet(gated_path)
-            mark(gated_path, 'gated')
+            mark_stage(gated_path, stage_params('gated'))
             stages_run.append('gated')
         scored = spark.read.parquet(gated_path)
         agg = scored.agg(
@@ -185,7 +171,7 @@ def main(argv=None) -> int:
         # label init — unstaged it would re-tokenize the corpus per
         # consumer
         keepers_path = os.path.join(out_dir, 'keepers.parquet')
-        if not committed(keepers_path, 'keepers'):
+        if not stage_committed(keepers_path, stage_params('keepers'), resume):
             toks_path = os.path.join(out_dir, 'toks.parquet')
             token_sets(survivors).write.mode('overwrite') \
                 .parquet(toks_path)
@@ -200,7 +186,7 @@ def main(argv=None) -> int:
             dup_components(toks, dups,
                            checkpoint_dir=args.checkpoint_dir) \
                 .write.mode('overwrite').parquet(keepers_path)
-            mark(keepers_path, 'keepers')
+            mark_stage(keepers_path, stage_params('keepers'))
             stages_run.append('keepers')
             if args.checkpoint_dir:
                 # keepers are durable — reclaim the component iteration's
@@ -217,7 +203,7 @@ def main(argv=None) -> int:
 
         # stage 3 + 4: decontaminate (optional) and pack
         curated_path = os.path.join(out_dir, 'curated.parquet')
-        if not committed(curated_path, 'curated'):
+        if not stage_committed(curated_path, stage_params('curated'), resume):
             kept = deduped
             if args.benchmark:
                 bench = spark.read.parquet(args.benchmark)
@@ -228,15 +214,10 @@ def main(argv=None) -> int:
                 kept = (kept.join(flags, 'doc_id')
                         .where(~F.col('contaminated'))
                         .drop('n_gram_hits', 'contaminated'))
-            packed = running_sum_before(kept, 'source', 'doc_id',
-                                        'n_tokens', 'tokens_before')
-            packed = packed.withColumn(
-                'pack_id', F.floor(F.col('tokens_before')
-                                   / args.pack_budget).cast('long'))
-            packed.select('doc_id', 'source', 'text', 'n_tokens',
-                          'pack_id') \
+            pack_sequences(kept, args.pack_budget) \
+                .select('doc_id', 'source', 'text', 'n_tokens', 'pack_id') \
                 .write.mode('overwrite').parquet(curated_path)
-            mark(curated_path, 'curated')
+            mark_stage(curated_path, stage_params('curated'))
             stages_run.append('curated')
         curated = spark.read.parquet(curated_path)
         n_curated = curated.count()
@@ -253,11 +234,11 @@ def main(argv=None) -> int:
             from pyxml_spark.pipeline.curate import (mixture_copies,
                                                      source_weight_cols)
             mixed_path = os.path.join(out_dir, 'mixed.parquet')
-            if not committed(mixed_path, 'mixed'):
+            if not stage_committed(mixed_path, stage_params('mixed'), resume):
                 whole, frac16 = source_weight_cols(weights)
                 mixture_copies(curated, whole, frac16) \
                     .write.mode('overwrite').parquet(mixed_path)
-                mark(mixed_path, 'mixed')
+                mark_stage(mixed_path, stage_params('mixed'))
                 stages_run.append('mixed')
             metrics['n_mixed'] = spark.read.parquet(mixed_path).count()
             metrics['mixed_path'] = mixed_path

@@ -66,6 +66,7 @@ def main(argv=None) -> int:
                                             PAIR_WINDOW, candidate_pairs,
                                             dup_components, jaccard_pairs,
                                             minhash_bands, token_sets)
+    from pyxml_spark.pipeline.resume import mark_stage, stage_committed
     from pyspark.sql import functions as F
 
     spark = build_session(args.cpus, app='pyxml-spark-dedup')
@@ -91,33 +92,17 @@ def main(argv=None) -> int:
                          dup_threshold_x10k=args.dup_threshold_x10k)
             return p
 
-        def manifest_path(path: str) -> str:
-            return path + '.manifest.json'
-
-        def committed(path: str, stage: str) -> bool:
-            if not (args.resume
-                    and os.path.exists(os.path.join(path, '_SUCCESS'))):
-                return False
-            try:
-                with open(manifest_path(path)) as f:
-                    return json.load(f) == stage_params(stage)
-            except (OSError, ValueError):
-                return False
-
-        def mark(path: str, stage: str) -> None:
-            with open(manifest_path(path), 'w') as f:
-                json.dump(stage_params(stage), f, sort_keys=True)
-
         stages_run = []
+        resume = args.resume
 
         # stage 1: token sets (staged so later stages and restarts reuse
         # the one-md5-per-token pass instead of recomputing it)
         toks_path = os.path.join(out_dir, 'toks.parquet')
-        if not committed(toks_path, 'toks'):
+        if not stage_committed(toks_path, stage_params('toks'), resume):
             token_sets(spark.read.parquet(args.input),
                        text_col=args.text_col, id_col=args.id_col) \
                 .write.mode('overwrite').parquet(toks_path)
-            mark(toks_path, 'toks')
+            mark_stage(toks_path, stage_params('toks'))
             stages_run.append('toks')
         toks = spark.read.parquet(toks_path)
 
@@ -126,32 +111,32 @@ def main(argv=None) -> int:
         # chain); an unstaged minhash_bands would re-run the expensive
         # one-md5-per-token 64-perm signature pass once per branch
         bands_path = os.path.join(out_dir, 'bands.parquet')
-        if not committed(bands_path, 'bands'):
+        if not stage_committed(bands_path, stage_params('bands'), resume):
             minhash_bands(toks).write.mode('overwrite').parquet(bands_path)
-            mark(bands_path, 'bands')
+            mark_stage(bands_path, stage_params('bands'))
             stages_run.append('bands')
 
         # stage 3: candidate pairs + exact-jaccard verification
         pairs_path = os.path.join(out_dir, 'dup_pairs.parquet')
-        if not committed(pairs_path, 'pairs'):
+        if not stage_committed(pairs_path, stage_params('pairs'), resume):
             cands = candidate_pairs(
                 spark.read.parquet(bands_path),
                 pair_window=args.pair_window or PAIR_WINDOW)
             jaccard_pairs(toks, cands,
                           dup_threshold_x10k=args.dup_threshold_x10k) \
                 .write.mode('overwrite').parquet(pairs_path)
-            mark(pairs_path, 'pairs')
+            mark_stage(pairs_path, stage_params('pairs'))
             stages_run.append('pairs')
 
         # stage 4: connected-component keepers
         keepers_path = os.path.join(out_dir, 'keepers.parquet')
-        if not committed(keepers_path, 'keepers'):
+        if not stage_committed(keepers_path, stage_params('keepers'), resume):
             dups = (spark.read.parquet(pairs_path)
                     .where(F.col('is_dup')).select('doc_a', 'doc_b'))
             dup_components(toks, dups,
                            checkpoint_dir=args.checkpoint_dir) \
                 .write.mode('overwrite').parquet(keepers_path)
-            mark(keepers_path, 'keepers')
+            mark_stage(keepers_path, stage_params('keepers'))
             stages_run.append('keepers')
 
         kept = spark.read.parquet(keepers_path)

@@ -1,44 +1,87 @@
-"""Corpus curation: the gate/score operators a training-data pipeline
-chains in front of packing.
+"""Corpus curation: the gate/score/pack operators a training-data
+pipeline runs, each defined once here.
 
-Library faces of the oracle-checked contract queries (definitions mirror
-__spark_entry__ exactly — same thresholds, same plan shapes — so the
-driver contract keeps pinning these semantics while jobs compose them):
-
-* :func:`score_documents` — quality gate (token/char-shape bounds,
-  `quality_score`), language id (stopword + trigram heuristic,
-  `lang_id`), Gopher-style top-bigram repetition (`gopher_repetition`'s
-  linear explode + two-hash-aggregate plan).
-* :func:`decontaminate` — 8-token-gram overlap against a benchmark/eval
-  corpus (`benchmark_overlap`'s shape: grams travel as 60-bit md5
-  hashes, the benchmark side is distinct-small and broadcasts).
-
-jobs/curate.py chains these with MinHash dedup (pipeline/dedup.py) and
-sequence packing (pipeline/prefix.py) into one spark-submit run.
+The oracle-checked contract rows in __spark_entry__ and jobs/curate.py
+call these functions, so the contract's oracle checks pin exactly the
+code the job runs: column builders (:func:`token_count`,
+:func:`quality_columns`, :func:`lang_columns`), :func:`repetition_x10k`,
+:func:`score_documents` with its gate :func:`passes_gates`,
+:func:`decontaminate`, :func:`pack_sequences` and the mixture sampler
+(:func:`mixture_copies`).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = ['QUALITY_MIN_TOKENS', 'QUALITY_MAX_TOKENS', 'REP_MAX_X10K',
-           'score_documents', 'repetition_x10k', 'decontaminate',
-           'mixture_copies', 'source_weight_cols']
+           'token_count', 'quality_columns', 'lang_columns',
+           'score_documents', 'repetition_x10k', 'passes_gates',
+           'decontaminate', 'pack_sequences', 'mixture_copies',
+           'source_weight_cols']
 
 QUALITY_MIN_TOKENS = 5
 QUALITY_MAX_TOKENS = 500
 #: default gate: drop docs whose top bigram takes > 20% of all bigrams
 REP_MAX_X10K = 2000
 
-#: shared with __spark_entry__.q_lang_id (same stopwords / trigrams)
 _EN_STOPWORDS = ('the', 'and', 'of', 'to', 'in')
+#: high-frequency English character trigrams for the n-gram scorer
 _EN_TRIGRAMS = ('the', 'ing', 'ent', 'ion', 'and')
+
+
+def token_count(text_col: str = 'text') -> Column:
+    """whitespace token count (long): 0 for blank text, else the number
+    of whitespace-separated tokens of the trimmed text"""
+    trimmed = F.trim(F.col(text_col))
+    return F.when(trimmed == '', F.lit(0)).otherwise(
+        F.size(F.split(trimmed, r'\s+'))).cast('long')
+
+
+def quality_columns(text_col: str = 'text') -> dict:
+    """{n_tokens, chars_ns, is_quality}: length/word-shape quality gate
+    with integer-only math (token bounds, 3..12 non-space chars/token)"""
+    n_tokens = token_count(text_col)
+    chars_ns = F.length(F.regexp_replace(text_col, r'\s+', '')).cast('long')
+    return {'n_tokens': n_tokens, 'chars_ns': chars_ns,
+            'is_quality': ((n_tokens >= QUALITY_MIN_TOKENS)
+                           & (n_tokens <= QUALITY_MAX_TOKENS)
+                           & (chars_ns >= 3 * n_tokens)
+                           & (chars_ns <= 12 * n_tokens))}
+
+
+def lang_columns(text_col: str = 'text') -> dict:
+    """{en_hits, tri_hits, lang}: language-ID heuristic from stopword hits
+    plus character-trigram frequency (occurrences counted via length
+    difference — exact in both engines)"""
+    padded = F.concat(F.lit(' '), F.col(text_col), F.lit(' '))
+    en_hits = sum((F.instr(padded, f' {w} ') > 0).cast('long')
+                  for w in _EN_STOPWORDS)
+    tri_hits = sum(((F.length(text_col)
+                     - F.length(F.replace(F.col(text_col), F.lit(g)))) / 3)
+                   .cast('long') for g in _EN_TRIGRAMS)
+    return {'en_hits': en_hits, 'tri_hits': tri_hits,
+            'lang': F.when((en_hits >= 2) | (tri_hits >= 3),
+                           F.lit('en')).otherwise(F.lit('unk'))}
 
 
 def repetition_x10k(df: DataFrame, id_col: str = 'doc_id',
                     text_col: str = 'text') -> DataFrame:
-    """(id, rep_x10k): top-bigram fraction x10000, the linear plan of
-    q_gopher_repetition — staged token array (HOF CSE rule), explode_outer
-    (zero-bigram docs keep a row), two map-side-combined aggregates."""
+    """(doc_id, n_bigrams, top_count, rep_x10k): Gopher-style repetition
+    signal — the fraction of the document's word bigrams taken by the most
+    frequent bigram, as an integer x10000.
+
+    Linear plan: the bigram array is staged in a Project, explode_outer'd
+    (so zero-bigram docs keep their row), counted per (doc_id, bigram),
+    then reduced per doc — two hash aggregates with map-side partial
+    combine. A row-local form (array_distinct + a nested filter per
+    distinct bigram) rescans the whole array once per distinct bigram:
+    O(D*N) inside a single row's expression, ~1e10 comparisons on a
+    100k-token document. tests/test_textops.py pins the flat cost on a
+    50k-token doc and asserts array_distinct is absent from the plan."""
+    # stage the split token array in its own Project: element_at inside the
+    # transform lambda would otherwise re-evaluate the split per element
+    # (no common-subexpression elimination across higher-order-function
+    # boundaries) — quadratic bigram *construction* on long documents
     ws = df.select(F.col(id_col).alias('doc_id'),
                    F.split(F.trim(text_col), r'\s+').alias('ws'))
     n = F.size('ws')
@@ -50,17 +93,17 @@ def repetition_x10k(df: DataFrame, id_col: str = 'doc_id',
     staged = ws.select('doc_id', bg.alias('bg'))
     exploded = staged.select('doc_id',
                              F.explode_outer('bg').alias('bigram'))
-    per_doc = (exploded.groupBy('doc_id', 'bigram')
-               .agg(F.count('*').alias('cnt')))
     cnt = F.when(F.col('bigram').isNull(), F.lit(0)) \
         .otherwise(F.col('cnt'))
-    agg = per_doc.groupBy('doc_id').agg(
-        F.sum(F.when(F.col('bigram').isNull(), F.lit(0))
-              .otherwise(F.col('cnt'))).alias('n_bigrams'),
-        F.max(cnt).alias('top_count'))
+    agg = (exploded.groupBy('doc_id', 'bigram')
+           .agg(F.count('*').alias('cnt'))
+           .groupBy('doc_id')
+           .agg(F.sum(cnt).cast('long').alias('n_bigrams'),
+                F.max(cnt).cast('long').alias('top_count')))
     rep = F.when(F.col('n_bigrams') <= 0, F.lit(0)).otherwise(
         F.floor(F.col('top_count') * 10000 / F.col('n_bigrams')))
-    return agg.select('doc_id', rep.cast('long').alias('rep_x10k'))
+    return agg.select('doc_id', 'n_bigrams', 'top_count',
+                      rep.cast('long').alias('rep_x10k'))
 
 
 def score_documents(df: DataFrame, id_col: str = 'doc_id',
@@ -69,31 +112,19 @@ def score_documents(df: DataFrame, id_col: str = 'doc_id',
 
     One projection pass for the shape/lang columns plus the repetition
     aggregate joined back on the id — no python, no windows."""
-    trimmed = F.trim(F.col(text_col))
-    n_tokens = F.when(trimmed == '', F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r'\s+'))).cast('long')
-    chars_ns = F.length(
-        F.regexp_replace(text_col, r'\s+', '')).cast('long')
-    padded = F.concat(F.lit(' '), F.col(text_col), F.lit(' '))
-    en_hits = sum((F.instr(padded, f' {w} ') > 0).cast('long')
-                  for w in _EN_STOPWORDS)
-    tri = sum(((F.length(text_col)
-                - F.length(F.replace(F.col(text_col), F.lit(g)))) / 3)
-              .cast('long') for g in _EN_TRIGRAMS)
-    scored = df.withColumns({
-        'n_tokens': n_tokens,
-        'chars_ns': chars_ns,
-        'is_quality': ((n_tokens >= QUALITY_MIN_TOKENS)
-                       & (n_tokens <= QUALITY_MAX_TOKENS)
-                       & (chars_ns >= 3 * n_tokens)
-                       & (chars_ns <= 12 * n_tokens)),
-        'lang': F.when((en_hits >= 2) | (tri >= 3),
-                       F.lit('en')).otherwise(F.lit('unk')),
-    })
+    scored = df.withColumns({**quality_columns(text_col),
+                             'lang': lang_columns(text_col)['lang']})
     rep = repetition_x10k(df, id_col, text_col) \
-        .withColumnRenamed('doc_id', id_col)
+        .select(F.col('doc_id').alias(id_col), 'rep_x10k')
     return scored.join(rep, id_col, 'left') \
         .fillna({'rep_x10k': 0})
+
+
+def passes_gates(max_rep_x10k: int = REP_MAX_X10K) -> Column:
+    """the curation gate over :func:`score_documents` output: quality
+    shape, English, and top-bigram repetition at most ``max_rep_x10k``"""
+    return (F.col('is_quality') & (F.col('lang') == 'en')
+            & (F.col('rep_x10k') <= max_rep_x10k))
 
 
 def decontaminate(df: DataFrame, bench_df: DataFrame,
@@ -101,9 +132,21 @@ def decontaminate(df: DataFrame, bench_df: DataFrame,
                   bench_text_col: str = 'text', k: int = 8,
                   broadcast: bool = True) -> DataFrame:
     """(id, n_gram_hits, contaminated): docs sharing any exact k-token
-    gram with the benchmark corpus. Grams are 60-bit md5 hashes; the
-    benchmark gram set broadcasts into the corpus gram join
-    (q_benchmark_overlap's shape — never corpus x corpus).
+    gram with the benchmark corpus (GPT-3/Gopher-style n-gram
+    decontamination).
+
+    Scale shape: the benchmark gram set is distinct-small and broadcasts
+    into the corpus gram join; the corpus side reduces to distinct
+    (doc, gram-hash) rows. Grams travel as 60-bit md5 hashes
+    (deterministic in both engines, collision odds ~n²/2^60), so the
+    distinct/join shuffles move 8-byte keys instead of ~50-char strings.
+    Cost is two hash shuffles, never a corpus x corpus comparison. The
+    token array is staged in a Project (HOF common-subexpression rule),
+    and the gram sequence is guarded with when(n >= k) because Spark's
+    sequence(1, stop) turns descending for stop < 1. The benchmark gram
+    set is built from ``bench_df`` alone — deriving it from the corpus
+    grams would re-run the full-corpus tokenize+hash+explode for the
+    broadcast side.
 
     SMALL-SIDE CONTRACT (same style as pipeline/temporal.py): ``bench_df``
     must be an eval/benchmark suite — thousands to low millions of
@@ -142,6 +185,23 @@ def decontaminate(df: DataFrame, bench_df: DataFrame,
         F.coalesce('n_gram_hits', F.lit(0)).cast('long')
         .alias('n_gram_hits'),
         (F.coalesce('n_gram_hits', F.lit(0)) > 0).alias('contaminated'))
+
+
+def pack_sequences(df: DataFrame, budget: int) -> DataFrame:
+    """context-window packing: ``df`` (doc_id, source, n_tokens, ...)
+    plus ``tokens_before`` (tokens of the same source's lower doc_ids) and
+    ``pack_id = tokens_before // budget`` — docs in stable doc_id order
+    per source, a boundary doc belongs to the pack where it starts.
+
+    The cumulative sum is the chunked two-phase prefix scan
+    (pipeline/prefix.py): no driver loop AND no task ever sorts a whole
+    source (a bare per-source window would single-task a popular source's
+    sort at 10^12 rows)."""
+    from .prefix import running_sum_before
+    d = running_sum_before(df, 'source', 'doc_id', 'n_tokens',
+                           'tokens_before')
+    return d.withColumn(
+        'pack_id', F.floor(F.col('tokens_before') / budget).cast('long'))
 
 
 def mixture_copies(df: DataFrame, whole, frac16,

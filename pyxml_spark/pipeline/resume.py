@@ -14,10 +14,13 @@ protocol (SURVEY.md §4 custom-physical-work #3):
    missing from the manifest is redone, and redo is idempotent.
 
 ``max_buckets`` limits work per invocation (used by the kill/resume test and
-useful operationally for incremental backfills).
+useful operationally for incremental backfills). Staged batch jobs use the
+coarser per-stage rule of :func:`stage_committed` / :func:`mark_stage`.
 """
 from __future__ import annotations
 
+import json
+import os
 import time
 import uuid
 from typing import Optional
@@ -29,7 +32,26 @@ from .heuristics import ExtractConfig
 from .schema import MANIFEST_SCHEMA
 from .skew import with_bucket
 
-__all__ = ['completed_buckets', 'run_with_resume']
+__all__ = ['completed_buckets', 'mark_stage', 'run_with_resume',
+           'stage_committed']
+
+
+def stage_committed(path: str, params: dict, resume: bool) -> bool:
+    """the stage output at ``path`` is reusable: ``resume`` is on, Spark
+    committed it (``_SUCCESS``) and its manifest equals ``params``"""
+    if not (resume and os.path.exists(os.path.join(path, '_SUCCESS'))):
+        return False
+    try:
+        with open(path + '.manifest.json') as f:
+            return json.load(f) == params
+    except (OSError, ValueError):
+        return False
+
+
+def mark_stage(path: str, params: dict) -> None:
+    """record ``params`` as the manifest of the committed stage at ``path``"""
+    with open(path + '.manifest.json', 'w') as f:
+        json.dump(params, f, sort_keys=True)
 
 
 def completed_buckets(spark: SparkSession, manifest_path: str) -> DataFrame:

@@ -50,6 +50,51 @@ def normalize(cols, rows):
     return named, data
 
 
+def duckdb_views(sf_dir: str):
+    """a DuckDB connection with one view per sf table present"""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(sf_dir, f'{t}.parquet')
+        if os.path.exists(path):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def check_query(spark, con, sf_dir: str, name: str):
+    """run contract row ``name`` on Spark and its oracle on ``con``;
+    returns (status, report): status is 'OK', 'FAIL' or 'rows-only' (no
+    oracle), report the lines the script prints"""
+    import __spark_entry__ as entry
+    sql = entry.oracle_sql().get(name)
+    try:
+        sdf = entry.queries()[name](spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as exc:  # noqa: BLE001
+        return 'FAIL', f'FAIL {name}: spark error: {exc}'
+    if sql is None:
+        return 'rows-only', f'rows-only {name}: {len(srows)} rows'
+    try:
+        rel = con.sql(sql)
+        dcols = list(rel.columns)
+        drows = [tuple(r) for r in rel.fetchall()]
+    except Exception as exc:  # noqa: BLE001
+        return 'FAIL', f'FAIL {name}: duckdb error: {exc}'
+    sn, sd = normalize(scols, srows)
+    dn, dd = normalize(dcols, drows)
+    if sn != dn:
+        return 'FAIL', f'FAIL {name}: columns {sn} != {dn}'
+    if len(sd) != len(dd):
+        return 'FAIL', f'FAIL {name}: rows {len(sd)} != {len(dd)}'
+    if sd != dd:
+        diff = [i for i, (a, b) in enumerate(zip(sd, dd)) if a != b][:3]
+        lines = [f'FAIL {name}: values differ at rows {diff}']
+        for i in diff[:2]:
+            lines += [f'   spark: {sd[i]}', f'   duck : {dd[i]}']
+        return 'FAIL', '\n'.join(lines)
+    return 'OK', f'OK   {name}: {len(sd)} rows'
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     only = set(sys.argv[2:])
@@ -64,55 +109,14 @@ def main():
              .config('spark.ui.enabled', 'false')
              .getOrCreate())
 
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f'{t}.parquet')
-        if os.path.exists(path):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-
-    queries = entry.queries()
-    oracles = entry.oracle_sql()
+    con = duckdb_views(sf_dir)
     failures = 0
-    for name, fn in queries.items():
+    for name in entry.queries():
         if only and name not in only:
             continue
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # noqa: BLE001
-            print(f'FAIL {name}: spark error: {exc}')
-            failures += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f'rows-only {name}: {len(srows)} rows')
-            continue
-        try:
-            rel = con.sql(sql)
-            dcols = [c for c in rel.columns]
-            drows = [tuple(r) for r in rel.fetchall()]
-        except Exception as exc:  # noqa: BLE001
-            print(f'FAIL {name}: duckdb error: {exc}')
-            failures += 1
-            continue
-        sn, sd = normalize(scols, srows)
-        dn, dd = normalize(dcols, drows)
-        if sn != dn:
-            print(f'FAIL {name}: columns {sn} != {dn}')
-            failures += 1
-        elif len(sd) != len(dd):
-            print(f'FAIL {name}: rows {len(sd)} != {len(dd)}')
-            failures += 1
-        elif sd != dd:
-            diff = [i for i, (a, b) in enumerate(zip(sd, dd)) if a != b][:3]
-            print(f'FAIL {name}: values differ at rows {diff}')
-            for i in diff[:2]:
-                print(f'   spark: {sd[i]}')
-                print(f'   duck : {dd[i]}')
-            failures += 1
-        else:
-            print(f'OK   {name}: {len(sd)} rows')
+        status, report = check_query(spark, con, sf_dir, name)
+        print(report)
+        failures += status == 'FAIL'
     # smoke entry()
     if not only:
         n = entry.entry(spark).count()

@@ -1,9 +1,13 @@
-"""Shared test utilities: reference import + tree comparison helpers."""
+"""Shared test utilities: reference import, tree comparison helpers and
+the one SparkSession every Spark test runs on."""
 from __future__ import annotations
 
+import io
+import json
 import os
 import random
 import sys
+from contextlib import contextmanager, redirect_stdout
 
 import pytest
 
@@ -26,6 +30,59 @@ def has_reference() -> bool:
 
 requires_reference = pytest.mark.skipif(
     not has_reference(), reason='reference pyxml not importable')
+
+
+@pytest.fixture(scope='session')
+def spark():
+    """the shared session: local[4], 4 shuffle partitions, UI off. A module
+    that needs other runtime confs sets them with ``spark.conf.set`` inside
+    its own fixture, wrapped in :func:`restored_conf`."""
+    pytest.importorskip('pyspark')
+    from pyspark.sql import SparkSession
+    s = (SparkSession.builder.master('local[4]')
+         .appName('pyxml-spark-tests')
+         .config('spark.sql.shuffle.partitions', '4')
+         .config('spark.ui.enabled', 'false')
+         .getOrCreate())
+    yield s
+    s.stop()
+
+
+@contextmanager
+def restored_conf(spark):
+    """undo every runtime conf change made inside the block (static and
+    core confs a session builder records cannot change, so they stay)"""
+    before = spark.conf.getAll
+    try:
+        yield spark
+    finally:
+        after = spark.conf.getAll
+        for key in after.keys() - before.keys():
+            if spark.conf.isModifiable(key):
+                spark.conf.unset(key)
+        for key, value in before.items():
+            if after.get(key) != value and spark.conf.isModifiable(key):
+                spark.conf.set(key, value)
+
+
+@pytest.fixture
+def run_job(spark, monkeypatch):
+    """``run_job(main, argv) -> (exit code, last stdout JSON line)`` for a
+    ``jobs.*.main`` on the shared session. Jobs stop the session they are
+    handed, so ``SparkSession.stop`` is a no-op for the call; the runtime
+    confs the job's session builder applies are restored afterwards."""
+    from pyspark.sql import SparkSession
+
+    def run(main, argv):
+        buf = io.StringIO()
+        with restored_conf(spark), monkeypatch.context() as m, \
+                redirect_stdout(buf):
+            m.setattr(SparkSession, 'stop', lambda self: None)
+            rc = main(argv)
+        lines = buf.getvalue().strip().splitlines()
+        return rc, (json.loads(lines[-1]) if lines else None)
+    return run
+
 
 # exception-name equivalence between our engine and the reference
 ERROR_NAME_MAP = {

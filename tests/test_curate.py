@@ -6,18 +6,6 @@ import pytest
 pyspark = pytest.importorskip('pyspark')
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-curate-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
 def test_score_documents_semantics(spark):
     """flags match an independent python model on hand-built docs"""
     from pyxml_spark.pipeline.curate import score_documents
@@ -63,22 +51,23 @@ def test_decontaminate_planted_overlap(spark):
         {tuple(r) for r in got.values()}
 
 
-def test_curate_job_end_to_end(tmp_path):
-    """job smoke at sf0.001: metrics add up, output passes every gate,
-    resume skips all stages, benchmark decontamination removes docs"""
+def _curate_runner(run_job, out):
+    from __spark_entry__ import DEFAULT_SF_DIR
     from pyxml_spark.jobs.curate import main
-    import io
-    from contextlib import redirect_stdout
-
-    out = str(tmp_path / 'curated')
 
     def run(extra):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            assert main(['--input',
-                         '/root/testdata/sf0.001/documents.parquet',
-                         '--output', out, '--cpus', '4'] + extra) == 0
-        return json.loads(buf.getvalue().strip().splitlines()[-1])
+        rc, metrics = run_job(main, [
+            '--input', f'{DEFAULT_SF_DIR}/documents.parquet',
+            '--output', out, '--cpus', '4'] + extra)
+        assert rc == 0
+        return metrics
+    return run
+
+
+def test_curate_job_end_to_end(tmp_path, run_job):
+    """job smoke at sf0.001: metrics add up, output passes every gate,
+    resume skips all stages, benchmark decontamination removes docs"""
+    run = _curate_runner(run_job, str(tmp_path / 'curated'))
 
     m = run([])
     assert m['n_input'] == 500
@@ -105,25 +94,15 @@ def test_curate_job_end_to_end(tmp_path):
     assert m3['n_curated'] < m['n_curated']
 
 
-def test_curate_job_mixture_stage(tmp_path):
+def test_curate_job_mixture_stage(tmp_path, run_job):
     """--mixture adds a deterministic weighted-sampling stage on top of
     the curated output: totals match the closed form per doc, weight-0
     sources vanish, and resume re-runs only the mixed stage."""
     import hashlib
     import pyarrow.parquet as pq
-    from pyxml_spark.jobs.curate import main
-    import io
-    from contextlib import redirect_stdout
 
     out = str(tmp_path / 'curated')
-
-    def run(extra):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            assert main(['--input',
-                         '/root/testdata/sf0.001/documents.parquet',
-                         '--output', out, '--cpus', '4'] + extra) == 0
-        return json.loads(buf.getvalue().strip().splitlines()[-1])
+    run = _curate_runner(run_job, out)
 
     m = run([])
     weights = {'src0': 0.0, 'src1': 2.5}

@@ -15,18 +15,6 @@ SF_DIR = '/root/testdata/sf0.001'
 
 
 @pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-dedup-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
-@pytest.fixture(scope='module')
 def corpus(spark):
     docs = spark.read.parquet(f'{SF_DIR}/documents.parquet')
     rows = docs.select('doc_id', 'text').collect()
@@ -382,33 +370,20 @@ def test_incremental_pairs_hot_bucket_caps_fanout(spark):
     assert 1 in partners  # min of its salt sub-bucket in every band
 
 
-def test_dedup_job_resume_manifest_invalidates_on_param_change(tmp_path):
+def test_dedup_job_resume_manifest_invalidates_on_param_change(tmp_path,
+                                                                run_job):
     """ADVICE r3: --resume only honors a stage's _SUCCESS when its params
     manifest matches the current invocation — changing --dup-threshold-x10k
-    must re-run pairs+keepers but reuse toks+bands.
-
-    KEEP THIS TEST LAST IN THE MODULE: jobs.dedup.main stops its own
-    SparkSession, which kills the module fixture's shared SparkContext —
-    any fixture-using test placed after it fails with a dead-JVM
-    AttributeError (hit once when a test was appended at EOF)."""
-    import json
+    must re-run pairs+keepers but reuse toks+bands."""
     from pyxml_spark.jobs.dedup import main
     out = str(tmp_path / 'dedup_out')
     base = ['--input', '/root/testdata/sf0.001/documents.parquet',
             '--output', out, '--cpus', '4']
-    assert main(base) == 0
+    assert run_job(main, base)[0] == 0
     # identical resume: nothing re-runs
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assert main(base + ['--resume']) == 0
-    rerun = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert rerun['stages_run'] == []
+    rc, rerun = run_job(main, base + ['--resume'])
+    assert rc == 0 and rerun['stages_run'] == []
     # changed threshold: toks/bands reused, pairs/keepers recomputed
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        assert main(base + ['--resume', '--dup-threshold-x10k',
-                            '9000']) == 0
-    changed = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert changed['stages_run'] == ['pairs', 'keepers']
+    rc, changed = run_job(main, base + ['--resume',
+                                        '--dup-threshold-x10k', '9000'])
+    assert rc == 0 and changed['stages_run'] == ['pairs', 'keepers']

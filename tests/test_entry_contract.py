@@ -1,11 +1,21 @@
-"""Shape checks for the driver contract (full Spark-vs-DuckDB comparison
-lives in scripts/check_contract.py, run separately because it needs a JVM)."""
+"""Driver-contract checks: the shape of queries()/oracle_sql(), plus
+Spark-vs-DuckDB value parity at sf0.001 for the rows that call the curation
+library (scripts/check_contract.py runs the same comparison over every row
+at any scale)."""
 import os
 import sys
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
+
+#: the contract rows built from pipeline/curate.py
+CURATION_ROWS = ('token_count', 'quality_score', 'lang_id',
+                 'gopher_repetition', 'sequence_pack',
+                 'conversation_assemble', 'curate_pipeline',
+                 'bucketed_join', 'benchmark_overlap')
 
 
 def test_queries_have_oracles():
@@ -36,3 +46,18 @@ def test_oracle_sql_is_select():
     for name, sql in entry.oracle_sql().items():
         head = sql.strip().split(None, 1)[0].upper()
         assert head in ('SELECT', 'WITH'), name
+
+
+@pytest.fixture(scope='module')
+def duck():
+    from scripts.check_contract import duckdb_views
+    con = duckdb_views(entry.DEFAULT_SF_DIR)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize('name', CURATION_ROWS)
+def test_curation_row_matches_oracle(spark, duck, name):
+    from scripts.check_contract import check_query
+    status, report = check_query(spark, duck, entry.DEFAULT_SF_DIR, name)
+    assert status == 'OK', report

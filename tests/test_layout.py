@@ -40,17 +40,6 @@ def test_malformed_raises():
         fake_pdf_parse(good + b'trailing')
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('layout-test')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-
-
 def test_spark_layout_extraction(spark):
     import pandas as pd
     texts = {0: 'hello world ' * 25, 1: '', 2: 'short', 3: 'é' * 300}

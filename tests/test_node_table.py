@@ -62,18 +62,15 @@ def test_relational_equals_engine_xpath():
         assert rel == engine
 
 
-def test_spark_node_table(spark_session=None):
-    from pyspark.sql import SparkSession, functions as F
+def test_spark_node_table(spark):
+    from pyspark.sql import functions as F
     from pyxml_spark.pipeline.nodes import explode_documents
-    spark = (SparkSession.builder.master('local[4]')
-             .config('spark.ui.enabled', 'false')
-             .config('spark.sql.shuffle.partitions', '4').getOrCreate())
+    df = spark.createDataFrame(
+        [(1, '<div><p class="a">x</p><p>y</p></div>'),
+         (2, '<ul><li>1</li><li>2</li><li>3</li></ul>')],
+        'doc_id long, payload string')
+    nodes = explode_documents(df).cache()
     try:
-        df = spark.createDataFrame(
-            [(1, '<div><p class="a">x</p><p>y</p></div>'),
-             (2, '<ul><li>1</li><li>2</li><li>3</li></ul>')],
-            'doc_id long, payload string')
-        nodes = explode_documents(df).cache()
         got = {(r.doc_id, r.tag): r for r in nodes.collect()
                if r.tag in ('div', 'ul')}
         assert got[(1, 'div')].depth == 0
@@ -90,4 +87,4 @@ def test_spark_node_table(spark_session=None):
                 .where((F.col('a.tag') == 'div') & (F.col('b.tag') == 'p')))
         assert desc.count() == 2
     finally:
-        spark.stop()
+        nodes.unpersist()

@@ -16,18 +16,6 @@ pyspark = pytest.importorskip('pyspark')
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-olap-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
 def test_pivot_missing_cells_are_dense_zero(spark):
     """a user with no events of some type gets 0/0.0, not NULL — the
     wide table is dense exactly like the CASE WHEN oracle."""

@@ -8,22 +8,18 @@ import os
 
 import pytest
 
-from tests.conftest import has_reference
+from tests.conftest import has_reference, restored_conf
 
 pyspark = pytest.importorskip('pyspark')
 
 
 @pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-tests')
-         .config('spark.sql.shuffle.partitions', '8')
-         .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
+def spark(spark):
+    """the shared session with 8 shuffle partitions and Arrow enabled"""
+    with restored_conf(spark):
+        spark.conf.set('spark.sql.shuffle.partitions', '8')
+        spark.conf.set('spark.sql.execution.arrow.pyspark.enabled', 'true')
+        yield spark
 
 
 @pytest.fixture(scope='module')

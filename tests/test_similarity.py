@@ -5,18 +5,6 @@ pyspark = pytest.importorskip('pyspark')
 
 
 @pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-sim-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
-@pytest.fixture(scope='module')
 def vectors(spark):
     from pyxml_spark.pipeline.similarity import as_double_vec
     emb = spark.read.parquet('/root/testdata/sf0.01/embeddings.parquet')

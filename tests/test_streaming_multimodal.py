@@ -6,18 +6,6 @@ import pytest
 pyspark = pytest.importorskip('pyspark')
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-stream-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
 def test_streaming_extraction_matches_batch(spark, tmp_path):
     from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, extract_turns,
                                       gen_transcripts_pdf)

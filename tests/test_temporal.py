@@ -17,18 +17,6 @@ from pyxml_spark.pipeline.temporal import (asof_last_before,  # noqa: E402
                                            range_count_before, sessionize)
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-temporal-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
 def _events(spark, rows):
     """rows: (event_id, user_id, event_type, seconds_offset, value)"""
     from pyspark.sql.types import (DoubleType, LongType, StringType,

@@ -8,18 +8,6 @@ pyspark = pytest.importorskip('pyspark')
 SF_DIR = '/root/testdata/sf0.001'
 
 
-@pytest.fixture(scope='module')
-def spark():
-    from pyspark.sql import SparkSession
-    s = (SparkSession.builder.master('local[4]')
-         .appName('pyxml-spark-textops-tests')
-         .config('spark.sql.shuffle.partitions', '4')
-         .config('spark.ui.enabled', 'false')
-         .getOrCreate())
-    yield s
-    s.stop()
-
-
 def test_pii_scrub_removes_all_pii(spark):
     import __spark_entry__ as entry
     rows = entry.q_pii_scrub(spark, SF_DIR).collect()

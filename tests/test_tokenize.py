@@ -4,8 +4,6 @@ import json
 import os
 import re
 
-import pytest
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MERGES_PATH = os.path.join(REPO, 'pyxml_spark', 'pipeline',
                            'bpe_merges.json')
@@ -88,31 +86,20 @@ def test_registry_swappable():
     assert TOKENIZERS['whitespace']('') == 0
 
 
-def test_subword_count_spark_kernel():
-    pytest.importorskip('pyspark')
-    from pyspark.sql import SparkSession
+def test_subword_count_spark_kernel(spark):
     from pyxml_spark.pipeline.tokenize import bpe_token_count
-    spark = (SparkSession.builder.master('local[2]')
-             .appName('pyxml-spark-tokenize-tests')
-             .config('spark.sql.shuffle.partitions', '2')
-             .config('spark.ui.enabled', 'false')
-             .getOrCreate())
-    try:
-        import __spark_entry__ as entry
-        rows = entry.q_subword_count(
-            spark, '/root/testdata/sf0.001').collect()
-        assert len(rows) == 500
-        import pyarrow.parquet as pq
-        texts = {r['doc_id']: r['text'] for r in pq.read_table(
-            '/root/testdata/sf0.001/documents.parquet').to_pylist()}
-        for r in rows[:50]:
-            text = texts[r.doc_id]
-            want = (0 if not text.strip() else
-                    sum(bpe_token_count(w)
-                        for w in re.split(r'\s+', text.strip())))
-            assert r.n_subwords == want, r.doc_id
-    finally:
-        spark.stop()
+    import __spark_entry__ as entry
+    rows = entry.q_subword_count(spark, entry.DEFAULT_SF_DIR).collect()
+    assert len(rows) == 500
+    import pyarrow.parquet as pq
+    texts = {r['doc_id']: r['text'] for r in pq.read_table(
+        f'{entry.DEFAULT_SF_DIR}/documents.parquet').to_pylist()}
+    for r in rows[:50]:
+        text = texts[r.doc_id]
+        want = (0 if not text.strip() else
+                sum(bpe_token_count(w)
+                    for w in re.split(r'\s+', text.strip())))
+        assert r.n_subwords == want, r.doc_id
 
 
 def test_training_reproduces_committed_vocab(tmp_path):
