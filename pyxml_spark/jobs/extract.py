@@ -69,8 +69,7 @@ def main(argv=None) -> int:
                     help='heuristics: maximum link-char ratio per block')
     args = ap.parse_args(argv)
 
-    from pyxml_spark.pipeline import (output_metrics, run_with_resume,
-                                      write_transcripts)
+    from pyxml_spark.pipeline import run_with_resume, write_transcripts
     from pyxml_spark.pipeline.heuristics import ExtractConfig
 
     config = ExtractConfig()
@@ -92,14 +91,10 @@ def main(argv=None) -> int:
         manifest = args.manifest or output + '.manifest'
 
         t0 = time.time()
-        result = run_with_resume(
+        metrics = run_with_resume(
             spark, input_ref, output, manifest,
             n_buckets=args.buckets, max_buckets=args.max_buckets,
             salt=args.salt, config=config)
-        metrics = output_metrics(spark.read.parquet(output))
-        # keep the whole-output totals and this run's contribution distinct
-        metrics['rows_this_run'] = result.pop('rows_out')
-        metrics.update(result)
         metrics['wall_seconds'] = round(time.time() - t0, 3)
         metrics['throughput_rows_per_s'] = round(
             metrics['rows_this_run'] / max(metrics['wall_seconds'], 1e-9), 1)

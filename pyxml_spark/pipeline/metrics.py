@@ -8,30 +8,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ['output_metrics', 'per_conversation_report']
+__all__ = ['output_metrics', 'output_sums', 'per_conversation_report']
+
+
+def output_sums() -> dict:
+    """name -> aggregate column of one extraction-output sum: the one
+    definition of the row, char, parse-error, node and text-char totals
+    that :func:`output_metrics`, the resume manifest and
+    :func:`per_conversation_report` aggregate"""
+    return {'rows_out': F.count(F.lit(1)),
+            'chars_out': F.sum(F.length('main_text')),
+            'parse_errors': F.count('parse_error'),
+            'nodes': F.sum('n_nodes'),
+            'text_chars': F.sum('n_text_chars')}
+
+
+def as_metrics(row) -> dict:
+    """``{name: int}`` of the :func:`output_sums` of an aggregate row or an
+    observation's dict; a sum over no rows (null) reads 0"""
+    return {name: int(row[name] or 0) for name in output_sums()}
 
 
 def output_metrics(out: DataFrame) -> dict:
     """global row/byte/error metrics for an extraction output"""
-    row = out.agg(
-        F.count('*').alias('rows_out'),
-        F.sum(F.length('main_text')).alias('chars_out'),
-        F.sum(F.when(F.col('parse_error').isNotNull(), 1).otherwise(0))
-        .alias('parse_errors'),
-        F.sum('n_nodes').alias('nodes'),
-        F.sum('n_text_chars').alias('text_chars'),
-    ).collect()[0]
-    return dict(rows_out=row.rows_out, chars_out=int(row.chars_out or 0),
-                parse_errors=int(row.parse_errors or 0),
-                nodes=int(row.nodes or 0),
-                text_chars=int(row.text_chars or 0))
+    return as_metrics(out.agg(
+        *(col.alias(name) for name, col in output_sums().items()))
+        .collect()[0])
 
 
 def per_conversation_report(out: DataFrame) -> DataFrame:
     """per-conversation rollup: turn count, extracted chars, error count"""
+    sums = output_sums()
     return (out.groupBy('conv_id').agg(
-        F.count('*').alias('n_turns'),
-        F.sum(F.length('main_text')).alias('main_chars'),
-        F.sum(F.when(F.col('parse_error').isNotNull(), 1).otherwise(0))
-        .alias('n_errors'))
+        sums['rows_out'].alias('n_turns'),
+        sums['chars_out'].alias('main_chars'),
+        sums['parse_errors'].alias('n_errors'))
         .orderBy('conv_id'))

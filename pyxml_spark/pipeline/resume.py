@@ -4,14 +4,19 @@ Unit of work = a conversation bucket (``pmod(hash(conv_id), n_buckets)``), so
 a bucket is self-contained and its output is idempotently rewritable. The
 protocol (SURVEY.md §4 custom-physical-work #3):
 
-1. read the manifest (if any) and derive the completed bucket set;
-2. anti-join the input against completed buckets (a broadcast of at most
-   ``n_buckets`` rows — never a shuffle of the big side);
+1. collect the completed bucket set from the manifest (if any);
+2. anti-join the input against it (a broadcast of at most ``n_buckets``
+   rows — never a shuffle of the big side); a ``max_buckets`` run first
+   lists the pending buckets and keeps the smallest ``max_buckets``;
 3. process pending buckets; write output with dynamic partition overwrite on
-   ``bucket`` so a re-run of a half-written bucket replaces, never duplicates;
-4. only after the data commit, append manifest rows (bucket, counts, bytes,
-   lineage, run_id) — the ordering is what makes a crash resumable: a bucket
-   missing from the manifest is redone, and redo is idempotent.
+   ``bucket`` so a re-run of a half-written bucket replaces, never duplicates.
+   The write observes its row count and the set of buckets it wrote;
+4. only after the data commit, read the committed output back once: the
+   buckets this run wrote become manifest rows (bucket, counts, bytes,
+   lineage, run_id), appended from that read, and an observation over the
+   whole table yields the run's output totals. The ordering is what makes
+   a crash resumable: a bucket missing from the manifest is redone, and
+   redo is idempotent.
 
 ``max_buckets`` limits work per invocation (used by the kill/resume test and
 useful operationally for incremental backfills). Staged batch jobs use the
@@ -29,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extract import extract_turns
 from .heuristics import ExtractConfig
-from .schema import MANIFEST_SCHEMA
+from .metrics import as_metrics, output_metrics, output_sums
 from .skew import with_bucket
 
 __all__ = ['completed_buckets', 'mark_stage', 'run_with_resume',
@@ -72,36 +77,33 @@ def run_with_resume(spark: SparkSession,
                     config: ExtractConfig = ExtractConfig(),
                     salt: int = 16,
                     partitions: Optional[int] = None) -> dict:
-    """one resumable pass; returns run metrics. Call repeatedly until
-    ``remaining == 0``."""
+    """one resumable pass. Returns the whole output's
+    :func:`~.metrics.output_sums` totals (``rows_out``, ``chars_out``, ...)
+    and this run's ``rows_this_run``, ``buckets_done`` (before the run),
+    ``buckets_run``, ``remaining`` and ``wall_seconds``. Call repeatedly
+    until ``remaining == 0``."""
     from .io import read_transcripts
 
     from pyspark.sql import Observation
 
-    spark.conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
 
     turns = with_bucket(read_transcripts(spark, input_ref), n_buckets)
-    done = completed_buckets(spark, manifest_path)
-    n_done = done.count()
-
-    pending = turns.join(F.broadcast(done), on='bucket', how='left_anti')
-    # one column-pruned planning pass decides the work list (at most
-    # n_buckets rows reach the driver). All run metrics — including input
-    # lineage — later come off the output table (the kernel carries
-    # n_raw_chars and is 1-row-in:1-row-out), so the input is scanned
-    # exactly twice per run: this planning pass and the extraction itself.
-    all_pending = [r.bucket for r in
-                   pending.select('bucket').distinct()
-                   .orderBy('bucket').collect()]
-    processed = (all_pending[:max_buckets] if max_buckets is not None
-                 else all_pending)
-    if not processed:
-        return dict(run_id=run_id, buckets_done=n_done, buckets_run=0,
-                    remaining=0, rows_out=0, wall_seconds=0.0)
-    if len(processed) < len(all_pending):
-        pending = pending.where(F.col('bucket').isin(processed))
+    done = completed_buckets(spark, manifest_path).collect()
+    done_df = spark.createDataFrame(done, 'bucket int')
+    pending = turns.join(F.broadcast(done_df), on='bucket', how='left_anti')
+    remaining = 0
+    if max_buckets is not None:
+        # only a capped run needs its work list before the write: one
+        # column-pruned planning pass (at most n_buckets rows reach the
+        # driver) picks the smallest pending buckets
+        all_pending = sorted(r.bucket for r in
+                             pending.select('bucket').distinct().collect())
+        remaining = max(len(all_pending) - max_buckets, 0)
+        if remaining:
+            pending = pending.where(
+                F.col('bucket').isin(all_pending[:max_buckets]))
 
     # keep the bucket column alongside the extraction output for the
     # partitioned write: extract on (conv_id, turn_idx, text), re-attach
@@ -110,46 +112,52 @@ def run_with_resume(spark: SparkSession,
                         partitions=partitions)
     out = with_bucket(out, n_buckets)
 
-    # run-level metrics ride the write itself (df.observe — no extra pass)
-    obs = Observation(f'resume-{run_id}')
-    out = out.observe(obs,
-                      F.count(F.lit(1)).alias('rows_out'),
-                      F.sum(F.length('main_text')).alias('bytes_out'),
-                      F.sum('n_raw_chars').alias('bytes_in'),
-                      F.sum(F.when(F.col('parse_error').isNotNull(), 1)
-                            .otherwise(0)).alias('parse_errors'))
-
-    out.write.mode('overwrite').partitionBy('bucket').parquet(output_path)
-    totals = obs.get
-
-    # per-bucket manifest stats: the output is partitioned by bucket, so
-    # filtering to this run's buckets partition-prunes the scan to exactly
-    # the fresh partitions — the rest of the output dir (including
-    # half-written buckets from a crashed earlier run, which must stay
-    # un-manifested so a later run redoes them) is never read. Input
-    # lineage per bucket = (row count, sum of n_raw_chars) off the same
-    # scan; no second pass over the input.
-    fresh = (spark.read.parquet(output_path)
-             .where(F.col('bucket').isin(processed)))
-    stats = (fresh.groupBy('bucket').agg(
-        F.count('*').alias('rows_out'),
-        F.sum(F.length('main_text')).alias('bytes_out'),
-        F.sum('n_raw_chars').alias('bytes_in'),
-        F.sum(F.when(F.col('parse_error').isNotNull(), 1)
-              .otherwise(0)).alias('parse_errors'))
-        .collect())
+    # the write observes this run's row count and the buckets it wrote (no
+    # extra pass). The observation is also what keeps the (conv_id,
+    # turn_idx) output sort in the executed plan: without its CollectMetrics
+    # node, EliminateSorts drops that sort under the writer's Sort [bucket].
+    wrote = Observation(f'resume-{run_id}')
+    out = out.observe(wrote, F.count(F.lit(1)).alias('rows'),
+                      F.collect_set('bucket').alias('buckets'))
+    (out.write.mode('overwrite')
+     .option('partitionOverwriteMode', 'dynamic')
+     .partitionBy('bucket').parquet(output_path))
+    written = sorted(wrote.get['buckets'])
     wall = time.time() - t0
-    rows = [(int(s.bucket), 'done',
-             int(s.rows_out),  # kernel is 1:1, rows_in == rows_out
-             int(s.rows_out),
-             int(s.bytes_in or 0),
-             int(s.bytes_out or 0), int(s.parse_errors),
-             input_ref, run_id, f'{wall:.3f}') for s in stats]
-    if rows:
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            'append').parquet(manifest_path)
 
-    remaining = len(all_pending) - len(processed)
-    return dict(run_id=run_id, buckets_done=n_done, buckets_run=len(rows),
-                remaining=max(remaining, 0),
-                rows_out=int(totals['rows_out']), wall_seconds=wall)
+    # one read-back of the committed output: an observation over the whole
+    # table yields the job's totals, and the rows of the buckets this run
+    # wrote become its manifest rows. Manifest stats come from the committed
+    # files, after the data commit, and only for this run's buckets: a
+    # half-written bucket of a crashed earlier run stays un-manifested, so
+    # a later run redoes it. Input lineage per bucket = (row count, sum of
+    # n_raw_chars): the kernel is 1 row in : 1 row out.
+    if written:
+        whole = Observation(f'resume-output-{run_id}')
+        sums = output_sums()
+        manifest = (spark.read.parquet(output_path)
+                    .observe(whole, *(col.alias(name)
+                                      for name, col in sums.items()))
+                    .where(F.col('bucket').isin(written))
+                    .groupBy('bucket').agg(  # MANIFEST_SCHEMA's columns
+                        F.lit('done').alias('status'),
+                        sums['rows_out'].alias('rows_in'),
+                        sums['rows_out'].alias('rows_out'),
+                        F.coalesce(F.sum('n_raw_chars'), F.lit(0))
+                        .alias('bytes_in'),
+                        F.coalesce(sums['chars_out'], F.lit(0))
+                        .alias('bytes_out'),
+                        sums['parse_errors'].alias('parse_errors'),
+                        F.lit(input_ref).alias('input_lineage'),
+                        F.lit(run_id).alias('run_id'),
+                        F.lit(f'{wall:.3f}').alias('wall_seconds')))
+        manifest.coalesce(1).write.mode('append').parquet(manifest_path)
+        totals = as_metrics(whole.get)
+    else:
+        # a filter on isin([]) folds to false and the optimizer would prune
+        # the observation with it; nothing to manifest, totals by aggregate
+        totals = output_metrics(spark.read.parquet(output_path))
+
+    return dict(totals, rows_this_run=int(wrote.get['rows']), run_id=run_id,
+                buckets_done=len(done), buckets_run=len(written),
+                remaining=remaining, wall_seconds=wall)

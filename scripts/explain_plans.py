@@ -108,10 +108,11 @@ def main() -> int:
     checks.append(('pdf_layout_extract', 'single aggregate Exchange',
                    pl_plan.count(') Exchange') == 1))
 
-    # 8. resume per-bucket stats: the output table is partitioned by bucket,
-    # so the post-write stats read must partition-prune to this run's
-    # buckets (no full-output rescan; input lineage rides the same scan via
-    # n_raw_chars — the input itself is never re-read for metrics)
+    # 8. a bucket filter on the bucket-partitioned output prunes partitions.
+    # The resume read-back scans the whole output once, because the job
+    # reports whole-output totals (an observation before its bucket filter
+    # sees every row); the filtered rows become the manifest, with input
+    # lineage via n_raw_chars — the input is never re-read for metrics
     import tempfile
     with tempfile.TemporaryDirectory() as td:
         bucketed = with_bucket(

@@ -118,6 +118,87 @@ def test_resume_exactly_once(spark, turns_pdf, tmp_path):
     assert total_rows_in == len(turns_pdf)
 
 
+def test_resume_leaves_session_conf(spark, turns_pdf, tmp_path):
+    """dynamic partition overwrite is an option of the resume write, not a
+    session setting: a resume under a static session keeps the buckets of
+    the earlier run, and the session's setting is left as it was"""
+    from pyxml_spark.pipeline import run_with_resume, TRANSCRIPTS_SCHEMA
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    mf = os.path.join(tmp_path, 'manifest.parquet')
+    spark.createDataFrame(turns_pdf.head(100), schema=TRANSCRIPTS_SCHEMA) \
+        .write.parquet(inp)
+    key = 'spark.sql.sources.partitionOverwriteMode'
+    with restored_conf(spark):
+        spark.conf.set(key, 'static')
+        run_with_resume(spark, inp, out, mf, n_buckets=4, max_buckets=2)
+        run_with_resume(spark, inp, out, mf, n_buckets=4)
+        assert spark.conf.get(key) == 'static'
+    assert spark.read.parquet(out).count() == 100
+
+
+def _sql_plans(spark) -> dict:
+    """{execution id: executed plan} from the session's SQL status store,
+    once every queued listener event has reached it"""
+    from perfbench.child import execution_plans
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return {i: plan for i, _, plan in execution_plans(spark)}
+
+
+def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
+    """jobs.extract.main: a capped run, a resume and a no-op rerun report
+    this run's counts and the whole output's totals, manifest one done row
+    per written bucket, and the data write runs the Arrow kernel and the
+    (conv_id, turn_idx) output sort. An uncapped call runs at most four
+    SQL executions."""
+    from perfbench.child import extraction_plan_ok
+    from pyxml_spark.jobs.extract import main
+    from pyxml_spark.pipeline import (MANIFEST_SCHEMA, TRANSCRIPTS_SCHEMA,
+                                      output_metrics, with_bucket)
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    mf = os.path.join(tmp_path, 'manifest.parquet')
+    df = spark.createDataFrame(turns_pdf, schema=TRANSCRIPTS_SCHEMA)
+    df.write.parquet(inp)
+    per_bucket = dict(with_bucket(df, 8).groupBy('bucket').count().collect())
+    buckets = sorted(per_bucket)
+    argv = ['--input', inp, '--output', out, '--manifest', mf,
+            '--buckets', '8', '--cpus', '4']
+
+    calls = [(['--max-buckets', '3'], buckets[:3], len(buckets) - 3),
+             ([], buckets[3:], 0),
+             ([], [], 0)]
+    done = 0
+    for extra, run_buckets, remaining in calls:
+        before = _sql_plans(spark).keys()
+        rc, got = run_job(main, argv + extra)
+        plans = {i: p for i, p in _sql_plans(spark).items()
+                 if i not in before}
+        assert rc == 0
+        assert got['buckets_done'] == done
+        assert got['buckets_run'] == len(run_buckets)
+        assert got['remaining'] == remaining
+        assert got['rows_this_run'] == sum(per_bucket[b] for b in run_buckets)
+        assert {k: got[k] for k in ('rows_out', 'chars_out', 'parse_errors',
+                                    'nodes', 'text_chars')} == \
+            output_metrics(spark.read.parquet(out))
+        done += len(run_buckets)
+        manifest = spark.read.parquet(mf)
+        assert [(f.name, f.dataType) for f in manifest.schema] == \
+            [(f.name, f.dataType) for f in MANIFEST_SCHEMA]
+        manifest = manifest.collect()
+        assert sorted(r.bucket for r in manifest
+                      if r.status == 'done') == buckets[:done]
+        assert sum(r.rows_in for r in manifest) == \
+            sum(per_bucket[b] for b in buckets[:done])
+        if run_buckets:
+            assert extraction_plan_ok([(i, '', p) for i, p in plans.items()])
+        if not extra:
+            assert len(plans) <= 4, sorted(plans)
+    assert done == len(buckets)
+    assert sum(r.rows_in for r in manifest) == len(turns_pdf)
+
+
 def test_metrics_report(spark, turns_pdf):
     from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, extract_turns,
                                       output_metrics,
