@@ -60,7 +60,6 @@ def main(argv=None) -> int:
     ap.add_argument('--manifest', default=None)
     ap.add_argument('--buckets', type=int, default=64)
     ap.add_argument('--max-buckets', type=int, default=None)
-    ap.add_argument('--salt', type=int, default=16)
     ap.add_argument('--cpus', type=int, default=int(os.environ.get(
         'SPARK_GRAFT_CPUS', '8')))
     ap.add_argument('--min-block-chars', type=int, default=None,
@@ -94,7 +93,7 @@ def main(argv=None) -> int:
         metrics = run_with_resume(
             spark, input_ref, output, manifest,
             n_buckets=args.buckets, max_buckets=args.max_buckets,
-            salt=args.salt, config=config)
+            config=config)
         metrics['wall_seconds'] = round(time.time() - t0, 3)
         metrics['throughput_rows_per_s'] = round(
             metrics['rows_this_run'] / max(metrics['wall_seconds'], 1e-9), 1)

@@ -8,8 +8,9 @@ engine parses each payload in-process.
 
 Scale design (SURVEY.md §2-F / §4):
 
-* salted repartition on ``conv_id`` defuses long-conversation skew — safe
-  because extraction is per-turn independent;
+* the exchange spreads long conversations over tasks — safe because
+  extraction is per-turn independent: :func:`extract_turns` salts on
+  ``conv_id``, the resume job range-partitions on its buckets (skew.py);
 * the UDF is an iterator-of-batches function, so one Python worker streams
   batches without materializing a partition;
 * final ordering is ``sortWithinPartitions(conv_id, turn_idx)`` — a local
@@ -24,7 +25,8 @@ from .gather import gather_document
 from .heuristics import ExtractConfig, score_fragments, select_main
 from .schema import EXTRACTION_SCHEMA
 
-__all__ = ['extract_payload', 'extract_arrow_batches', 'extract_turns']
+__all__ = ['extract_payload', 'extract_arrow_batches', 'extract_stage',
+           'extract_turns']
 
 
 def _extract_row(payload: Optional[str], config: ExtractConfig) -> tuple:
@@ -122,6 +124,20 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
                    'n_raw_chars'])
 
 
+def extract_stage(spread, config: ExtractConfig = ExtractConfig(),
+                  sort_output: bool = True):
+    """the kernel stage behind an exchange: the mapInArrow kernel over
+    (conv_id, turn_idx, text), then the local (conv_id, turn_idx) output
+    sort. :func:`extract_turns` feeds it the salted exchange, the resume
+    job a range exchange on its buckets."""
+    out = spread.select('conv_id', 'turn_idx', 'text').mapInArrow(
+        lambda it: extract_arrow_batches(it, config),
+        schema=EXTRACTION_SCHEMA)
+    if sort_output:
+        out = out.sortWithinPartitions('conv_id', 'turn_idx')
+    return out
+
+
 def extract_turns(df,
                   config: ExtractConfig = ExtractConfig(),
                   partitions: Optional[int] = None,
@@ -136,8 +152,4 @@ def extract_turns(df,
 
     cols = df.select('conv_id', 'turn_idx', 'text')
     spread = salted_repartition(cols, partitions, salt=salt)
-    out = spread.mapInArrow(lambda it: extract_arrow_batches(it, config),
-                            schema=EXTRACTION_SCHEMA)
-    if sort_output:
-        out = out.sortWithinPartitions('conv_id', 'turn_idx')
-    return out
+    return extract_stage(spread, config, sort_output)

@@ -4,13 +4,19 @@ Unit of work = a conversation bucket (``pmod(hash(conv_id), n_buckets)``), so
 a bucket is self-contained and its output is idempotently rewritable. The
 protocol (SURVEY.md §4 custom-physical-work #3):
 
-1. collect the completed bucket set from the manifest (if any);
+1. collect the completed bucket set from the manifest. Only a missing
+   manifest path means "first run"; a manifest that exists but cannot be
+   read raises, since reading it as "no bucket done" would silently redo
+   the whole input;
 2. anti-join the input against it (a broadcast of at most ``n_buckets``
    rows — never a shuffle of the big side); a ``max_buckets`` run first
    lists the pending buckets and keeps the smallest ``max_buckets``;
-3. process pending buckets; write output with dynamic partition overwrite on
-   ``bucket`` so a re-run of a half-written bucket replaces, never duplicates.
-   The write observes its row count and the set of buckets it wrote;
+3. range-partition the pending turns on ``(bucket, conv_id, turn_idx)``
+   (:func:`extract_buckets`; skew.py says why), so the write opens about
+   ``n_buckets + tasks - 1`` files, not ``tasks x n_buckets``. Extract,
+   then write output with dynamic partition overwrite on ``bucket`` so a
+   re-run of a half-written bucket replaces, never duplicates. The write
+   observes its row count and the set of buckets it wrote;
 4. only after the data commit, read the committed output back once: the
    buckets this run wrote become manifest rows (bucket, counts, bytes,
    lineage, run_id), appended from that read, and an observation over the
@@ -32,13 +38,14 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .extract import extract_turns
+from .extract import extract_stage
 from .heuristics import ExtractConfig
 from .metrics import as_metrics, output_metrics, output_sums
+from .schema import MANIFEST_SCHEMA
 from .skew import with_bucket
 
-__all__ = ['completed_buckets', 'mark_stage', 'run_with_resume',
-           'stage_committed']
+__all__ = ['completed_buckets', 'extract_buckets', 'mark_stage',
+           'run_with_resume', 'stage_committed']
 
 
 def stage_committed(path: str, params: dict, resume: bool) -> bool:
@@ -60,12 +67,33 @@ def mark_stage(path: str, params: dict) -> None:
 
 
 def completed_buckets(spark: SparkSession, manifest_path: str) -> DataFrame:
-    """distinct completed buckets from the manifest (empty DF when absent)"""
+    """distinct completed buckets from the manifest; empty when the path
+    does not exist (the first run). Any other read error propagates. Read
+    with ``MANIFEST_SCHEMA``, so no footer is opened to infer a schema and
+    a manifest directory holding no data file yet (an interrupted first
+    append) reads as empty."""
+    from pyspark.errors import AnalysisException
     try:
-        mf = spark.read.parquet(manifest_path)
-    except Exception:  # noqa: BLE001 - first run: no manifest yet
+        mf = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+    except AnalysisException as exc:
+        if exc.getCondition() != 'PATH_NOT_FOUND':
+            raise
         return spark.createDataFrame([], 'bucket int')
     return mf.where(F.col('status') == 'done').select('bucket').distinct()
+
+
+def extract_buckets(pending: DataFrame, n_buckets: int,
+                    config: ExtractConfig = ExtractConfig(),
+                    partitions: Optional[int] = None) -> DataFrame:
+    """the resume write's frame: bucketed turns range-partitioned on
+    ``(bucket, conv_id, turn_idx)``, through the kernel stage, with
+    ``bucket`` re-attached (the kernel emits EXTRACTION_SCHEMA; the bucket
+    is a function of ``conv_id`` alone)"""
+    keys = ('bucket', 'conv_id', 'turn_idx')
+    cols = pending.select(*keys, 'text')
+    spread = (cols.repartitionByRange(partitions, *keys) if partitions
+              else cols.repartitionByRange(*keys))
+    return with_bucket(extract_stage(spread, config), n_buckets)
 
 
 def run_with_resume(spark: SparkSession,
@@ -75,7 +103,6 @@ def run_with_resume(spark: SparkSession,
                     n_buckets: int = 64,
                     max_buckets: Optional[int] = None,
                     config: ExtractConfig = ExtractConfig(),
-                    salt: int = 16,
                     partitions: Optional[int] = None) -> dict:
     """one resumable pass. Returns the whole output's
     :func:`~.metrics.output_sums` totals (``rows_out``, ``chars_out``, ...)
@@ -105,12 +132,7 @@ def run_with_resume(spark: SparkSession,
             pending = pending.where(
                 F.col('bucket').isin(all_pending[:max_buckets]))
 
-    # keep the bucket column alongside the extraction output for the
-    # partitioned write: extract on (conv_id, turn_idx, text), re-attach
-    # bucket deterministically (function of conv_id only)
-    out = extract_turns(pending, config=config, salt=salt,
-                        partitions=partitions)
-    out = with_bucket(out, n_buckets)
+    out = extract_buckets(pending, n_buckets, config, partitions)
 
     # the write observes this run's row count and the buckets it wrote (no
     # extra pass). The observation is also what keeps the (conv_id,

@@ -1,12 +1,22 @@
-"""Skew handling: explicit salted repartitioning on conv_id.
+"""Skew handling: the library salts, the resume job range-partitions.
 
 The transcripts table is heavy-tailed on conversation length (FIXTURES.md §1):
 a handful of conversations carry 10^3-10^4 turns. A plain
 ``repartition('conv_id')`` pins each long conversation to one task; at 10^12
 turns that is a straggler. Per-turn extraction is conversation-independent,
-so we salt: partition by ``(conv_id, hash(conv_id, turn_idx) % salt)``, which
-spreads a hot conversation over up to ``salt`` tasks with no re-merge needed
-beyond the final local sort.
+so the library path (``extract_turns``) salts: partition by
+``(conv_id, hash(conv_id, turn_idx) % salt)``, which spreads a hot
+conversation over up to ``salt`` tasks with no re-merge needed beyond the
+final local sort.
+
+The resume job (``resume.extract_buckets``) writes its output partitioned by
+``bucket``. Behind a hash exchange every task holds rows of every bucket and
+opens one file per bucket: ``tasks x n_buckets`` files per run (about 4M at
+1,000 tasks x 4,096 buckets). It range-partitions on
+``(bucket, conv_id, turn_idx)`` instead, so each task holds a contiguous run
+of buckets and the write opens about ``n_buckets + tasks - 1`` files. The
+sampled range bounds split a hot conversation by ``turn_idx``, so tasks stay
+row-balanced as they do under the salt; ``repartition('bucket')`` would not.
 """
 from __future__ import annotations
 

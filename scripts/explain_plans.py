@@ -5,7 +5,8 @@ assert the scale-critical properties:
 * the resume anti-join broadcasts the small side;
 * relational glue runs in WholeStageCodegen;
 * the extraction stage is a single Exchange (the salted repartition) feeding
-  one ArrowEvalPython/MapInArrow stage — no extra shuffles.
+  one ArrowEvalPython/MapInArrow stage — no extra shuffles;
+* the resume job's extraction is a single range Exchange on its buckets.
 
 Usage: python3 scripts/explain_plans.py [sf_dir]
 """
@@ -34,6 +35,7 @@ def main() -> int:
     from pyspark.sql import functions as F
     from bench import build_session
     from pyxml_spark.pipeline import extract_turns, with_bucket
+    from pyxml_spark.pipeline.resume import extract_buckets
 
     spark = build_session(8)
     spark.sparkContext.setLogLevel('ERROR')
@@ -75,6 +77,16 @@ def main() -> int:
     checks.append(('extract_turns', 'arrow map stage',
                    ('MapInArrow' in ext_plan) or ('ArrowEvalPython' in ext_plan)
                    or ('PythonMapInArrow' in ext_plan)))
+
+    # 3b. the resume job's write frame: its one exchange range-partitions
+    # on (bucket, conv_id, turn_idx), so each task writes a contiguous run
+    # of buckets (about n_buckets + tasks - 1 files, not tasks x n_buckets)
+    rs_plan = plan_of(extract_buckets(with_bucket(turns, 8), 8))
+    sections.append(('resume_extract_buckets', rs_plan))
+    checks.append(('resume_extract_buckets',
+                   'single Exchange, range-partitioned on bucket',
+                   rs_plan.count(') Exchange') == 1
+                   and 'rangepartitioning(bucket' in rs_plan))
 
     # 4. join rollup: codegen (simple mode marks codegen stages with '*(n)')
     # + partial aggregation

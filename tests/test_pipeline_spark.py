@@ -5,6 +5,7 @@ turn_idx) must equal a driver-side loop applying the *reference* parser plus
 the same heuristics over the same payloads, under stable turn ordering.
 """
 import os
+import re
 
 import pytest
 
@@ -145,12 +146,24 @@ def _sql_plans(spark) -> dict:
     return {i: plan for i, _, plan in execution_plans(spark)}
 
 
+def _write_exchanges(plans: dict) -> list:
+    """the arguments of every shuffle Exchange in the final plan of the
+    data write (the execution running the Arrow kernel)"""
+    (plan,) = [p for p in plans.values()
+               if 'InsertIntoHadoopFsRelationCommand' in p
+               and 'MapInArrow' in p]
+    final = plan.split('== Initial Plan ==')[0]
+    return [re.search(rf'\({i}\) Exchange\n.*\nArguments: (.*)',
+                      plan).group(1)
+            for i in re.findall(r'(?<!Broadcast)Exchange \((\d+)\)', final)]
+
+
 def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
     """jobs.extract.main: a capped run, a resume and a no-op rerun report
     this run's counts and the whole output's totals, manifest one done row
     per written bucket, and the data write runs the Arrow kernel and the
-    (conv_id, turn_idx) output sort. An uncapped call runs at most four
-    SQL executions."""
+    (conv_id, turn_idx) output sort behind one range exchange on bucket.
+    An uncapped call runs at most four SQL executions."""
     from perfbench.child import extraction_plan_ok
     from pyxml_spark.jobs.extract import main
     from pyxml_spark.pipeline import (MANIFEST_SCHEMA, TRANSCRIPTS_SCHEMA,
@@ -193,10 +206,104 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
             sum(per_bucket[b] for b in buckets[:done])
         if run_buckets:
             assert extraction_plan_ok([(i, '', p) for i, p in plans.items()])
+            (exchange,) = _write_exchanges(plans)
+            assert exchange.startswith('rangepartitioning(bucket#'), exchange
         if not extra:
             assert len(plans) <= 4, sorted(plans)
     assert done == len(buckets)
     assert sum(r.rows_in for r in manifest) == len(turns_pdf)
+
+
+def _run_job_uncoalesced(spark, run_job, df, tmp_path, buckets: int):
+    """write ``df`` as four input files and run jobs.extract.main on it
+    with AQE partition coalescing off (it would fold a small input into
+    one task); returns the output path"""
+    from pyxml_spark.jobs.extract import main
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    df.repartition(4).write.parquet(inp)
+    with restored_conf(spark):
+        spark.conf.set('spark.sql.adaptive.coalescePartitions.enabled',
+                       'false')
+        rc, _ = run_job(main, ['--input', inp, '--output', out,
+                               '--buckets', str(buckets), '--cpus', '4'])
+    assert rc == 0
+    return out
+
+
+def _files_per_bucket(path: str) -> dict:
+    """{bucket: data files} of a bucket-partitioned output"""
+    return {int(d.split('=')[1]): sum(not f.startswith(('.', '_'))
+                                      for f in os.listdir(
+                                          os.path.join(path, d)))
+            for d in os.listdir(path) if d.startswith('bucket=')}
+
+
+JOB_TASKS = 8  # the job session's shuffle partitions at --cpus 4
+
+
+def test_extract_job_writes_each_bucket_once(spark, turns_pdf, tmp_path,
+                                             run_job):
+    """the job's range exchange hands each task a contiguous run of
+    buckets, so its write opens at most n_buckets + tasks - 1 files, where
+    a hash exchange opens one file per task and bucket"""
+    from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA
+    df = spark.createDataFrame(turns_pdf, schema=TRANSCRIPTS_SCHEMA)
+    files = _files_per_bucket(
+        _run_job_uncoalesced(spark, run_job, df, tmp_path, buckets=8))
+    assert len(files) == 8
+    assert sum(files.values()) <= 8 + JOB_TASKS - 1, files
+
+
+def test_extract_job_splits_hot_conversation(spark, turns_pdf, tmp_path,
+                                             run_job):
+    """a conversation holding most rows is split by turn_idx over several
+    tasks (its bucket is written by more than one), and every input turn
+    comes out exactly once"""
+    from pyspark.sql import functions as F
+    from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA, with_bucket
+    base = spark.createDataFrame(turns_pdf, schema=TRANSCRIPTS_SCHEMA)
+    hot = spark.range(3 * len(turns_pdf)).select(
+        F.lit('conv-hot').alias('conv_id'),
+        F.col('id').cast('int').alias('turn_idx'),
+        F.lit('user').alias('role'),
+        F.concat(F.lit('<p>hot turn '), F.col('id'), F.lit('</p>'))
+        .alias('text'),
+        F.lit(None).cast('string').alias('tool'),
+        F.lit(None).cast('timestamp').alias('ts'))
+    df = base.unionByName(hot)
+    out = _run_job_uncoalesced(spark, run_job, df, tmp_path, buckets=8)
+    hot_bucket = with_bucket(hot.limit(1), 8).first().bucket
+    assert _files_per_bucket(out)[hot_bucket] >= 2
+    keys = sorted(tuple(r) for r in spark.read.parquet(out)
+                  .select('conv_id', 'turn_idx').collect())
+    assert keys == sorted(tuple(r) for r in
+                          df.select('conv_id', 'turn_idx').collect())
+
+
+def test_resume_refuses_unreadable_manifest(spark, turns_pdf, tmp_path):
+    """only a missing manifest path is a first run: a manifest that exists
+    but cannot be read stops the run before it writes, instead of reading
+    as "no bucket done" and redoing the whole input"""
+    from pyxml_spark.pipeline import run_with_resume, TRANSCRIPTS_SCHEMA
+    from pyxml_spark.pipeline.resume import completed_buckets
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    mf = os.path.join(tmp_path, 'manifest.parquet')
+    spark.createDataFrame(turns_pdf.head(100), schema=TRANSCRIPTS_SCHEMA) \
+        .write.parquet(inp)
+    os.makedirs(mf)
+    with open(os.path.join(mf, 'part-00000.parquet'), 'w') as f:
+        f.write('not a manifest')
+    with pytest.raises(Exception, match='not a Parquet file'):
+        run_with_resume(spark, inp, out, mf, n_buckets=4)
+    assert not os.path.exists(out)
+
+    # an interrupted first manifest append leaves no data file, so no
+    # bucket counts as done
+    os.remove(os.path.join(mf, 'part-00000.parquet'))
+    os.makedirs(os.path.join(mf, '_temporary'))
+    assert completed_buckets(spark, mf).count() == 0
 
 
 def test_metrics_report(spark, turns_pdf):
