@@ -141,12 +141,16 @@ def decontaminate(df: DataFrame, bench_df: DataFrame,
     (deterministic in both engines, collision odds ~n²/2^60), so the
     distinct/join shuffles move 8-byte keys instead of ~50-char strings.
     Cost is two hash shuffles, never a corpus x corpus comparison. The
-    token array is staged in a Project (HOF common-subexpression rule),
-    and the gram sequence is guarded with when(n >= k) because Spark's
-    sequence(1, stop) turns descending for stop < 1. The benchmark gram
-    set is built from ``bench_df`` alone — deriving it from the corpus
-    grams would re-run the full-corpus tokenize+hash+explode for the
-    broadcast side.
+    token array is staged in a Project and each doc explodes its gram
+    start offsets, guarded with when(n >= k) because Spark's
+    sequence(1, stop) turns descending for stop < 1; each exploded row
+    hashes its one gram, so the plan holds no higher-order function.
+    Exploding a staged array of gram hashes would paste the array's
+    builder into the filter the optimizer infers for the Generate and
+    re-split the text once per gram (CLAUDE.md, MinHash gotchas). The
+    benchmark gram set is built from ``bench_df`` alone — deriving it
+    from the corpus grams would re-run the full-corpus
+    tokenize+hash+explode for the broadcast side.
 
     SMALL-SIDE CONTRACT (same style as pipeline/temporal.py): ``bench_df``
     must be an eval/benchmark suite — thousands to low millions of
@@ -163,14 +167,12 @@ def decontaminate(df: DataFrame, bench_df: DataFrame,
         ws = d.where(F.trim(textc) != '').select(
             *head, F.split(F.trim(textc), r'\s+').alias('ws'))
         n = F.size('ws')
-        gs = F.when(n >= k, F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.conv(F.substring(
-                F.md5(F.concat_ws(' ', F.slice('ws', i, k))
-                      .cast('binary')), 1, 15), 16, 10).cast('long'))) \
-            .otherwise(F.array().cast('array<long>'))
-        return (ws.select(*keep, gs.alias('gs'))
-                .select(*keep, F.explode('gs').alias('g'))
+        starts = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1)))
+        g = F.conv(F.substring(
+            F.md5(F.concat_ws(' ', F.slice('ws', F.col('i'), k))
+                  .cast('binary')), 1, 15), 16, 10).cast('long')
+        return (ws.select(*keep, 'ws', F.explode(starts).alias('i'))
+                .select(*keep, g.alias('g'))
                 .distinct())
     # gram_rows' gid-less branch is already a distinct single 'g' column
     bench = gram_rows(bench_df, bench_text_col)
@@ -215,21 +217,22 @@ def mixture_copies(df: DataFrame, whole, frac16,
     The copy decision hashes only the row id (md5, first 16 bits) — the
     same content-independent basis as the dataset split — so re-runs,
     re-shards, and text edits never change which rows carry the extra
-    fractional copy. Copies materialize via posexplode of a staged
-    array_repeat: staging obeys the no-expression-inside-Generate rule,
-    and F.sequence is unsafe for the empty case (sequence(0,-1) is
-    [0,-1], not []). The plan is a narrow map + generate over the scan —
-    no shuffle, no driver action; a weight of 0.25 keeps a deterministic
-    quarter of rows, 2.5 duplicates every row twice and half a third time.
+    fractional copy. Copies materialize via posexplode of the
+    array_repeat expression itself: exploding a staged array attribute
+    would let the optimizer paste its builder (and the md5) into the
+    filter it infers for the Generate, and F.sequence is unsafe for the
+    empty case (sequence(0,-1) is [0,-1], not []). The plan is a narrow
+    map + generate over the scan — no shuffle, no driver action; a weight
+    of 0.25 keeps a deterministic quarter of rows, 2.5 duplicates every
+    row twice and half a third time.
     """
     h16 = F.conv(F.substring(
         F.md5(F.col(id_col).cast('string').cast('binary')), 1, 4),
         16, 10).cast('long')
     n = (whole + F.when(h16 < frac16, 1).otherwise(0)).cast('int')
-    staged = df.withColumn('_mix_copies', F.array_repeat(F.lit(1), n))
-    return (staged.select(*df.columns,
-                          F.posexplode('_mix_copies')
-                          .alias(out_col, '_mix_one'))
+    return (df.select(*df.columns,
+                      F.posexplode(F.array_repeat(F.lit(1), n))
+                      .alias(out_col, '_mix_one'))
             .drop('_mix_one')
             .withColumn(out_col, F.col(out_col).cast('long')))
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.window import Window
 
 __all__ = ['N_PERMS', 'N_BANDS', 'N_ROWS', 'PAIR_WINDOW', 'MH_PRIME',
@@ -109,13 +109,21 @@ def token_sets(df: DataFrame, text_col: str = 'text',
 def minhash_bands(tokens: DataFrame) -> DataFrame:
     """token_sets output -> exploded (doc_id, band_id: long, band_key).
 
-    All N_PERMS minima come from ONE aggregate pass over the hash array
-    with an N_PERMS-wide accumulator (zip_with against literal coefficient
+    All N_PERMS minima come from one aggregate over the hash array with
+    an N_PERMS-wide accumulator (zip_with against literal coefficient
     arrays + elementwise least). The naive formulation — N_PERMS separate
     ``array_min(transform(hs, ...))`` expressions — re-traverses the array
     per permutation and, worse, blows up analysis/codegen (~10s of fixed
-    plan overhead); the single-pass form measured 4.6x faster end-to-end
-    and scales as one traversal per row.
+    plan overhead); the single-pass form measured 4.6x faster end-to-end.
+
+    The rows come from exploding the literal band ids beside the staged
+    ``mins``, each band key sliced out per exploded row. Exploding an
+    array *attribute* instead (the per-doc array of band keys) makes the
+    optimizer infer ``size(bands) > 0 AND isnotnull(bands)`` for the
+    Generate and push that filter below the Projects that built the
+    array, pasting the aggregate into it: the executed plan then ran the
+    64-wide aggregate 65 times per row. A literal sequence infers no
+    filter, so the aggregate runs once (tests/test_dedup_lsh.py pins it).
     """
     # one py4j literal per coefficient array (element-wise F.lit trees
     # cost a driver round-trip per element — the similarity.py lesson)
@@ -129,14 +137,12 @@ def minhash_bands(tokens: DataFrame) -> DataFrame:
             F.zip_with(arr_a, arr_b, lambda a, b: (h * a + b) % MH_PRIME),
             lambda x, y: F.least(x, y)))
     staged = tokens.select('doc_id', mins.alias('mins'))
-    keys = F.array(*[
-        F.concat_ws('-', *[F.element_at('mins', j * N_ROWS + t + 1)
-                           .cast('string') for t in range(N_ROWS)])
-        for j in range(N_BANDS)])
-    staged = staged.select('doc_id', keys.alias('bands'))
-    return (staged.select('doc_id', F.posexplode('bands'))
-            .select('doc_id', F.col('pos').cast('long').alias('band_id'),
-                    F.col('col').alias('band_key')))
+    band = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1)))
+    key = F.concat_ws('-', F.slice('mins', F.col('b') * N_ROWS + 1, N_ROWS)
+                      .cast('array<string>'))
+    return (staged.select('doc_id', 'mins', band.alias('b'))
+            .select('doc_id', F.col('b').cast('long').alias('band_id'),
+                    key.alias('band_key')))
 
 
 def salt_expr(doc_col: str = 'doc_id', band_col: str = 'band_id',
@@ -188,6 +194,9 @@ def candidate_pairs(bands: DataFrame,
                      for t in range(1, pair_window + 1)])
     staged = salted.select(F.col('doc_id').alias('doc_a'),
                            succ.alias('succ'))
+    # exploding the attribute is safe here: the filter the optimizer
+    # infers for it (size(succ) > 0) cannot pass the Window, so the LEADs
+    # are not pasted into it (minhash_bands has the case where it can)
     within = (staged.select('doc_a', F.explode('succ').alias('doc_b'))
               .where(F.col('doc_b').isNotNull()))
     reps = (salted.groupBy('band_id', 'band_key', 'salt')
@@ -213,8 +222,9 @@ def dup_components(tokens: DataFrame, dup_pairs: DataFrame,
     components — exactly what the rank-window candidate scheme produces on
     a degenerate bucket — converge in O(log diameter) rounds instead of
     O(diameter), so a fixed ``max_iters`` covers any realistic corpus
-    (2^50 diameter at the default). Convergence is verified on a single
-    driver-side aggregate per round: labels only decrease, so the label
+    (2^50 diameter at the default). Convergence is verified on the label
+    sum, taken by an Observation on each round's eager checkpoint (one
+    Spark execution per round): labels only decrease, so the label
     sum is a monotone witness — aggregated as decimal(38,0) so it stays
     EXACT at any corpus size (an int64 sum of 10^12 large doc_ids wraps
     silently with ANSI off, and the raise-on-non-convergence guarantee
@@ -259,18 +269,22 @@ def dup_components(tokens: DataFrame, dup_pairs: DataFrame,
         sc.setCheckpointDir(f'{run_dir}/{tag}')
         return df.checkpoint(eager=True)
 
-    def _witness(df: DataFrame):
-        return df.agg(
-            F.sum(F.col('label').cast('decimal(38,0)'))).first()[0]
+    def _labels(df: DataFrame, tag: str):
+        # the witness rides the eager checkpoint's own execution as an
+        # Observation, so a round costs one Spark execution
+        obs = Observation()
+        df = _truncate(df.observe(
+            obs, F.sum(F.col('label').cast('decimal(38,0)')).alias('s')),
+            tag)
+        return df, obs.get['s']
 
     edges = dup_pairs.select(F.col('doc_a').alias('src'),
                              F.col('doc_b').alias('dst'))
     edges = edges.union(dup_pairs.select(F.col('doc_b').alias('src'),
                                          F.col('doc_a').alias('dst')))
     edges = _truncate(edges, 'edges')
-    labels = tokens.select('doc_id', F.col('doc_id').alias('label'))
-    labels = _truncate(labels, 'r0')
-    prev_sum = _witness(labels)
+    labels, prev_sum = _labels(
+        tokens.select('doc_id', F.col('doc_id').alias('label')), 'r0')
     try:
         for i in range(1, max_iters + 1):
             # check AFTER each update so every one of the max_iters rounds
@@ -284,17 +298,15 @@ def dup_components(tokens: DataFrame, dup_pairs: DataFrame,
                       .groupBy('doc_id').agg(F.min('label').alias('label')))
             shortcut = labels.select(F.col('doc_id').alias('label'),
                                      F.col('label').alias('label2'))
-            labels = (labels.join(shortcut, 'label', 'left')
-                      .select('doc_id',
-                              F.least('label',
-                                      F.coalesce('label2', 'label'))
-                              .alias('label')))
-            labels = _truncate(labels, f'r{i}')
+            labels, cur_sum = _labels(
+                labels.join(shortcut, 'label', 'left')
+                .select('doc_id',
+                        F.least('label', F.coalesce('label2', 'label'))
+                        .alias('label')), f'r{i}')
             if run_dir is not None:
                 # round i's eager checkpoint is self-contained; round i-1
                 # is superseded and can go — bounds storage at ~2 copies
                 _delete(f'{run_dir}/r{i - 1}')
-            cur_sum = _witness(labels)
             if cur_sum == prev_sum:
                 return labels.select('doc_id',
                                      F.col('label').alias('keeper'))

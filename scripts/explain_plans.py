@@ -6,7 +6,10 @@ assert the scale-critical properties:
 * relational glue runs in WholeStageCodegen;
 * the extraction stage is a single Exchange (the salted repartition) feeding
   one ArrowEvalPython/MapInArrow stage — no extra shuffles;
-* the resume job's extraction is a single range Exchange on its buckets.
+* the resume job's extraction is a single range Exchange on its buckets;
+* MinHash banding runs its minima aggregate once and decontamination runs
+  no higher-order function (no array builder pasted into an inferred
+  Generate filter).
 
 Usage: python3 scripts/explain_plans.py [sf_dir]
 """
@@ -151,6 +154,10 @@ def main() -> int:
                    and 'BroadcastHashJoin' in cand_plan))
     checks.append(('dedup_candidate_pairs', 'window over band buckets',
                    'Window' in cand_plan))
+    mb_plan = plan_of(minhash_bands(token_sets(docs)))
+    sections.append(('minhash_band', mb_plan))
+    checks.append(('minhash_band', 'the minima aggregate computed once',
+                   mb_plan.count('aggregate(') == 1))
 
     # 10. bucketed ANN paths: the (single-row, exploded-probe) query side
     # must broadcast into the corpus join — the corpus is never shuffled
@@ -255,7 +262,8 @@ def main() -> int:
                    and 'Exchange' not in mf_plan))
 
     # 20. mixture sampling: narrow map + generate over the scan — no
-    # exchange, no driver action; copies come from a staged array_repeat
+    # exchange, no driver action; copies come from a posexplode of the
+    # array_repeat expression itself
     mx_plan = plan_of(entry.q_mixture_sample(spark, sf_dir))
     sections.append(('mixture_sample', mx_plan))
     checks.append(('mixture_sample', 'generate over scan, no exchange',
@@ -450,6 +458,9 @@ def main() -> int:
                    'BroadcastHashJoin' in dc_plan
                    and 'CartesianProduct' not in dc_plan
                    and 'BroadcastNestedLoopJoin' not in dc_plan))
+    checks.append(('curate_decontaminate',
+                   'grams hashed per exploded row, no higher-order function',
+                   'lambdafunction' not in dc_plan))
 
     # composed curation row: after staging, the only non-equi join left
     # is the prefix scan's documented ONE-ROW broadcast stats join —

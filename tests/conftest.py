@@ -65,6 +65,22 @@ def restored_conf(spark):
                 spark.conf.set(key, value)
 
 
+@contextmanager
+def sql_plans(spark):
+    """``with sql_plans(spark) as plans:`` fills ``plans`` with
+    {execution id: executed plan} of every SQL execution the block ran,
+    read from the session's SQL status store once its listener events
+    have all arrived"""
+    from perfbench.child import execution_plans
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = max((i for i, _, _ in execution_plans(spark)), default=-1)
+    plans: dict = {}
+    yield plans
+    bus.waitUntilEmpty()
+    plans.update((i, plan) for i, _, plan in execution_plans(spark, before))
+
+
 @pytest.fixture
 def run_job(spark, monkeypatch):
     """``run_job(main, argv) -> (exit code, last stdout JSON line)`` for a

@@ -3,7 +3,11 @@ import json
 
 import pytest
 
+from tests.conftest import sql_plans
+
 pyspark = pytest.importorskip('pyspark')
+
+SF_DIR = '/root/testdata/sf0.001'
 
 
 def test_score_documents_semantics(spark):
@@ -49,6 +53,66 @@ def test_decontaminate_planted_overlap(spark):
     no_bc = decontaminate(df, bdf, broadcast=False)
     assert {tuple(r) for r in no_bc.collect()} == \
         {tuple(r) for r in got.values()}
+
+
+def test_decontaminate_gram_boundaries(spark):
+    """n_gram_hits equals a python model (distinct per doc: the first 15
+    hex digits of the md5 of each space-joined 8-gram) on blank and
+    whitespace-only text, docs of k-1, k and k+1 tokens and a doc that
+    repeats one 8-gram. Pins the n < k guard: Spark's sequence(1, stop)
+    counts down when stop < 1."""
+    import hashlib
+    from pyxml_spark.pipeline.curate import decontaminate
+    k = 8
+    t = [f't{i}' for i in range(12)]
+    texts = {0: '', 1: '    ', 2: ' '.join(t[:k - 1]), 3: ' '.join(t[:k]),
+             4: ' '.join(t[:k + 1]), 5: ' '.join(t[:k] * 3),
+             6: '  ' + ' '.join(t[2:k + 4]) + '  '}
+    bench = {100: ' '.join(t), 101: ' '.join(t[:k - 1]), 102: '   '}
+
+    def grams(text):
+        ws = text.split()
+        return {hashlib.md5(' '.join(ws[i:i + k]).encode()).hexdigest()[:15]
+                for i in range(len(ws) - k + 1)}
+
+    bench_grams = set().union(*map(grams, bench.values()))
+    df = spark.createDataFrame(list(texts.items()),
+                               'doc_id long, text string')
+    bdf = spark.createDataFrame(list(bench.items()),
+                                'doc_id long, text string')
+    got = {r.doc_id: r.n_gram_hits
+           for r in decontaminate(df, bdf).collect()}
+    want = {d: len(grams(x) & bench_grams) for d, x in texts.items()}
+    assert got == want
+    assert want[3] == want[5] == 1 and want[4] == 2 and want[6] == 3
+
+
+def test_decontaminate_plan_has_no_hof(spark):
+    """decontaminate explodes gram offsets and hashes each gram per row,
+    so its executed plan holds no higher-order function: no array
+    builder is pasted into the filter the optimizer infers for an
+    exploded array attribute"""
+    from pyspark.sql import functions as F
+    from pyxml_spark.pipeline.curate import decontaminate
+    docs = spark.read.parquet(f'{SF_DIR}/documents.parquet')
+    with sql_plans(spark) as plans:
+        decontaminate(docs.where(F.col('doc_id') % 50 != 0),
+                      docs.where(F.col('doc_id') % 50 == 0)).collect()
+    assert any('Generate' in p for p in plans.values())
+    assert not any('transform(' in p for p in plans.values())
+
+
+def test_mixture_copies_hashes_once(spark):
+    """mixture_copies posexplodes the array_repeat expression itself, so
+    the executed plan hashes each row id once (a staged array attribute
+    put a second md5 into the inferred Generate filter)"""
+    from pyspark.sql import functions as F
+    from pyxml_spark.pipeline.curate import mixture_copies
+    docs = spark.read.parquet(f'{SF_DIR}/documents.parquet')
+    with sql_plans(spark) as plans:
+        mixture_copies(docs, F.lit(1), F.lit(30000)).collect()
+    (plan,) = plans.values()
+    assert plan.count('md5(') == 1, plan.count('md5(')
 
 
 def _curate_runner(run_job, out):

@@ -9,6 +9,8 @@ direct pair.
 """
 import pytest
 
+from tests.conftest import sql_plans
+
 pyspark = pytest.importorskip('pyspark')
 
 SF_DIR = '/root/testdata/sf0.001'
@@ -193,6 +195,19 @@ def test_spark_pipeline_matches_python_model(spark):
         assert got_pairs == want_pairs, f'case {case}'
 
 
+def test_minhash_bands_aggregate_once(spark):
+    """the executed plan runs the 64-wide minima aggregate once per row:
+    exploding the literal band ids instead of an array attribute leaves
+    the optimizer no inferred Generate filter to paste the aggregate into
+    (the attribute form's plan held it 65 times)"""
+    from pyxml_spark.pipeline.dedup import minhash_bands, token_sets
+    docs = spark.read.parquet(f'{SF_DIR}/documents.parquet')
+    with sql_plans(spark) as plans:
+        minhash_bands(token_sets(docs)).collect()
+    (plan,) = plans.values()
+    assert plan.count('aggregate(') == 1, plan.count('aggregate(')
+
+
 def test_hot_bucket_no_single_task_sort(spark):
     """r2 VERDICT watch item: a degenerate bucket (half the corpus
     identical, so one band key holds them all in every band — well over
@@ -246,19 +261,43 @@ def test_small_mixed_bucket_keeps_full_pairing(spark):
     assert got == {(0, 1), (0, 13), (1, 13)}, got
 
 
+def _model_rounds(n_nodes, pairs) -> int:
+    """rounds dup_components runs: min-label propagation plus one
+    pointer-doubling shortcut per round, until the label sum is stable"""
+    label = list(range(n_nodes))
+    prev = sum(label)
+    rounds = 0
+    while True:
+        rounds += 1
+        new = list(label)
+        for a, b in pairs:
+            new[b] = min(new[b], label[a])
+            new[a] = min(new[a], label[b])
+        label = [min(lb, new[lb]) for lb in new]
+        if sum(label) == prev:
+            return rounds
+        prev = sum(label)
+
+
 def test_chain_component_converges_fast(spark):
     """pointer doubling: a 512-node path graph (the shape a degenerate
     bucket's rank-window pairs produce) must converge well inside a small
     round budget — plain min-propagation would need ~512 rounds (the r2
-    silent-truncation defect flagged in ADVICE)"""
+    silent-truncation defect flagged in ADVICE). The convergence witness
+    rides each round's eager checkpoint as an observation: the call runs
+    one SQL execution per round of the model, plus the edge and
+    initial-label checkpoints."""
     from pyxml_spark.pipeline.dedup import dup_components
     n = 512
+    edges = [(d, d + 1) for d in range(n - 1)]
     toks = spark.createDataFrame([(d,) for d in range(n)], 'doc_id long')
-    pairs = spark.createDataFrame([(d, d + 1) for d in range(n - 1)],
-                                  'doc_a long, doc_b long')
-    got = {r.doc_id: r.keeper for r in
-           dup_components(toks, pairs, max_iters=16).collect()}
+    pairs = spark.createDataFrame(edges, 'doc_a long, doc_b long')
+    with sql_plans(spark) as plans:
+        comps = dup_components(toks, pairs, max_iters=16)
+    got = {r.doc_id: r.keeper for r in comps.collect()}
     assert got == {d: 0 for d in range(n)}
+    rounds = _model_rounds(n, edges)
+    assert len(plans) == rounds + 2, (len(plans), rounds)
 
 
 def test_nonconvergence_raises(spark):

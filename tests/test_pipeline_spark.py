@@ -9,7 +9,7 @@ import re
 
 import pytest
 
-from tests.conftest import has_reference, restored_conf
+from tests.conftest import has_reference, restored_conf, sql_plans
 
 pyspark = pytest.importorskip('pyspark')
 
@@ -138,14 +138,6 @@ def test_resume_leaves_session_conf(spark, turns_pdf, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
-def _sql_plans(spark) -> dict:
-    """{execution id: executed plan} from the session's SQL status store,
-    once every queued listener event has reached it"""
-    from perfbench.child import execution_plans
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return {i: plan for i, _, plan in execution_plans(spark)}
-
-
 def _write_exchanges(plans: dict) -> list:
     """the arguments of every shuffle Exchange in the final plan of the
     data write (the execution running the Arrow kernel)"""
@@ -183,10 +175,8 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
              ([], [], 0)]
     done = 0
     for extra, run_buckets, remaining in calls:
-        before = _sql_plans(spark).keys()
-        rc, got = run_job(main, argv + extra)
-        plans = {i: p for i, p in _sql_plans(spark).items()
-                 if i not in before}
+        with sql_plans(spark) as plans:
+            rc, got = run_job(main, argv + extra)
         assert rc == 0
         assert got['buckets_done'] == done
         assert got['buckets_run'] == len(run_buckets)
