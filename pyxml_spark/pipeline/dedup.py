@@ -340,10 +340,14 @@ def incremental_candidate_pairs(new_bands: DataFrame,
     would merge two non-duplicate components.
 
     Scale shape, in order:
-    (1) the shard's distinct band keys broadcast into the index scan
-        (``broadcast_keys=True``, the daily-shard case; pass False for a
-        bulk backfill and AQE plans the equi-join) so the corpus-sized
-        side is FILTERED AT THE SCAN to only buckets the shard hits;
+    (1) the shard's distinct band keys broadcast into a join with the
+        index (``broadcast_keys=True``, the daily-shard case; pass False
+        for a bulk backfill and AQE plans the equi-join), so only index
+        rows in buckets the shard hits survive — the join filters them,
+        the scan still reads the whole index. These ``hits`` feed both the
+        bucket sizes and the member links, so they are materialized once
+        by an eager local checkpoint (one Spark execution at call time,
+        as each dup_components round is) and the index is scanned once;
     (2) bucket linking mirrors candidate_pairs' two regimes:
         * small buckets (<= hot_threshold surviving members): the new
           doc links to EVERY existing member — a single-rep link could
@@ -367,7 +371,8 @@ def incremental_candidate_pairs(new_bands: DataFrame,
     the signature job per reference (the round-3 bands.parquet lesson)."""
     keys = new_bands.select('band_id', 'band_key').distinct()
     keys_side = F.broadcast(keys) if broadcast_keys else keys
-    hits = index_bands.join(keys_side, ['band_id', 'band_key'])
+    hits = (index_bands.join(keys_side, ['band_id', 'band_key'])
+            .localCheckpoint(eager=True))
     sizes = hits.groupBy('band_id', 'band_key').agg(
         F.count('*').alias('_bsz'))
     hot = (sizes.where(F.col('_bsz') > hot_threshold)

@@ -19,6 +19,8 @@ Scale design (SURVEY.md §2-F / §4):
 """
 from __future__ import annotations
 
+from array import array
+from itertools import accumulate
 from typing import Optional
 
 from .gather import gather_document
@@ -69,12 +71,42 @@ def extract_payload(payload: Optional[str],
                 n_text_chars=n_text_chars)
 
 
+def _int32_array(values):
+    """non-null int32 Arrow array over one ``array('i')`` copy of
+    ``values``"""
+    import pyarrow as pa
+    buf = array('i', values)
+    return pa.Array.from_buffers(pa.int32(), len(buf),
+                                 [None, pa.py_buffer(buf)])
+
+
+def _string_array(values):
+    """utf8 Arrow array from the encoded values and their int32 offsets;
+    a validity bitmap is built only when a ``None`` is present"""
+    import pyarrow as pa
+    n = len(values)
+    data = [b'' if v is None else v.encode() for v in values]
+    offsets = array('i', accumulate(map(len, data), initial=0))
+    validity, null_count = None, 0
+    if None in values:
+        import numpy as np
+        valid = np.fromiter((v is not None for v in values), bool, n)
+        validity = pa.py_buffer(np.packbits(valid, bitorder='little'))
+        null_count = n - int(valid.sum())
+    return pa.Array.from_buffers(
+        pa.string(), n,
+        [validity, pa.py_buffer(offsets), pa.py_buffer(b''.join(data))],
+        null_count)
+
+
 def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
     """mapInArrow kernel: pyarrow RecordBatch in/out, no pandas layer.
 
-    Input strings come out once via ``to_pylist`` and results go back as
-    arrays built directly, so no Arrow->pandas->Arrow copy is paid per
-    batch.
+    Input strings come out once via ``to_pylist``; every output array is
+    built from buffers (:func:`_int32_array`, :func:`_string_array`), so no
+    Arrow->pandas->Arrow copy is paid per batch and the worker never loads
+    pandas: pyarrow 16 imports it the first time ``pa.array`` converts a
+    python list, about 35 MB per worker.
     """
     import pyarrow as pa
 
@@ -107,18 +139,18 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
                 ends.append(e)
             offsets[i + 1] = len(starts)
         span_struct = pa.StructArray.from_arrays(
-            [pa.array(starts, pa.int32()), pa.array(ends, pa.int32())],
+            [_int32_array(starts), _int32_array(ends)],
             names=['start', 'end'])
-        span_arr = pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()), span_struct)
+        span_arr = pa.ListArray.from_arrays(_int32_array(offsets),
+                                            span_struct)
         yield pa.RecordBatch.from_arrays(
             [conv, turn,
-             pa.array(main_text, pa.string()),
+             _string_array(main_text),
              span_arr,
-             pa.array(perr, pa.string()),
-             pa.array(nodes, pa.int32()),
-             pa.array(chars, pa.int32()),
-             pa.array(raw, pa.int32())],
+             _string_array(perr),
+             _int32_array(nodes),
+             _int32_array(chars),
+             _int32_array(raw)],
             names=['conv_id', 'turn_idx', 'main_text', 'spans',
                    'parse_error', 'n_nodes', 'n_text_chars',
                    'n_raw_chars'])

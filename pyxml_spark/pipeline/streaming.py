@@ -13,6 +13,8 @@ the sink checkpoint, complementing the batch-side bucket manifest.
 """
 from __future__ import annotations
 
+import glob
+import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -186,8 +188,9 @@ def idempotent_batch_writer(output_path: str):
     be idempotent BY ``batch_id``. This writer makes any such landing
     idempotent with the classic two-step: (1) ``overwrite`` the
     batch-addressed directory (a crash mid-write is healed by the
-    re-delivery overwriting the partial output), (2) drop a _COMMITTED
-    marker last; a re-delivered batch that finds its marker is skipped
+    re-delivery overwriting the partial output), (2) publish a _COMMITTED
+    marker last (:func:`_publish_marker`: data fsynced, marker renamed
+    into place); a re-delivered batch that finds its marker is skipped
     without touching files. Returned function is what
     ``writeStream.foreachBatch`` expects.
 
@@ -196,18 +199,46 @@ def idempotent_batch_writer(output_path: str):
     os.path — on a cluster whose sink is an object store, swap the
     marker existence check for the Hadoop FileSystem API; the two-step
     protocol itself is storage-agnostic."""
-    import os
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         dest = os.path.join(output_path, f'batch={batch_id}')
-        marker = os.path.join(dest, '_COMMITTED')
-        if os.path.exists(marker):
+        if os.path.exists(os.path.join(dest, '_COMMITTED')):
             return  # re-delivered after a sink-write/ckpt-commit crash
         df.write.mode('overwrite').parquet(dest)
-        with open(marker, 'w'):
-            pass
+        _publish_marker(dest)
 
     return write_batch
+
+
+def _fsync(path: str) -> None:
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
+def _publish_marker(dest: str) -> None:
+    """crash-honest _COMMITTED: the batch's data files reach the disk
+    first, then the marker is written to a temp name, fsynced and renamed
+    into place, and the directory entry is fsynced — so no marker can
+    outlive the data it vouches for, and none is ever seen half-written
+    (Spark's reader skips the ``_``-prefixed temp name)"""
+    for name in os.listdir(dest):
+        path = os.path.join(dest, name)
+        if os.path.isfile(path):
+            _fsync(path)
+    tmp = os.path.join(dest, '_COMMITTED.tmp')
+    with open(tmp, 'w') as fh:
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(dest, '_COMMITTED'))
+    _fsync(dest)
+
+
+def _committed_batch_dirs(output_path: str) -> list:
+    return sorted(
+        d for d in glob.glob(os.path.join(output_path, 'batch=*'))
+        if os.path.exists(os.path.join(d, '_COMMITTED')))
 
 
 def read_committed_batches(spark: SparkSession,
@@ -218,11 +249,7 @@ def read_committed_batches(spark: SparkSession,
     writer exists for (driver died mid df.write, healing re-run not yet
     landed) — partial rows now, the same rows again after the heal.
     Raises if nothing is committed yet rather than inventing a schema."""
-    import glob
-    import os
-    committed = sorted(
-        d for d in glob.glob(os.path.join(output_path, 'batch=*'))
-        if os.path.exists(os.path.join(d, '_COMMITTED')))
+    committed = _committed_batch_dirs(output_path)
     if not committed:
         raise FileNotFoundError(
             f'no committed batch directories under {output_path}')
@@ -237,7 +264,21 @@ def run_idempotent_batch_sink(spark: SparkSession, input_path: str,
     (availableNow drain). Read the result back with
     :func:`read_committed_batches` — a half-written, marker-less batch
     dir from a crashed run must stay invisible until its re-delivery
-    heals it."""
+    heals it.
+
+    Raises ``FileExistsError`` when the checkpoint is fresh (no offset
+    logged yet) but ``output_path`` already holds committed batches: the
+    new query's batch ids restart at 0, so their markers would silently
+    skip the new data."""
+    offsets = os.path.join(checkpoint_path, 'offsets')
+    fresh = not (os.path.isdir(offsets)
+                 and any(n.isdigit() for n in os.listdir(offsets)))
+    if fresh and _committed_batch_dirs(output_path):
+        raise FileExistsError(
+            f'{output_path} holds committed batches but checkpoint '
+            f'{checkpoint_path} is fresh: its batch ids restart at 0 and '
+            f'would be skipped as already committed; resume from the '
+            f'checkpoint that wrote them or land in a new output path')
     out = extract_stream(
         read_transcripts_stream(spark, input_path, max_files_per_trigger),
         config)

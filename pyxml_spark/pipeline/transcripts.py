@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import datetime as dt
 import random
-from typing import Iterator, List, Tuple
+from typing import TYPE_CHECKING, Iterator, List, Tuple
 
-import pandas as pd
+if TYPE_CHECKING:
+    import pandas as pd
 
 __all__ = ['gen_payload', 'gen_transcripts_pdf', 'transcripts_df',
            'write_transcripts']
@@ -86,8 +87,13 @@ def _conv_lengths(rng: random.Random, n_convs: int,
     return out
 
 
-def gen_transcripts_pdf(n_rows: int, seed: int = 42) -> pd.DataFrame:
-    """deterministic pandas transcripts table with ~n_rows rows"""
+def gen_transcripts_pdf(n_rows: int, seed: int = 42) -> 'pd.DataFrame':
+    """deterministic pandas transcripts table with ~n_rows rows (pandas is
+    imported here, not with the module: the package ``__init__`` re-exports
+    this generator, and the kernel workers that import the package must not
+    load pandas)"""
+    import pandas as pd
+
     rng = random.Random(seed)
     rows: List[Tuple] = []
     conv = 0

@@ -8,7 +8,7 @@ cycle to cancel monotone drift), takes best-of per tree, and reports the
 within-window ratio — the only comparison that survives the throttle.
 
 Usage:
-    python3 scripts/ab_trees.py [--cycles 4] [--cpus 32] \
+    python3 scripts/ab_trees.py [--cycles 4] [--cpus N] \
         [--ref-commit 91c74a3] [--out BENCH/AB_R5_VS_R3.md]
 
 The ref tree is materialized as a detached git worktree under /tmp (same
@@ -29,12 +29,18 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get('SPARK_GRAFT_SF_DIR', '/root/testdata/sf0.1')
 
 
+def usable_cpus() -> int:
+    """cores this process may run on: the default parallelism, so the A/B
+    never oversubscribes the box"""
+    return len(os.sched_getaffinity(0))
+
+
 def runner() -> int:
     """executed in a subprocess with AB_TREE pointing at the tree to time"""
     tree = os.environ['AB_TREE']
     sys.path.insert(0, tree)
     os.chdir(tree)
-    cpus = int(os.environ.get('AB_CPUS', '32'))
+    cpus = int(os.environ.get('AB_CPUS', str(usable_cpus())))
     # bench.py is byte-identical in both trees (verified: git diff empty),
     # so importing it from the tree keeps session config exactly equal
     import bench
@@ -97,7 +103,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument('--runner', action='store_true')
     ap.add_argument('--cycles', type=int, default=4)
-    ap.add_argument('--cpus', type=int, default=32)
+    ap.add_argument('--cpus', type=int, default=usable_cpus())
     ap.add_argument('--ref-commit', default='91c74a3')
     ap.add_argument('--out', default=os.path.join(REPO, 'BENCH',
                                                   'AB_R5_VS_R3.md'))

@@ -480,12 +480,20 @@ def main() -> int:
     # incremental dedup: the shard's key set broadcasts into the index
     # side; bucket sizing and hot-bucket reps are AGGREGATES — no Window
     # operator anywhere (a hot bucket must never become one task's
-    # sort), no cartesian
+    # sort), no cartesian. The key join runs in the eager checkpoint of
+    # its hits at call time, so its executed plan leads the section.
+    from perfbench.child import execution_plans
     from pyxml_spark.pipeline.dedup import (incremental_candidate_pairs,
                                             minhash_bands, token_sets)
     di_nb = minhash_bands(token_sets(docs.where(F.col('doc_id') % 10 == 0)))
     di_ib = minhash_bands(token_sets(docs.where(F.col('doc_id') % 10 != 0)))
-    di_plan = plan_of(incremental_candidate_pairs(di_nb, di_ib))
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = max((i for i, _, _ in execution_plans(spark)), default=-1)
+    di = incremental_candidate_pairs(di_nb, di_ib)
+    bus.waitUntilEmpty()
+    (hits_plan,) = [p for _, _, p in execution_plans(spark, before)]
+    di_plan = hits_plan + '\n' + plan_of(di)
     sections.append(('dedup_incremental', di_plan))
     checks.append(('dedup_incremental',
                    'broadcast key filter, aggregate reps, no Window',

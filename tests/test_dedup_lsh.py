@@ -382,6 +382,34 @@ def test_incremental_pairs_link_and_verify(spark):
         {(r.doc_a, r.doc_b) for r in links}
 
 
+def test_incremental_pairs_scan_index_once(spark, tmp_path):
+    """the hits of the broadcast key join feed both the bucket sizes and
+    the member links; they are materialized once, so across every SQL
+    execution the call runs the persisted index is scanned once (the lazy
+    form scanned it once per consumer: three times)"""
+    from pyxml_spark.pipeline.dedup import (incremental_candidate_pairs,
+                                            minhash_bands, token_sets)
+    base = ('alpha beta gamma delta epsilon zeta eta theta iota kappa '
+            'lam mu nu xi omicron pi rho sigma tau upsilon')
+    corpus = [(i, f'{base} w{i % 3}') for i in range(1, 30)]
+    shard = [(100, base), (200, 'nothing shared with the corpus here')]
+    path = str(tmp_path / 'index')
+    minhash_bands(token_sets(spark.createDataFrame(
+        corpus, 'doc_id long, text string'))).write.parquet(path)
+    index = spark.read.parquet(path)
+    nb = minhash_bands(token_sets(spark.createDataFrame(
+        shard, 'doc_id long, text string')))
+    with sql_plans(spark) as plans:
+        links = incremental_candidate_pairs(nb, index,
+                                            hot_threshold=3).collect()
+    assert {r.doc_a for r in links} == {100}
+    # the tree of each executed (AQE: current) plan; the shard side is an
+    # in-memory relation, so every parquet scan reads the index
+    scans = sum(plan.split('== Initial Plan ==')[0].split('\n\n')[0]
+                .count('Scan parquet ') for plan in plans.values())
+    assert scans == 1, scans
+
+
 def test_incremental_pairs_hot_bucket_caps_fanout(spark):
     """hot-bucket regime: 40 near-identical existing docs in one logical
     bucket with hot_threshold=3 must NOT fan a single new doc into 40

@@ -161,6 +161,72 @@ def test_idempotent_batch_sink_exactly_once(spark, tmp_path):
     assert read_committed_batches(spark, out).count() == len(pdf) + 100
 
 
+def test_idempotent_marker_published_durably(spark, tmp_path, monkeypatch):
+    """the _COMMITTED marker is crash-honest: it is written under a temp
+    name, fsynced, and renamed into place by ``os.replace`` — with the
+    batch's data fsynced before the rename and the directory after it —
+    so no crash can leave a marker over unflushed or half-written data"""
+    from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA, gen_transcripts_pdf
+    from pyxml_spark.pipeline.streaming import idempotent_batch_writer
+
+    df = spark.createDataFrame(gen_transcripts_pdf(20, seed=5),
+                               schema=TRANSCRIPTS_SCHEMA)
+    out = str(tmp_path / 'out')
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        calls.append(('fsync', os.readlink(f'/proc/self/fd/{fd}')))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        calls.append(('replace', src, dst))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, 'fsync', fsync)
+    monkeypatch.setattr(os, 'replace', replace)
+    idempotent_batch_writer(out)(df, 0)
+    monkeypatch.undo()
+
+    dest = os.path.join(out, 'batch=0')
+    marker = os.path.join(dest, '_COMMITTED')
+    replaces = [i for i, c in enumerate(calls) if c[0] == 'replace']
+    assert len(replaces) == 1, calls
+    (i,) = replaces
+    _, tmp, dst = calls[i]
+    assert dst == marker and tmp != marker
+    before = {c[1] for c in calls[:i]}
+    data = {os.path.join(dest, f) for f in os.listdir(dest)
+            if f.startswith('part-')}
+    assert data and data <= before, (data, before)
+    assert tmp in before  # the temp marker itself was flushed
+    assert ('fsync', dest) in calls[i + 1:]
+    assert os.path.exists(marker) and not os.path.exists(tmp)
+
+
+def test_fresh_checkpoint_over_committed_output_raises(spark, tmp_path):
+    """a fresh checkpoint restarts batch ids at 0; over an output that
+    already holds committed batch dirs, every new batch would find a
+    marker and be skipped — the sink must raise instead, leaving the
+    committed output untouched"""
+    import glob
+
+    from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA, gen_transcripts_pdf
+    from pyxml_spark.pipeline.streaming import run_idempotent_batch_sink
+
+    inp = str(tmp_path / 'in')
+    out = str(tmp_path / 'out')
+    spark.createDataFrame(gen_transcripts_pdf(60, seed=17),
+                          schema=TRANSCRIPTS_SCHEMA).write.parquet(inp)
+    run_idempotent_batch_sink(spark, inp, out, str(tmp_path / 'ckpt1'))
+    before = sorted(glob.glob(f'{out}/**/*', recursive=True))
+    assert any(p.endswith('_COMMITTED') for p in before)
+    with pytest.raises(FileExistsError, match='fresh'):
+        run_idempotent_batch_sink(spark, inp, out, str(tmp_path / 'ckpt2'))
+    assert sorted(glob.glob(f'{out}/**/*', recursive=True)) == before
+    assert not os.path.exists(tmp_path / 'ckpt2')
+
+
 def test_streaming_rollup_plan(spark, tmp_path):
     """watermarked windowed agg builds a valid incremental plan"""
     from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA, gen_transcripts_pdf
