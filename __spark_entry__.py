@@ -1213,21 +1213,29 @@ def q_bucketed_join(spark, sf_dir) -> DataFrame:
     fact-fact join on the bucket key is Exchange-free. Tables are
     EXTERNAL (explicit path under the staging dir) so the shared session
     catalog entry never owns repo-local warehouse files."""
+    import uuid
     from pyxml_spark.pipeline.curate import token_count
     docs = _table(spark, sf_dir, 'documents')
     tmp = _staging_dir('pyxml_bucketed_')
-    spark.sql('DROP TABLE IF EXISTS bj_docs')
-    spark.sql('DROP TABLE IF EXISTS bj_stats')
+    # per-call table names, dropped once the join is resolved: the resolved
+    # plan holds both relations (files and bucket specs), and dropping an
+    # EXTERNAL table keeps its files, so the returned frame outlives the
+    # catalog entries and a later call cannot replace them under it
+    run = uuid.uuid4().hex[:12]
+    tables = (f'bj_docs_{run}', f'bj_stats_{run}')
     (docs.select('doc_id', 'source', 'n_chars')
      .write.mode('overwrite').bucketBy(8, 'doc_id').sortBy('doc_id')
-     .option('path', f'{tmp}/docs').saveAsTable('bj_docs'))
+     .option('path', f'{tmp}/docs').saveAsTable(tables[0]))
     (docs.select('doc_id', token_count('text').alias('n_tokens'))
      .write.mode('overwrite').bucketBy(8, 'doc_id').sortBy('doc_id')
-     .option('path', f'{tmp}/stats').saveAsTable('bj_stats'))
-    j = spark.table('bj_docs').join(spark.table('bj_stats'), 'doc_id')
-    return j.select('doc_id', 'source',
-                    F.col('n_chars').cast('long').alias('n_chars'),
-                    'n_tokens')
+     .option('path', f'{tmp}/stats').saveAsTable(tables[1]))
+    j = spark.table(tables[0]).join(spark.table(tables[1]), 'doc_id')
+    out = j.select('doc_id', 'source',
+                   F.col('n_chars').cast('long').alias('n_chars'),
+                   'n_tokens')
+    for name in tables:
+        spark.sql(f'DROP TABLE {name}')
+    return out
 
 
 def q_schema_evolve_union(spark, sf_dir) -> DataFrame:

@@ -41,6 +41,13 @@ def build_session(cpus: int, app: str = 'pyxml-spark-extract',
             .config('spark.sql.execution.arrow.maxBytesPerBatch',
                     str(64 * 1024 * 1024))
             .config('spark.ui.enabled', 'false')
+            # past 32 directories Spark lists a file tree with a job of one
+            # task per directory (1.1 s for the 64 bucket directories the
+            # resume read-back lists); in a local session those tasks run
+            # in this JVM, which lists a local tree by itself in
+            # milliseconds
+            .config('spark.sql.sources.parallelPartitionDiscovery.threshold',
+                    str(2 ** 31 - 1))
             .getOrCreate())
 
 

@@ -2,7 +2,8 @@
 assert the scale-critical properties:
 
 * parquet scans push filters (PushedFilters) and prune columns (ReadSchema);
-* the resume anti-join broadcasts the small side;
+* the resume job's pending turns are a bucket IN filter of literals: no
+  join, no shuffle and no frame built from a Python list;
 * relational glue runs in WholeStageCodegen;
 * the extraction stage is a single Exchange (the salted repartition) feeding
   one ArrowEvalPython/MapInArrow stage — no extra shuffles;
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -38,7 +40,7 @@ def main() -> int:
     from pyspark.sql import functions as F
     from bench import build_session
     from pyxml_spark.pipeline import extract_turns, with_bucket
-    from pyxml_spark.pipeline.resume import extract_buckets
+    from pyxml_spark.pipeline.resume import extract_buckets, pending_turns
 
     spark = build_session(8)
     spark.sparkContext.setLogLevel('ERROR')
@@ -60,14 +62,23 @@ def main() -> int:
         must_contain=['PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)]',
                       'ReadSchema: struct<doc_id:bigint,source:string>'])
 
-    # 2. resume anti-join broadcasts the completed-bucket side
-    done = spark.createDataFrame([(i,) for i in range(8)], 'bucket int')
-    pending = with_bucket(docs.withColumnRenamed('doc_id', 'conv_id_long')
-                          .withColumn('conv_id', F.col('conv_id_long')
-                                      .cast('string')), 64) \
-        .join(F.broadcast(done), on='bucket', how='left_anti')
-    add('resume_broadcast_antijoin', pending,
-        must_contain=['BroadcastHashJoin', 'LeftAnti'])
+    # 2. the resume job's pending turns (the frame run_with_resume writes
+    # from): the done buckets are a NOT IN filter of literals on the bucket
+    # hash, with no join, no exchange and no frame built from a Python list
+    pending = pending_turns(
+        with_bucket(docs.withColumnRenamed('doc_id', 'conv_id_long')
+                    .withColumn('conv_id', F.col('conv_id_long')
+                                .cast('string')), 64), list(range(8)))
+    rp_plan = plan_of(pending)
+    sections.append(('resume_pending_filter', rp_plan))
+    checks.append(('resume_pending_filter',
+                   'NOT In/InSet filter on the bucket hash',
+                   re.search(r'Condition : NOT pmod\(hash\(.*\), 64\) '
+                             r'(IN \(|INSET )', rp_plan) is not None))
+    checks.append(('resume_pending_filter',
+                   'no join, no Exchange, no Scan ExistingRDD',
+                   'Join' not in rp_plan and ') Exchange' not in rp_plan
+                   and 'Scan ExistingRDD' not in rp_plan))
 
     # 3. extraction: exactly one exchange (salted repartition) + arrow stage
     turns = spark.createDataFrame(
@@ -465,14 +476,13 @@ def main() -> int:
     # composed curation row: after staging, the only non-equi join left
     # is the prefix scan's documented ONE-ROW broadcast stats join —
     # cross with a 1-row side, not a data-x-data cartesian
-    import re as _re
     cp_plan = plan_of(entry.q_curate_pipeline(spark, sf_dir))
     sections.append(('curate_pipeline', cp_plan))
     # formatted explain prints each operator twice (tree + details);
     # count distinct operator ids, and the only BNLJs allowed are the
     # prefix scan's two 1-row stats broadcasts
-    n_bnlj = len(_re.findall(r'^\(\d+\) BroadcastNestedLoopJoin',
-                             cp_plan, _re.M))
+    n_bnlj = len(re.findall(r'^\(\d+\) BroadcastNestedLoopJoin',
+                            cp_plan, re.M))
     checks.append(('curate_pipeline',
                    'staged stages; no cartesian (1-row stats BNLJ only)',
                    'CartesianProduct' not in cp_plan and n_bnlj <= 2))

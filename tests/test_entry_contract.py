@@ -61,3 +61,18 @@ def test_curation_row_matches_oracle(spark, duck, name):
     from scripts.check_contract import check_query
     status, report = check_query(spark, duck, entry.DEFAULT_SF_DIR, name)
     assert status == 'OK', report
+
+
+def test_bucketed_join_calls_do_not_interfere(spark, duck):
+    """each q_bucketed_join call writes its own tables and drops them once
+    its frame is resolved: two frames built before either runs both match
+    the oracle, and no ``bj_*`` table is left in the session catalog"""
+    from scripts.check_contract import normalize
+    first = entry.q_bucketed_join(spark, entry.DEFAULT_SF_DIR)
+    second = entry.q_bucketed_join(spark, entry.DEFAULT_SF_DIR)
+    assert [t.name for t in spark.catalog.listTables()
+            if t.name.startswith('bj_')] == []
+    rel = duck.sql(entry.oracle_sql()['bucketed_join'])
+    want = normalize(list(rel.columns), [tuple(r) for r in rel.fetchall()])
+    for df in (first, second):
+        assert normalize(df.columns, [tuple(r) for r in df.collect()]) == want

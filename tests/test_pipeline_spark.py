@@ -155,7 +155,10 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
     this run's counts and the whole output's totals, manifest one done row
     per written bucket, and the data write runs the Arrow kernel and the
     (conv_id, turn_idx) output sort behind one range exchange on bucket.
-    An uncapped call runs at most four SQL executions."""
+    No call builds a frame from a Python list (``Scan ExistingRDD``), an
+    uncapped call runs at most three SQL executions and the no-op rerun,
+    capped or not, at most two: it writes nothing and returns the same
+    totals."""
     from perfbench.child import extraction_plan_ok
     from pyxml_spark.jobs.extract import main
     from pyxml_spark.pipeline import (MANIFEST_SCHEMA, TRANSCRIPTS_SCHEMA,
@@ -172,8 +175,10 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
 
     calls = [(['--max-buckets', '3'], buckets[:3], len(buckets) - 3),
              ([], buckets[3:], 0),
-             ([], [], 0)]
+             ([], [], 0),
+             (['--max-buckets', '3'], [], 0)]
     done = 0
+    noops = []
     for extra, run_buckets, remaining in calls:
         with sql_plans(spark) as plans:
             rc, got = run_job(main, argv + extra)
@@ -198,10 +203,52 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
             assert extraction_plan_ok([(i, '', p) for i, p in plans.items()])
             (exchange,) = _write_exchanges(plans)
             assert exchange.startswith('rangepartitioning(bucket#'), exchange
-        if not extra:
-            assert len(plans) <= 4, sorted(plans)
+        assert not any('Scan ExistingRDD' in p for p in plans.values())
+        if not run_buckets:
+            assert len(plans) <= 2, sorted(plans)
+            noops.append({k: v for k, v in got.items() if k not in (
+                'run_id', 'wall_seconds', 'throughput_rows_per_s')})
+        elif not extra:
+            assert len(plans) <= 3, sorted(plans)
     assert done == len(buckets)
+    assert noops[0] == noops[1]
     assert sum(r.rows_in for r in manifest) == len(turns_pdf)
+
+
+def test_extract_job_first_call_plans(spark, tmp_path, run_job):
+    """a first uncapped call on a fresh manifest path plans no frame of
+    Python rows (``Scan ExistingRDD``: the empty done set and its
+    broadcast each ran a job of Python tasks), runs at most three SQL
+    executions, and its local session lists the 64 bucket directories of
+    the read-back without a Spark listing job"""
+    from pyspark.sql import functions as F
+    from pyxml_spark.jobs.extract import main
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    spark.range(400).select(
+        F.concat(F.lit('conv-'), F.col('id')).alias('conv_id'),
+        F.lit(0).alias('turn_idx'), F.lit('user').alias('role'),
+        F.concat(F.lit('<p>turn '), F.col('id'), F.lit('</p>'))
+        .alias('text'),
+        F.lit(None).cast('string').alias('tool'),
+        F.lit(None).cast('timestamp').alias('ts')).write.parquet(inp)
+    sc = spark.sparkContext
+    sc.setJobGroup('first-call', 'first uncapped extraction call')
+    try:
+        with sql_plans(spark) as plans:
+            rc, got = run_job(main, ['--input', inp, '--output', out,
+                                     '--buckets', '64', '--cpus', '4'])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert rc == 0 and got['rows_this_run'] == 400
+    assert not any('Scan ExistingRDD' in p for p in plans.values())
+    assert len(plans) <= 3, sorted(plans)
+    store = sc._jsc.sc().statusStore()
+    jobs = [store.job(j).description()
+            for j in sc.statusTracker().getJobIdsForGroup('first-call')]
+    assert len(_files_per_bucket(out)) > 32
+    assert not [d.get() for d in jobs
+                if d.isDefined() and d.get().startswith('Listing leaf')]
 
 
 def _run_job_uncoalesced(spark, run_job, df, tmp_path, buckets: int):
@@ -293,7 +340,7 @@ def test_resume_refuses_unreadable_manifest(spark, turns_pdf, tmp_path):
     # bucket counts as done
     os.remove(os.path.join(mf, 'part-00000.parquet'))
     os.makedirs(os.path.join(mf, '_temporary'))
-    assert completed_buckets(spark, mf).count() == 0
+    assert completed_buckets(spark, mf) == []
 
 
 def test_metrics_report(spark, turns_pdf):
