@@ -22,21 +22,18 @@ probing — pipeline/similarity.lsh_topk):
 
 Writes BENCH/ANN_SOAK_{n}.md + one stdout JSON line.
 
-Run: python3 scripts/ann_soak.py [--rows 1000000] [--cpus 16]
+Run: python3 scripts/ann_soak.py [--rows 1000000] [--cpus N] [--queries 8]
 """
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import run_soak, soak_parser, staged  # noqa: E402
 
 DIM = 64
 PLANTED_EVERY = 100  # vec_id % 100 == 1 is a twin of vec_id - 1
@@ -64,17 +61,9 @@ def synth_vecs(spark, n: int):
     return d.select('vec_id', v.alias('v'))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--queries', type=int, default=8)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     from pyspark.sql import functions as F
 
-    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.similarity import (_flip_masks,
                                                  add_lsh_signature,
                                                  brute_force_topk,
@@ -82,126 +71,120 @@ def main(argv=None) -> int:
 
     n = args.rows
     n_planes, n_tables, hamming = 16, 4, 1
-    spark = build_session(args.cpus, app='pyxml-spark-ann-soak')
-    tmp = tempfile.mkdtemp(prefix='pyxml_ann_soak_')
     walls = {}
-    try:
+    t0 = time.time()
+    vecs = staged(synth_vecs(spark, n).repartition(4 * args.cpus),
+                  f'{tmp}/vectors.parquet')
+    walls['synth'] = round(time.time() - t0, 1)
+
+    # index build: ONE signature pass over the corpus, persisted —
+    # the production shape (amortized across all queries)
+    t0 = time.time()
+    index = staged(build_lsh_index(vecs, n_planes, n_tables, dim=DIM),
+                   f'{tmp}/index.parquet')
+    walls['index_build'] = round(time.time() - t0, 1)
+
+    # probe-fraction accounting: per-table bucket occupancy histogram
+    # off the staged index
+    t0 = time.time()
+    occ = [{r['sig']: r['count'] for r in
+            index.groupBy(F.col(f'sig{t}').alias('sig')).count()
+            .collect()}
+           for t in range(n_tables)]
+    walls['bucket_histograms'] = round(time.time() - t0, 1)
+
+    # queries: planted-pair bases (twin = qid + 1 exists)
+    qids = [(i + 1) * PLANTED_EVERY for i in range(args.queries)]
+    masks = [0] + _flip_masks(n_planes, hamming)
+    twin_hits = 0
+    recall_hits = recall_total = 0
+    probe_fracs = []
+    ann_walls = []
+    bf_walls = []
+    for qid in qids:
+        q = vecs.where(F.col('vec_id') == qid) \
+            .select(F.col('v').alias('q'))
+        # probed fraction from the histograms (same sigs lsh_topk uses)
+        qsigs = [add_lsh_signature(q.withColumnRenamed('q', 'v'),
+                                   n_planes, out='qsig', dim=DIM,
+                                   table=t).first()['qsig']
+                 for t in range(n_tables)]
+        cand = sum(occ[t].get(qsigs[t] ^ m, 0)
+                   for t in range(n_tables) for m in masks)
+        probe_fracs.append(cand / n)
+
         t0 = time.time()
-        synth_vecs(spark, n).repartition(4 * args.cpus) \
-            .write.mode('overwrite').parquet(f'{tmp}/vectors.parquet')
-        vecs = spark.read.parquet(f'{tmp}/vectors.parquet')
-        walls['synth'] = round(time.time() - t0, 1)
-
-        # index build: ONE signature pass over the corpus, persisted —
-        # the production shape (amortized across all queries)
+        approx = [r.vec_id for r in
+                  lsh_topk(vecs, q, k=10, n_planes=n_planes,
+                           n_tables=n_tables, probe_hamming=hamming,
+                           dim=DIM, index=index).collect()]
+        ann_walls.append(time.time() - t0)
         t0 = time.time()
-        build_lsh_index(vecs, n_planes, n_tables, dim=DIM) \
-            .write.mode('overwrite').parquet(f'{tmp}/index.parquet')
-        index = spark.read.parquet(f'{tmp}/index.parquet')
-        walls['index_build'] = round(time.time() - t0, 1)
+        exact = [r.vec_id for r in
+                 brute_force_topk(vecs, q, k=10).collect()]
+        bf_walls.append(time.time() - t0)
 
-        # probe-fraction accounting: per-table bucket occupancy histogram
-        # off the staged index
-        t0 = time.time()
-        occ = [{r['sig']: r['count'] for r in
-                index.groupBy(F.col(f'sig{t}').alias('sig')).count()
-                .collect()}
-               for t in range(n_tables)]
-        walls['bucket_histograms'] = round(time.time() - t0, 1)
+        if qid + 1 in approx[:2]:
+            twin_hits += 1
+        recall_hits += len(set(exact) & set(approx))
+        recall_total += len(exact)
 
-        # queries: planted-pair bases (twin = qid + 1 exists)
-        qids = [(i + 1) * PLANTED_EVERY for i in range(args.queries)]
-        masks = [0] + _flip_masks(n_planes, hamming)
-        twin_hits = 0
-        recall_hits = recall_total = 0
-        probe_fracs = []
-        ann_walls = []
-        bf_walls = []
-        for qid in qids:
-            q = vecs.where(F.col('vec_id') == qid) \
-                .select(F.col('v').alias('q'))
-            # probed fraction from the histograms (same sigs lsh_topk uses)
-            qsigs = [add_lsh_signature(q.withColumnRenamed('q', 'v'),
-                                       n_planes, out='qsig', dim=DIM,
-                                       table=t).first()['qsig']
-                     for t in range(n_tables)]
-            cand = sum(occ[t].get(qsigs[t] ^ m, 0)
-                       for t in range(n_tables) for m in masks)
-            probe_fracs.append(cand / n)
+    walls['ann_queries'] = round(sum(ann_walls), 1)
+    walls['brute_force'] = round(sum(bf_walls), 1)
 
-            t0 = time.time()
-            approx = [r.vec_id for r in
-                      lsh_topk(vecs, q, k=10, n_planes=n_planes,
-                               n_tables=n_tables, probe_hamming=hamming,
-                               dim=DIM, index=index).collect()]
-            ann_walls.append(time.time() - t0)
-            t0 = time.time()
-            exact = [r.vec_id for r in
-                     brute_force_topk(vecs, q, k=10).collect()]
-            bf_walls.append(time.time() - t0)
+    # batched shape: ALL queries in one plan (lsh_topk_batch) vs a
+    # batched brute force (crossJoin + per-qid window). Single-query
+    # driver jobs pay fixed plan/codegen + full index/rerank IO per
+    # query; the batch amortizes both — this is the fan-out shape a
+    # cluster job uses.
+    from pyspark.sql.window import Window
+    from pyxml_spark.pipeline.similarity import (_cosine,
+                                                 lsh_topk_batch)
+    queries_df = (vecs.where(F.col('vec_id').isin(qids))
+                  .select(F.col('vec_id').alias('qid'),
+                          F.col('v').alias('q')))
+    t0 = time.time()
+    batch_rows = lsh_topk_batch(vecs, queries_df, k=10,
+                                n_planes=n_planes, n_tables=n_tables,
+                                probe_hamming=hamming, dim=DIM,
+                                index=index).collect()
+    walls['ann_batched'] = round(time.time() - t0, 1)
+    t0 = time.time()
+    w = Window.partitionBy('qid').orderBy(F.desc('cos_sim'),
+                                          F.asc('vec_id'))
+    bf_batch = (vecs.crossJoin(F.broadcast(queries_df))
+                .select('qid', 'vec_id',
+                        _cosine('v', 'q').alias('cos_sim'))
+                .withColumn('rnk', F.row_number().over(w))
+                .where(F.col('rnk') <= 10))
+    bf_batch_rows = bf_batch.collect()
+    walls['bf_batched'] = round(time.time() - t0, 1)
+    batch_twin_hits = sum(
+        1 for r in batch_rows
+        if r.qid + 1 == r.vec_id and r.rnk <= 2)
+    assert len(bf_batch_rows) == 10 * len(qids)
+    out = {
+        'rows': n, 'dim': DIM,
+        'n_planes': n_planes, 'n_tables': n_tables,
+        'probe_hamming': hamming,
+        'queries': len(qids),
+        'planted_twin_recall': round(twin_hits / len(qids), 4),
+        'recall_at_10_vs_exact': round(recall_hits / recall_total, 4),
+        'probe_frac_mean': round(sum(probe_fracs) / len(probe_fracs),
+                                 6),
+        'probe_frac_max': round(max(probe_fracs), 6),
+        'ann_s_per_query': round(sum(ann_walls) / len(ann_walls), 2),
+        'bf_s_per_query': round(sum(bf_walls) / len(bf_walls), 2),
+        'ann_batched_s_per_query': round(
+            walls['ann_batched'] / len(qids), 2),
+        'bf_batched_s_per_query': round(
+            walls['bf_batched'] / len(qids), 2),
+        'batch_twin_recall': round(batch_twin_hits / len(qids), 4),
+        'walls': walls,
+        'wall_total': round(sum(walls.values()), 1),
+    }
 
-            if qid + 1 in approx[:2]:
-                twin_hits += 1
-            recall_hits += len(set(exact) & set(approx))
-            recall_total += len(exact)
-
-        walls['ann_queries'] = round(sum(ann_walls), 1)
-        walls['brute_force'] = round(sum(bf_walls), 1)
-
-        # batched shape: ALL queries in one plan (lsh_topk_batch) vs a
-        # batched brute force (crossJoin + per-qid window). Single-query
-        # driver jobs pay fixed plan/codegen + full index/rerank IO per
-        # query; the batch amortizes both — this is the fan-out shape a
-        # cluster job uses.
-        from pyspark.sql.window import Window
-        from pyxml_spark.pipeline.similarity import (_cosine,
-                                                     lsh_topk_batch)
-        queries_df = (vecs.where(F.col('vec_id').isin(qids))
-                      .select(F.col('vec_id').alias('qid'),
-                              F.col('v').alias('q')))
-        t0 = time.time()
-        batch_rows = lsh_topk_batch(vecs, queries_df, k=10,
-                                    n_planes=n_planes, n_tables=n_tables,
-                                    probe_hamming=hamming, dim=DIM,
-                                    index=index).collect()
-        walls['ann_batched'] = round(time.time() - t0, 1)
-        t0 = time.time()
-        w = Window.partitionBy('qid').orderBy(F.desc('cos_sim'),
-                                              F.asc('vec_id'))
-        bf_batch = (vecs.crossJoin(F.broadcast(queries_df))
-                    .select('qid', 'vec_id',
-                            _cosine('v', 'q').alias('cos_sim'))
-                    .withColumn('rnk', F.row_number().over(w))
-                    .where(F.col('rnk') <= 10))
-        bf_batch_rows = bf_batch.collect()
-        walls['bf_batched'] = round(time.time() - t0, 1)
-        batch_twin_hits = sum(
-            1 for r in batch_rows
-            if r.qid + 1 == r.vec_id and r.rnk <= 2)
-        assert len(bf_batch_rows) == 10 * len(qids)
-        out = {
-            'rows': n, 'dim': DIM, 'cpus': args.cpus,
-            'n_planes': n_planes, 'n_tables': n_tables,
-            'probe_hamming': hamming,
-            'queries': len(qids),
-            'planted_twin_recall': round(twin_hits / len(qids), 4),
-            'recall_at_10_vs_exact': round(recall_hits / recall_total, 4),
-            'probe_frac_mean': round(sum(probe_fracs) / len(probe_fracs),
-                                     6),
-            'probe_frac_max': round(max(probe_fracs), 6),
-            'ann_s_per_query': round(sum(ann_walls) / len(ann_walls), 2),
-            'bf_s_per_query': round(sum(bf_walls) / len(bf_walls), 2),
-            'ann_batched_s_per_query': round(
-                walls['ann_batched'] / len(qids), 2),
-            'bf_batched_s_per_query': round(
-                walls['bf_batched'] / len(qids), 2),
-            'batch_twin_recall': round(batch_twin_hits / len(qids), 4),
-            'walls': walls,
-            'wall_total': round(sum(walls.values()), 1),
-        }
-        print(json.dumps(out))
-
-        md = f"""# BENCH/ANN_SOAK ({n:,} vectors, dim {DIM}) — multi-table LSH at library defaults
+    md = f"""# BENCH/ANN_SOAK ({n:,} vectors, dim {DIM}) — multi-table LSH at library defaults
 
 Corpus: {n:,} deterministic in-Spark vectors, 1% planted near-dup twins
 (cos ~= 0.995). local[{args.cpus}]; {n_planes} planes x {n_tables}
@@ -237,13 +220,13 @@ The per-table semi-join shape means only (vec_id, sig) pairs flow
 through the probe joins; embeddings are touched once for signatures and
 once for the candidate rerank.
 """
-        out_md = os.path.join(REPO, 'BENCH', f'ANN_SOAK_{n}.md')
-        with open(out_md, 'w') as fh:
-            fh.write(md)
-        return 0
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out, md
+
+
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--queries', type=int, default=8)
+    return run_soak('ANN_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

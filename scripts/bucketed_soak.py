@@ -12,172 +12,132 @@ per-join wall ratio and the break-even join count for the bucketing
 write overhead.
 
 Usage: python3 scripts/bucketed_soak.py [--rows 1000000] [--rounds 3]
+    [--buckets 32] [--cpus N]
 """
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import interleaved_best, run_soak, soak_parser  # noqa: E402
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--rounds', type=int, default=3)
-    ap.add_argument('--buckets', type=int, default=32)
-    ap.add_argument('--cpus', type=int, default=16)
-    args = ap.parse_args()
-
+def soak(spark, tmp, args):
     from pyspark.sql import functions as F
-    from bench import build_session
-    spark = build_session(args.cpus)
-    spark.sparkContext.setLogLevel('ERROR')
     spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
 
-    tmp = tempfile.mkdtemp(prefix='pyxml_bucketed_soak_')
-    try:
-        # two fact tables sharing the key; values deterministic. Table a
-        # carries a fat document-like payload: the join must MOVE those
-        # bytes in the plain path — at tiny widths the shuffle is an
-        # in-memory no-op and measures nothing (a 1M-narrow-row pilot
-        # measured 0.94x: Exchange cost ~0 when rows fit in L2-sized
-        # buffers; the operator's claim is about shuffle-BOUND scale)
-        a = spark.range(args.rows).select(
-            F.col('id').alias('doc_id'),
-            (F.col('id') * 2654435761 % 99991).alias('n_chars'),
-            (F.col('id') % 97).cast('string').alias('source'),
-            # INCOMPRESSIBLE ~384-char payload (12 chained md5 hexes):
-            # shuffle and IO compress with lz4, so an 'xxxx…' filler
-            # makes the Exchange nearly free and measures nothing
-            F.concat(*[F.md5((F.col('id') * 13 + i).cast('string'))
-                       for i in range(12)]).alias('payload'))
-        b = spark.range(args.rows).select(
-            F.col('id').alias('doc_id'),
-            (F.col('id') * 40503 % 65521).alias('n_tokens'))
-        a.write.mode('overwrite').parquet(f'{tmp}/plain_a')
-        b.write.mode('overwrite').parquet(f'{tmp}/plain_b')
+    # two fact tables sharing the key; values deterministic. Table a
+    # carries a fat document-like payload: the join must MOVE those
+    # bytes in the plain path — at tiny widths the shuffle is an
+    # in-memory no-op and measures nothing (a 1M-narrow-row pilot
+    # measured 0.94x: Exchange cost ~0 when rows fit in L2-sized
+    # buffers; the operator's claim is about shuffle-BOUND scale)
+    a = spark.range(args.rows).select(
+        F.col('id').alias('doc_id'),
+        (F.col('id') * 2654435761 % 99991).alias('n_chars'),
+        (F.col('id') % 97).cast('string').alias('source'),
+        # INCOMPRESSIBLE ~384-char payload (12 chained md5 hexes):
+        # shuffle and IO compress with lz4, so an 'xxxx…' filler
+        # makes the Exchange nearly free and measures nothing
+        F.concat(*[F.md5((F.col('id') * 13 + i).cast('string'))
+                   for i in range(12)]).alias('payload'))
+    b = spark.range(args.rows).select(
+        F.col('id').alias('doc_id'),
+        (F.col('id') * 40503 % 65521).alias('n_tokens'))
+    a.write.mode('overwrite').parquet(f'{tmp}/plain_a')
+    b.write.mode('overwrite').parquet(f'{tmp}/plain_b')
 
-        spark.sql('DROP TABLE IF EXISTS soak_a')
-        spark.sql('DROP TABLE IF EXISTS soak_b')
-        t0 = time.time()
-        (spark.read.parquet(f'{tmp}/plain_a').write.mode('overwrite')
-         .bucketBy(args.buckets, 'doc_id').sortBy('doc_id')
-         .option('path', f'{tmp}/bucket_a').saveAsTable('soak_a'))
-        (spark.read.parquet(f'{tmp}/plain_b').write.mode('overwrite')
-         .bucketBy(args.buckets, 'doc_id').sortBy('doc_id')
-         .option('path', f'{tmp}/bucket_b').saveAsTable('soak_b'))
-        bucket_write_s = time.time() - t0
+    spark.sql('DROP TABLE IF EXISTS soak_a')
+    spark.sql('DROP TABLE IF EXISTS soak_b')
+    t0 = time.time()
+    (spark.read.parquet(f'{tmp}/plain_a').write.mode('overwrite')
+     .bucketBy(args.buckets, 'doc_id').sortBy('doc_id')
+     .option('path', f'{tmp}/bucket_a').saveAsTable('soak_a'))
+    (spark.read.parquet(f'{tmp}/plain_b').write.mode('overwrite')
+     .bucketBy(args.buckets, 'doc_id').sortBy('doc_id')
+     .option('path', f'{tmp}/bucket_b').saveAsTable('soak_b'))
+    bucket_write_s = time.time() - t0
 
-        def plain_join():
-            pa = spark.read.parquet(f'{tmp}/plain_a')
-            pb = spark.read.parquet(f'{tmp}/plain_b')
-            return pa.join(pb, 'doc_id')
+    def plain_join():
+        pa = spark.read.parquet(f'{tmp}/plain_a')
+        pb = spark.read.parquet(f'{tmp}/plain_b')
+        return pa.join(pb, 'doc_id')
 
-        def bucketed_join():
-            return spark.table('soak_a').join(spark.table('soak_b'),
-                                              'doc_id')
+    def bucketed_join():
+        return spark.table('soak_a').join(spark.table('soak_b'),
+                                          'doc_id')
 
-        # the verdict aggregate: order-free integer checksum
-        def digest(j):
-            return j.agg(
-                F.count('*').alias('n'),
-                F.sum(F.col('n_chars') * F.col('n_tokens')).alias('dot'),
-                F.sum(F.xxhash64('doc_id', 'source', 'payload')
-                      .cast('decimal(38,0)')).alias('h')
-            ).collect()[0]
+    # the verdict aggregate: order-free integer checksum
+    def digest(j):
+        return j.agg(
+            F.count('*').alias('n'),
+            F.sum(F.col('n_chars') * F.col('n_tokens')).alias('dot'),
+            F.sum(F.xxhash64('doc_id', 'source', 'payload')
+                  .cast('decimal(38,0)')).alias('h')
+        ).collect()[0]
 
-        # plan shapes
-        import io
-        from contextlib import redirect_stdout
+    # plan shapes
+    from explain_plans import plan_of  # same dir
+    p_plain, p_bucket = plan_of(plain_join()), plan_of(bucketed_join())
+    assert p_plain.count(') Exchange') == 2, 'plain must shuffle both'
+    assert p_bucket.count(') Exchange') == 0, 'bucketed must not'
+    assert 'SelectedBucketsCount' in p_bucket
 
-        def plan(j):
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                j.explain('formatted')
-            return buf.getvalue()
+    d_plain = digest(plain_join())   # also warms workers/codegen
+    d_bucket = digest(bucketed_join())
+    assert tuple(d_plain) == tuple(d_bucket), (d_plain, d_bucket)
 
-        p_plain, p_bucket = plan(plain_join()), plan(bucketed_join())
-        assert p_plain.count(') Exchange') == 2, 'plain must shuffle both'
-        assert p_bucket.count(') Exchange') == 0, 'bucketed must not'
-        assert 'SelectedBucketsCount' in p_bucket
+    # the payload must survive past the join (as in a real
+    # enrich-then-write pipeline), else the optimizer prunes
+    # it out of the plain path's shuffle too
+    best = interleaved_best(
+        {'plain': plain_join, 'bucketed': bucketed_join}, args.rounds,
+        lambda df: df.agg(F.count('*'),
+                          F.sum(F.length('payload'))).collect())
 
-        d_plain = digest(plain_join())   # also warms workers/codegen
-        d_bucket = digest(bucketed_join())
-        assert tuple(d_plain) == tuple(d_bucket), (d_plain, d_bucket)
+    ratio = best['plain'] / best['bucketed']
+    saved_per_join = best['plain'] - best['bucketed']
+    breakeven = (bucket_write_s / saved_per_join
+                 if saved_per_join > 0 else float('inf'))
+    summary = {
+        'rows': args.rows, 'buckets': args.buckets,
+        'cpus': args.cpus, 'rounds': args.rounds,
+        'bucket_write_s': round(bucket_write_s, 2),
+        'plain_join_best_s': round(best['plain'], 3),
+        'bucketed_join_best_s': round(best['bucketed'], 3),
+        'per_join_speedup': round(ratio, 2),
+        'breakeven_joins': round(breakeven, 1),
+    }
+    md = (f'# Bucketed-join soak at {args.rows:,} rows\n\n'
+          'Interleaved in-process A/B (order flipped per round, '
+          'best-of) of the SAME SortMergeJoin with and without '
+          'the bucketed layout; broadcast disabled so the only '
+          'difference is the two shuffle Exchanges. Values '
+          'verified identical (count + product-sum + xxhash64 '
+          'checksum); plan shapes asserted (plain = 2 '
+          'Exchanges, bucketed = 0, SelectedBucketsCount '
+          'present).\n\n'
+          '| metric | value |\n|---|---|\n'
+          + ''.join(f'| {k} | {v} |\n' for k, v in summary.items())
+          + '\nReading: a recurring pipeline joining these tables '
+          f"more than ~{summary['breakeven_joins']} times amortizes "
+          'the one-time bucketing write; past that every join saves '
+          f"~{round(saved_per_join, 2)}s of shuffle at this scale "
+          '(and at 100 TB the shuffle being avoided is the '
+          'dominant cost, not a constant).\n')
+    # the session's in-memory catalog, soak_a and soak_b with it, ends
+    # when run_soak stops the session
+    return summary, md
 
-        best = {'plain': None, 'bucketed': None}
-        for r in range(args.rounds):
-            order = [('plain', plain_join), ('bucketed', bucketed_join)]
-            if r % 2 == 1:
-                order.reverse()
-            for name, fn in order:
-                t0 = time.time()
-                # the payload must survive past the join (as in a real
-                # enrich-then-write pipeline), else the optimizer prunes
-                # it out of the plain path's shuffle too
-                fn().agg(F.count('*'),
-                         F.sum(F.length('payload'))).collect()
-                dt = time.time() - t0
-                if best[name] is None or dt < best[name]:
-                    best[name] = dt
 
-        ratio = best['plain'] / best['bucketed']
-        saved_per_join = best['plain'] - best['bucketed']
-        breakeven = (bucket_write_s / saved_per_join
-                     if saved_per_join > 0 else float('inf'))
-        summary = {
-            'rows': args.rows, 'buckets': args.buckets,
-            'cpus': args.cpus, 'rounds': args.rounds,
-            'bucket_write_s': round(bucket_write_s, 2),
-            'plain_join_best_s': round(best['plain'], 3),
-            'bucketed_join_best_s': round(best['bucketed'], 3),
-            'per_join_speedup': round(ratio, 2),
-            'breakeven_joins': round(breakeven, 1),
-        }
-        out = os.path.join(REPO, 'BENCH', f'BUCKETED_SOAK_{args.rows}.md')
-        with open(out, 'w') as f:
-            f.write(f'# Bucketed-join soak at {args.rows:,} rows\n\n'
-                    'Interleaved in-process A/B (order flipped per round, '
-                    'best-of) of the SAME SortMergeJoin with and without '
-                    'the bucketed layout; broadcast disabled so the only '
-                    'difference is the two shuffle Exchanges. Values '
-                    'verified identical (count + product-sum + xxhash64 '
-                    'checksum); plan shapes asserted (plain = 2 '
-                    'Exchanges, bucketed = 0, SelectedBucketsCount '
-                    'present).\n\n')
-            f.write('| metric | value |\n|---|---|\n')
-            for k, v in summary.items():
-                f.write(f'| {k} | {v} |\n')
-            f.write(
-                '\nReading: a recurring pipeline joining these tables '
-                f"more than ~{summary['breakeven_joins']} times amortizes "
-                'the one-time bucketing write; past that every join saves '
-                f"~{round(saved_per_join, 2)}s of shuffle at this scale "
-                '(and at 100 TB the shuffle being avoided is the '
-                'dominant cost, not a constant).\n')
-        print(json.dumps(summary))
-        return 0
-    finally:
-        # a dead session must not mask the real error or skip the
-        # multi-GB tmp cleanup
-        try:
-            spark.sql('DROP TABLE IF EXISTS soak_a')
-            spark.sql('DROP TABLE IF EXISTS soak_b')
-        except Exception:
-            pass
-        try:
-            spark.stop()
-        except Exception:
-            pass  # a dead gateway's teardown error must not win either
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--rounds', type=int, default=3)
+    ap.add_argument('--buckets', type=int, default=32)
+    return run_soak('BUCKETED_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

@@ -100,14 +100,9 @@ def main():
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
+    from pyxml_spark.jobs.extract import build_session
 
-    spark = (SparkSession.builder.master('local[8]')
-             .appName('contract-check')
-             .config('spark.sql.shuffle.partitions', '8')
-             .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
-             .config('spark.ui.enabled', 'false')
-             .getOrCreate())
+    spark = build_session(8, app='contract-check')
 
     con = duckdb_views(sf_dir)
     failures = 0

@@ -13,25 +13,22 @@ exercises every stage of the curation job:
 * sources doc_id % 20 for the packing stage.
 
 Runs the ACTUAL job entry (jobs/curate.main) on the staged parquet and
-writes metrics + stage wall to BENCH/CURATE_SOAK.md + stdout JSON.
+writes metrics + stage wall to BENCH/CURATE_SOAK_{rows}.md + stdout JSON.
 
-Run: python3 scripts/curate_soak.py [--rows 1000000] [--cpus 16]
+Run: python3 scripts/curate_soak.py [--rows 1000000] [--cpus N]
 """
 from __future__ import annotations
 
-import argparse
 import io
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 from contextlib import redirect_stdout
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import run_soak, soak_parser  # noqa: E402
 
 VOCAB = 5_000
 STOPS = ['the', 'and', 'of', 'to', 'in']
@@ -73,54 +70,43 @@ def synth_docs(spark, n: int, hot: int):
     return d.select('doc_id', src.alias('source'), text.alias('text'))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     from pyxml_spark.jobs.curate import main as curate_main
-    from pyxml_spark.jobs.extract import build_session
 
     n = args.rows
     hot = max(1000, n // 20)
-    tmp = tempfile.mkdtemp(prefix='pyxml_curate_soak_')
-    try:
-        spark = build_session(args.cpus, app='pyxml-spark-curate-synth')
-        t0 = time.time()
-        synth_docs(spark, n, hot).repartition(4 * args.cpus) \
-            .write.mode('overwrite').parquet(f'{tmp}/documents.parquet')
-        synth_wall = round(time.time() - t0, 1)
-        spark.stop()
+    t0 = time.time()
+    synth_docs(spark, n, hot).repartition(4 * args.cpus) \
+        .write.mode('overwrite').parquet(f'{tmp}/documents.parquet')
+    synth_wall = round(time.time() - t0, 1)
 
-        t0 = time.time()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            rc = curate_main(['--input', f'{tmp}/documents.parquet',
-                              '--output', f'{tmp}/out',
-                              '--checkpoint-dir', f'{tmp}/ckpt',
-                              '--cpus', str(args.cpus)])
-        assert rc == 0
-        m = json.loads(buf.getvalue().strip().splitlines()[-1])
-        wall = round(time.time() - t0, 1)
+    # the job's own build_session gets this session back, and stops it
+    t0 = time.time()
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = curate_main(['--input', f'{tmp}/documents.parquet',
+                          '--output', f'{tmp}/out',
+                          '--checkpoint-dir', f'{tmp}/ckpt',
+                          '--cpus', str(args.cpus)])
+    assert rc == 0
+    m = json.loads(buf.getvalue().strip().splitlines()[-1])
+    wall = round(time.time() - t0, 1)
 
-        # planted-structure recall (soft bounds — gates may also catch
-        # organic docs, so these are floors, like dedup_soak's recall):
-        planted_tiny = (n - hot) // 100          # doc_id % 100 == 13
-        planted_rep = (n - hot) // 50            # doc_id % 50 == 7
-        assert m['n_fail_quality'] >= int(0.95 * planted_tiny), m
-        assert m['n_fail_repetition'] >= int(0.95 * planted_rep), m
-        # the 5% identical hot cluster must collapse to ~1 keeper
-        assert m['n_dup_removed'] >= int(0.95 * (hot - 1)), m
-        assert m['n_contaminated_removed'] == 0, m
+    # planted-structure recall (soft bounds — gates may also catch
+    # organic docs, so these are floors, like dedup_soak's recall):
+    planted_tiny = (n - hot) // 100          # doc_id % 100 == 13
+    planted_rep = (n - hot) // 50            # doc_id % 50 == 7
+    assert m['n_fail_quality'] >= int(0.95 * planted_tiny), m
+    assert m['n_fail_repetition'] >= int(0.95 * planted_rep), m
+    # the 5% identical hot cluster must collapse to ~1 keeper
+    assert m['n_dup_removed'] >= int(0.95 * (hot - 1)), m
+    assert m['n_contaminated_removed'] == 0, m
 
-        out = {'rows': n, 'cpus': args.cpus, 'synth_wall_s': synth_wall,
-               'curate_wall_s': wall,
-               'docs_per_sec': round(n / wall, 1), **m}
-        print(json.dumps(out))
+    out = {'rows': n, 'synth_wall_s': synth_wall,
+           'curate_wall_s': wall,
+           'docs_per_sec': round(n / wall, 1), **m}
 
-        md = f"""# BENCH/CURATE_SOAK ({n:,} docs) — end-to-end curation job
+    md = f"""# BENCH/CURATE_SOAK ({n:,} docs) — end-to-end curation job
 
 Corpus: {n:,} synthetic docs (stopword-salted token streams; 5%
 degenerate hot cluster; planted near-dup pairs; 2% pure-repetition docs;
@@ -143,12 +129,12 @@ score_documents, dedup = the MinHash/component stack with reliable
 checkpointing, packing = the chunked prefix scan); the composition adds
 no new shuffles beyond its stages' own.
 """
-        with open(os.path.join(REPO, 'BENCH', f'CURATE_SOAK_{n}.md'),
-                  'w') as fh:
-            fh.write(md)
-        return 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out, md
+
+
+def main(argv=None) -> int:
+    args = soak_parser(rows=1_000_000).parse_args(argv)
+    return run_soak('CURATE_SOAK', args, soak)
 
 
 if __name__ == '__main__':

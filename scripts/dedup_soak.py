@@ -13,7 +13,7 @@ scale paths:
 * the remaining ~80% are independent token draws (xxhash64-derived, vocab
   5000) with no planted similarity.
 
-Measured and written to BENCH/DEDUP_SOAK.md + stdout JSON:
+Measured and written to BENCH/DEDUP_SOAK_{rows}.md + stdout JSON:
 
 * candidate-pair count and fraction of n^2 (linearity evidence: the hard
   bound is N_BANDS * (PAIR_WINDOW + 1) * n);
@@ -23,21 +23,18 @@ Measured and written to BENCH/DEDUP_SOAK.md + stdout JSON:
   one keeper; near-dup pairs share keepers);
 * wall per stage.
 
-Run: python3 scripts/dedup_soak.py [--rows 1000000] [--cpus 16]
+Run: python3 scripts/dedup_soak.py [--rows 1000000] [--cpus N] [--keep]
 """
 from __future__ import annotations
 
-import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import run_soak, soak_parser, staged  # noqa: E402
 
 VOCAB = 5_000
 
@@ -64,18 +61,9 @@ def synth_docs(spark, n, hot):
     return d.select('doc_id', text.alias('text'))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    ap.add_argument('--keep', action='store_true',
-                    help='keep the temp tables')
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     from pyspark.sql import functions as F
 
-    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.dedup import (HOT_BUCKET_THRESHOLD, N_BANDS,
                                             N_SUBBUCKETS, PAIR_WINDOW,
                                             candidate_pairs, dup_components,
@@ -84,97 +72,83 @@ def main(argv=None) -> int:
 
     n = args.rows
     hot = max(1000, n // 20)  # 5% degenerate cluster
-    spark = build_session(args.cpus, app='pyxml-spark-dedup-soak')
-    tmp = tempfile.mkdtemp(prefix='pyxml_dedup_soak_')
     walls = {}
-    try:
-        t0 = time.time()
-        synth_docs(spark, n, hot).repartition(4 * args.cpus) \
-            .write.mode('overwrite').parquet(f'{tmp}/documents.parquet')
-        walls['synth'] = round(time.time() - t0, 1)
-        docs = spark.read.parquet(f'{tmp}/documents.parquet')
+    t0 = time.time()
+    docs = staged(synth_docs(spark, n, hot).repartition(4 * args.cpus),
+                  f'{tmp}/documents.parquet')
+    walls['synth'] = round(time.time() - t0, 1)
 
-        t0 = time.time()
-        token_sets(docs).write.mode('overwrite') \
-            .parquet(f'{tmp}/toks.parquet')
-        toks = spark.read.parquet(f'{tmp}/toks.parquet')
-        minhash_bands(toks).write.mode('overwrite') \
-            .parquet(f'{tmp}/bands.parquet')
-        bands = spark.read.parquet(f'{tmp}/bands.parquet')
-        walls['signatures'] = round(time.time() - t0, 1)
+    t0 = time.time()
+    toks = staged(token_sets(docs), f'{tmp}/toks.parquet')
+    bands = staged(minhash_bands(toks), f'{tmp}/bands.parquet')
+    walls['signatures'] = round(time.time() - t0, 1)
 
-        # bucket-vs-window balance (the straggler bound): reproduce
-        # candidate_pairs's exact partitioning — hot buckets get the
-        # band-dependent salt, the rest stay whole (pipeline salt_expr)
-        t0 = time.time()
-        sizes = bands.groupBy('band_id', 'band_key').agg(
-            F.count('*').alias('_bsz'))
-        hot_keys = (sizes.where(F.col('_bsz') > HOT_BUCKET_THRESHOLD)
-                    .select('band_id', 'band_key',
-                            F.lit(True).alias('_hot')))
-        bucket_max = sizes.agg(F.max('_bsz')).first()[0]
-        window_max = (bands.join(F.broadcast(hot_keys),
-                                 ['band_id', 'band_key'], 'left')
-                      .select('band_id', 'band_key',
-                              F.when(F.col('_hot'), salt_expr())
-                              .otherwise(F.lit(0)).alias('salt'))
-                      .groupBy('band_id', 'band_key', 'salt').count()
-                      .agg(F.max('count')).first()[0])
-        walls['balance_probe'] = round(time.time() - t0, 1)
+    # bucket-vs-window balance (the straggler bound): reproduce
+    # candidate_pairs's exact partitioning — hot buckets get the
+    # band-dependent salt, the rest stay whole (pipeline salt_expr)
+    t0 = time.time()
+    sizes = bands.groupBy('band_id', 'band_key').agg(
+        F.count('*').alias('_bsz'))
+    hot_keys = (sizes.where(F.col('_bsz') > HOT_BUCKET_THRESHOLD)
+                .select('band_id', 'band_key',
+                        F.lit(True).alias('_hot')))
+    bucket_max = sizes.agg(F.max('_bsz')).first()[0]
+    window_max = (bands.join(F.broadcast(hot_keys),
+                             ['band_id', 'band_key'], 'left')
+                  .select('band_id', 'band_key',
+                          F.when(F.col('_hot'), salt_expr())
+                          .otherwise(F.lit(0)).alias('salt'))
+                  .groupBy('band_id', 'band_key', 'salt').count()
+                  .agg(F.max('count')).first()[0])
+    walls['balance_probe'] = round(time.time() - t0, 1)
 
-        t0 = time.time()
-        cands = candidate_pairs(bands)
-        pairs = jaccard_pairs(toks, cands)
-        pairs.write.mode('overwrite').parquet(f'{tmp}/pairs.parquet')
-        pairs = spark.read.parquet(f'{tmp}/pairs.parquet')
-        n_cand = pairs.count()
-        walls['candidates_jaccard'] = round(time.time() - t0, 1)
+    t0 = time.time()
+    cands = candidate_pairs(bands)
+    pairs = staged(jaccard_pairs(toks, cands), f'{tmp}/pairs.parquet')
+    n_cand = pairs.count()
+    walls['candidates_jaccard'] = round(time.time() - t0, 1)
 
-        t0 = time.time()
-        dups = pairs.where(F.col('is_dup')).select('doc_a', 'doc_b')
-        keepers = dup_components(toks, dups)
-        keepers.write.mode('overwrite').parquet(f'{tmp}/keepers.parquet')
-        keepers = spark.read.parquet(f'{tmp}/keepers.parquet')
-        walls['components'] = round(time.time() - t0, 1)
+    t0 = time.time()
+    dups = pairs.where(F.col('is_dup')).select('doc_a', 'doc_b')
+    keepers = staged(dup_components(toks, dups), f'{tmp}/keepers.parquet')
+    walls['components'] = round(time.time() - t0, 1)
 
-        # planted-structure recall
-        t0 = time.time()
-        hot_roots = (keepers.where(F.col('doc_id') < hot)
-                     .select('keeper').distinct().count())
-        a = keepers.where((F.col('doc_id') >= hot)
-                          & (F.col('doc_id') % 10 == 0)) \
-            .select('doc_id', F.col('keeper').alias('ka'))
-        b = keepers.where((F.col('doc_id') >= hot)
-                          & (F.col('doc_id') % 10 == 1)) \
-            .select((F.col('doc_id') - 1).alias('doc_id'),
-                    F.col('keeper').alias('kb'))
-        j = a.join(b, 'doc_id')
-        pair_total = j.count()
-        pair_linked = j.where(F.col('ka') == F.col('kb')).count()
-        n_removed = keepers.where(F.col('doc_id') != F.col('keeper')).count()
-        walls['recall_probe'] = round(time.time() - t0, 1)
+    # planted-structure recall
+    t0 = time.time()
+    hot_roots = (keepers.where(F.col('doc_id') < hot)
+                 .select('keeper').distinct().count())
+    a = keepers.where((F.col('doc_id') >= hot)
+                      & (F.col('doc_id') % 10 == 0)) \
+        .select('doc_id', F.col('keeper').alias('ka'))
+    b = keepers.where((F.col('doc_id') >= hot)
+                      & (F.col('doc_id') % 10 == 1)) \
+        .select((F.col('doc_id') - 1).alias('doc_id'),
+                F.col('keeper').alias('kb'))
+    j = a.join(b, 'doc_id')
+    pair_total = j.count()
+    pair_linked = j.where(F.col('ka') == F.col('kb')).count()
+    n_removed = keepers.where(F.col('doc_id') != F.col('keeper')).count()
+    walls['recall_probe'] = round(time.time() - t0, 1)
 
-        out = {
-            'rows': n,
-            'cpus': args.cpus,
-            'hot_cluster': hot,
-            'candidate_pairs': n_cand,
-            'cand_frac_of_n2': round(n_cand / (n * (n - 1) / 2), 8),
-            'cand_per_doc': round(n_cand / n, 3),
-            'linear_bound_per_doc': N_BANDS * (PAIR_WINDOW + 1),
-            'bucket_max_rows': bucket_max,
-            'window_max_rows': window_max,
-            'hot_cluster_roots': hot_roots,
-            'near_dup_pairs': pair_total,
-            'near_dup_linked': pair_linked,
-            'near_dup_recall': round(pair_linked / max(pair_total, 1), 4),
-            'dup_docs_removed': n_removed,
-            'walls': walls,
-            'wall_total': round(sum(walls.values()), 1),
-        }
-        print(json.dumps(out))
+    out = {
+        'rows': n,
+        'hot_cluster': hot,
+        'candidate_pairs': n_cand,
+        'cand_frac_of_n2': round(n_cand / (n * (n - 1) / 2), 8),
+        'cand_per_doc': round(n_cand / n, 3),
+        'linear_bound_per_doc': N_BANDS * (PAIR_WINDOW + 1),
+        'bucket_max_rows': bucket_max,
+        'window_max_rows': window_max,
+        'hot_cluster_roots': hot_roots,
+        'near_dup_pairs': pair_total,
+        'near_dup_linked': pair_linked,
+        'near_dup_recall': round(pair_linked / max(pair_total, 1), 4),
+        'dup_docs_removed': n_removed,
+        'walls': walls,
+        'wall_total': round(sum(walls.values()), 1),
+    }
 
-        md = f"""# BENCH/DEDUP_SOAK ({n:,} docs) — end-to-end near-dup run
+    md = f"""# BENCH/DEDUP_SOAK ({n:,} docs) — end-to-end near-dup run
 
 Corpus: {n:,} synthetic docs (in-Spark deterministic generation — 5%
 degenerate hot cluster of byte-identical docs, {pair_total:,} planted
@@ -201,16 +175,16 @@ linearly in the bucket's share, never quadratically, and the sub-bucket
 count is a knob. Component resolution converges via pointer doubling in
 O(log diameter) rounds (raises on non-convergence).
 """
-        # per-scale raw report; BENCH/DEDUP_SOAK.md is the curated
-        # cross-scale summary and is never clobbered by a re-run
-        out_md = os.path.join(REPO, 'BENCH', f'DEDUP_SOAK_{n}.md')
-        with open(out_md, 'w') as fh:
-            fh.write(md)
-        return 0
-    finally:
-        spark.stop()
-        if not args.keep:
-            shutil.rmtree(tmp, ignore_errors=True)
+    # run_soak writes the per-scale raw report DEDUP_SOAK_{n}.md;
+    # BENCH/DEDUP_SOAK.md is the curated cross-scale summary, never clobbered
+    return out, md
+
+
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--keep', action='store_true',
+                    help='keep the temp tables')
+    return run_soak('DEDUP_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

@@ -64,6 +64,8 @@ def main(argv=None) -> int:
 
     import pyxml
     import pyxml.html
+    from bench import stamped
+    from perfbench.run import cpu_probe, nproc
     from pyxml_spark.engine import html as my_html
     from pyxml_spark.engine.entities import unescape as my_unescape
     from pyxml_spark.engine.parse import fromstring as my_fromstring
@@ -72,6 +74,7 @@ def main(argv=None) -> int:
     from pyxml.escape import unescape as ref_unescape
     from pyxml.etree import tostring as ref_tostring
 
+    probe_before = cpu_probe(nproc())
     rng = random.Random(args.seed)
     mismatches = []
     stats = {'parsed_both': 0, 'err_both': 0, 'serialized': 0}
@@ -161,7 +164,7 @@ def main(argv=None) -> int:
         'unescape_ok': un_ok,
         **stats,
     }
-    print(json.dumps(out))
+    print(json.dumps(stamped(out, probe_before)))
     for m in mismatches[:10]:
         print('MISMATCH', repr(m), file=sys.stderr)
     return 1 if mismatches else 0

@@ -38,7 +38,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
-    from bench import build_session
+    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline import extract_turns, with_bucket
     from pyxml_spark.pipeline.resume import extract_buckets, pending_turns
 

@@ -18,24 +18,20 @@ structure); shard docs with id % 5 == 0 are near-dups (one extra token)
 of corpus doc (id - n) % n, the rest independent draws.
 
 Run: python3 scripts/incr_dedup_soak.py [--rows 1000000] [--shard 100000]
+     [--cpus N]
 """
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _SCRIPTS = os.path.dirname(os.path.abspath(__file__))
 if _SCRIPTS not in sys.path:  # survive python -m / imports from tests
     sys.path.insert(0, _SCRIPTS)
 
+from bench import run_soak, soak_parser, staged  # noqa: E402
 from dedup_soak import synth_docs  # noqa: E402  (same dir)
 
 
@@ -64,117 +60,89 @@ def synth_shard(spark, corpus_n, shard_n):
                         F.col('twin_id').cast('long').alias('twin_id'))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--shard', type=int, default=100_000)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     from pyspark.sql import functions as F
-    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.dedup import (N_BANDS, N_SUBBUCKETS,
                                             incremental_candidate_pairs,
                                             jaccard_pairs, minhash_bands,
                                             token_sets)
 
-    spark = build_session(args.cpus)
-    spark.sparkContext.setLogLevel('ERROR')
-    tmp = tempfile.mkdtemp(prefix='pyxml_incr_soak_')
-    try:
-        # hot MUST match synth_shard's internal value or twin texts
-        # diverge from the corpus texts they were planted against
-        corpus = synth_docs(spark, args.rows,
-                            hot=max(1000, args.rows // 20))
-        shard = synth_shard(spark, args.rows, args.shard)
-        corpus.write.mode('overwrite').parquet(f'{tmp}/corpus')
-        shard.write.mode('overwrite').parquet(f'{tmp}/shard_docs')
-        corpus = spark.read.parquet(f'{tmp}/corpus')
-        shard = spark.read.parquet(f'{tmp}/shard_docs')
+    # hot MUST match synth_shard's internal value or twin texts
+    # diverge from the corpus texts they were planted against
+    corpus = staged(synth_docs(spark, args.rows,
+                               hot=max(1000, args.rows // 20)),
+                    f'{tmp}/corpus')
+    shard = staged(synth_shard(spark, args.rows, args.shard),
+                   f'{tmp}/shard_docs')
 
-        # one-time cost: the persisted corpus band index
-        t0 = time.time()
-        (minhash_bands(token_sets(corpus))
-         .write.mode('overwrite').parquet(f'{tmp}/index'))
-        index_build_s = time.time() - t0
-        index = spark.read.parquet(f'{tmp}/index')
+    # one-time cost: the persisted corpus band index
+    t0 = time.time()
+    index = staged(minhash_bands(token_sets(corpus)), f'{tmp}/index')
+    index_build_s = time.time() - t0
 
-        # per-shard cost: shard bands + candidate links + verification
-        t0 = time.time()
-        (minhash_bands(token_sets(shard))
-         .write.mode('overwrite').parquet(f'{tmp}/shard_bands'))
-        nb = spark.read.parquet(f'{tmp}/shard_bands')
-        links = incremental_candidate_pairs(nb, index)
-        links.write.mode('overwrite').parquet(f'{tmp}/links')
-        links = spark.read.parquet(f'{tmp}/links')
-        # the operator's documented verification composition: corpus
-        # tokens only for LINKED docs (a bare token_sets(corpus) would
-        # re-tokenize the whole 1M corpus inside the 'shard-sized'
-        # wall — O(corpus), exactly the cost this soak claims to avoid)
-        linked_old = links.select(F.col('doc_b').alias('doc_id')) \
-            .distinct()
-        toks = (token_sets(corpus.join(linked_old, 'doc_id'))
-                .unionByName(token_sets(shard.select('doc_id', 'text'))))
-        toks.write.mode('overwrite').parquet(f'{tmp}/toks')
-        toks = spark.read.parquet(f'{tmp}/toks')
-        verified = (jaccard_pairs(toks, links).where(F.col('is_dup'))
-                    .select('doc_a', 'doc_b'))
-        verified.write.mode('overwrite').parquet(f'{tmp}/verified')
-        verified = spark.read.parquet(f'{tmp}/verified')
-        shard_ingest_s = time.time() - t0
+    # per-shard cost: shard bands + candidate links + verification
+    t0 = time.time()
+    nb = staged(minhash_bands(token_sets(shard)), f'{tmp}/shard_bands')
+    links = staged(incremental_candidate_pairs(nb, index), f'{tmp}/links')
+    # the operator's documented verification composition: corpus
+    # tokens only for LINKED docs (a bare token_sets(corpus) would
+    # re-tokenize the whole 1M corpus inside the 'shard-sized'
+    # wall — O(corpus), exactly the cost this soak claims to avoid)
+    linked_old = links.select(F.col('doc_b').alias('doc_id')) \
+        .distinct()
+    toks = staged(token_sets(corpus.join(linked_old, 'doc_id'))
+                  .unionByName(token_sets(shard.select('doc_id', 'text'))),
+                  f'{tmp}/toks')
+    verified = staged(jaccard_pairs(toks, links).where(F.col('is_dup'))
+                      .select('doc_a', 'doc_b'), f'{tmp}/verified')
+    shard_ingest_s = time.time() - t0
 
-        n_links = links.count()
-        n_verified = verified.count()
-        fanout = links.groupBy('doc_a').agg(F.count('*').alias('k')) \
-            .agg(F.max('k').alias('mx')).collect()[0]
-        planted = shard.where(F.col('twin_id') >= 0)
-        n_planted = planted.count()
-        hits = (planted.join(verified.select(F.col('doc_a')
-                                             .alias('doc_id')).distinct(),
-                             'doc_id'))
-        n_recalled = hits.count()
-        recall = n_recalled / n_planted
-        from pyxml_spark.pipeline.dedup import HOT_BUCKET_THRESHOLD
-        summary = {
-            'corpus_rows': args.rows, 'shard_rows': args.shard,
-            'cpus': args.cpus,
-            'index_build_s': round(index_build_s, 1),
-            'shard_ingest_s': round(shard_ingest_s, 1),
-            'candidate_links': n_links,
-            'verified_links': n_verified,
-            'max_links_per_shard_doc': fanout['mx'],
-            'avg_links_per_shard_doc': round(n_links / args.shard, 2),
-            'planted': n_planted,
-            'planted_recall': round(recall, 4),
-            'n_bands': N_BANDS, 'n_subbuckets': N_SUBBUCKETS,
-        }
-        # the soak FAILS on regression, it doesn't just report (the
-        # 'soak rigor gaps' self-review class from round 4)
-        assert recall >= 0.99, summary
-        assert fanout['mx'] <= N_BANDS * HOT_BUCKET_THRESHOLD, summary
-        out = os.path.join(REPO, 'BENCH',
-                           f'INCR_DEDUP_SOAK_{args.rows}.md')
-        with open(out, 'w') as f:
-            f.write(f'# Incremental dedup soak: {args.shard:,}-doc shard '
-                    f'vs persisted {args.rows:,}-doc index\n\n'
-                    'Planted near-dups (incl. twins into the 5% hot '
-                    'cluster, exercising the salted min-rep regime); '
-                    'links jaccard-verified before counting recall, as '
-                    'the operator contract requires. The wall split is '
-                    'the headline: the index build is paid ONCE, every '
-                    'later shard pays only the shard-sized cost.\n\n')
-            f.write('| metric | value |\n|---|---|\n')
-            for k, v in summary.items():
-                f.write(f'| {k} | {v} |\n')
-        print(json.dumps(summary))
-        return 0
-    finally:
-        try:
-            spark.stop()
-        except Exception:
-            pass
-        shutil.rmtree(tmp, ignore_errors=True)
+    n_links = links.count()
+    n_verified = verified.count()
+    fanout = links.groupBy('doc_a').agg(F.count('*').alias('k')) \
+        .agg(F.max('k').alias('mx')).collect()[0]
+    planted = shard.where(F.col('twin_id') >= 0)
+    n_planted = planted.count()
+    hits = (planted.join(verified.select(F.col('doc_a')
+                                         .alias('doc_id')).distinct(),
+                         'doc_id'))
+    n_recalled = hits.count()
+    recall = n_recalled / n_planted
+    from pyxml_spark.pipeline.dedup import HOT_BUCKET_THRESHOLD
+    summary = {
+        'corpus_rows': args.rows, 'shard_rows': args.shard,
+        'cpus': args.cpus,
+        'index_build_s': round(index_build_s, 1),
+        'shard_ingest_s': round(shard_ingest_s, 1),
+        'candidate_links': n_links,
+        'verified_links': n_verified,
+        'max_links_per_shard_doc': fanout['mx'],
+        'avg_links_per_shard_doc': round(n_links / args.shard, 2),
+        'planted': n_planted,
+        'planted_recall': round(recall, 4),
+        'n_bands': N_BANDS, 'n_subbuckets': N_SUBBUCKETS,
+    }
+    # the soak FAILS on regression, it doesn't just report (the
+    # 'soak rigor gaps' self-review class from round 4)
+    assert recall >= 0.99, summary
+    assert fanout['mx'] <= N_BANDS * HOT_BUCKET_THRESHOLD, summary
+    md = (f'# Incremental dedup soak: {args.shard:,}-doc shard '
+          f'vs persisted {args.rows:,}-doc index\n\n'
+          'Planted near-dups (incl. twins into the 5% hot '
+          'cluster, exercising the salted min-rep regime); '
+          'links jaccard-verified before counting recall, as '
+          'the operator contract requires. The wall split is '
+          'the headline: the index build is paid ONCE, every '
+          'later shard pays only the shard-sized cost.\n\n'
+          '| metric | value |\n|---|---|\n'
+          + ''.join(f'| {k} | {v} |\n' for k, v in summary.items()))
+    return summary, md
+
+
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--shard', type=int, default=100_000)
+    return run_soak('INCR_DEDUP_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

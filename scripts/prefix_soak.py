@@ -18,23 +18,19 @@ soak evidences the fix at scale:
   across runs) — informational at 1M, the task-size bound is the design
   metric.
 
-Writes BENCH/PREFIX_SOAK.md + one stdout JSON line.
+Writes BENCH/PREFIX_SOAK_{rows}.md + one stdout JSON line.
 
-Run: python3 scripts/prefix_soak.py [--rows 1000000] [--cpus 16]
+Run: python3 scripts/prefix_soak.py [--rows 1000000] [--cpus N] [--reps 2]
 """
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import (interleaved_best, run_soak,  # noqa: E402
+                   soak_parser, staged)
 
 
 def synth(spark, n: int):
@@ -52,89 +48,70 @@ def synth(spark, n: int):
                       (F.col('id') % 13).alias('v'))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--reps', type=int, default=2)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.prefix import running_sum_before
 
     n = args.rows
-    spark = build_session(args.cpus, app='pyxml-spark-prefix-soak')
-    tmp = tempfile.mkdtemp(prefix='pyxml_prefix_soak_')
-    try:
-        synth(spark, n).repartition(4 * args.cpus) \
-            .write.mode('overwrite').parquet(f'{tmp}/rows.parquet')
-        df = spark.read.parquet(f'{tmp}/rows.parquet')
+    df = staged(synth(spark, n).repartition(4 * args.cpus),
+                f'{tmp}/rows.parquet')
 
-        w = (Window.partitionBy('source').orderBy('doc_id')
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    w = (Window.partitionBy('source').orderBy('doc_id')
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
-        def bare():
-            return df.withColumn(
-                'before', (F.sum('v').over(w)
-                           - F.coalesce('v', F.lit(0))).cast('long'))
+    def bare():
+        return df.withColumn(
+            'before', (F.sum('v').over(w)
+                       - F.coalesce('v', F.lit(0))).cast('long'))
 
-        def chunked():
-            return running_sum_before(df, 'source', 'doc_id', 'v',
-                                      'before')
+    def chunked():
+        return running_sum_before(df, 'source', 'doc_id', 'v',
+                                  'before')
 
-        # equality, row-for-row: a FULL OUTER join so dropped/duplicated
-        # rows surface as null-sided mismatches (an inner join would hide
-        # a row-losing regression behind mismatches == 0), plus a row
-        # count pin on the chunked output
-        assert chunked().count() == n, 'chunked scan lost/duplicated rows'
-        mismatches = (chunked().select('source', 'doc_id',
-                                       F.col('before').alias('bc'))
-                      .join(bare().select('source', 'doc_id',
-                                          F.col('before').alias('bb')),
-                            ['source', 'doc_id'], 'full_outer')
-                      .where(F.col('bc').isNull() | F.col('bb').isNull()
-                             | (F.col('bc') != F.col('bb'))).count())
+    # equality, row-for-row: a FULL OUTER join so dropped/duplicated
+    # rows surface as null-sided mismatches (an inner join would hide
+    # a row-losing regression behind mismatches == 0), plus a row
+    # count pin on the chunked output
+    assert chunked().count() == n, 'chunked scan lost/duplicated rows'
+    mismatches = (chunked().select('source', 'doc_id',
+                                   F.col('before').alias('bc'))
+                  .join(bare().select('source', 'doc_id',
+                                      F.col('before').alias('bb')),
+                        ['source', 'doc_id'], 'full_outer')
+                  .where(F.col('bc').isNull() | F.col('bb').isNull()
+                         | (F.col('bc') != F.col('bb'))).count())
 
-        # straggler bound: rows the biggest single window task must sort
-        bare_max = (df.groupBy('source').count()
-                    .agg(F.max('count')).first()[0])
-        stats = df.agg(F.count('doc_id').alias('n'),
-                       F.min('doc_id').alias('mn'),
-                       F.max('doc_id').alias('mx')).first()
-        import math
-        n_chunks = max(1, math.ceil(math.sqrt(stats.n)))
-        width = max(1, math.ceil((stats.mx - stats.mn + 1) / n_chunks))
-        chunk_max = (df.groupBy(
-            'source', F.floor((F.col('doc_id') - stats.mn) / width))
-            .count().agg(F.max('count')).first()[0])
+    # straggler bound: rows the biggest single window task must sort
+    bare_max = (df.groupBy('source').count()
+                .agg(F.max('count')).first()[0])
+    stats = df.agg(F.count('doc_id').alias('n'),
+                   F.min('doc_id').alias('mn'),
+                   F.max('doc_id').alias('mx')).first()
+    import math
+    n_chunks = max(1, math.ceil(math.sqrt(stats.n)))
+    width = max(1, math.ceil((stats.mx - stats.mn + 1) / n_chunks))
+    chunk_max = (df.groupBy(
+        'source', F.floor((F.col('doc_id') - stats.mn) / width))
+        .count().agg(F.max('count')).first()[0])
 
-        # interleaved A/B walls, best-of
-        walls = {'bare': None, 'chunked': None}
-        for _ in range(args.reps):
-            for name, fn in (('bare', bare), ('chunked', chunked)):
-                t0 = time.time()
-                fn().agg(F.sum('before')).collect()
-                dt = time.time() - t0
-                if walls[name] is None or dt < walls[name]:
-                    walls[name] = dt
+    # interleaved A/B walls, best-of
+    walls = interleaved_best({'bare': bare, 'chunked': chunked}, args.reps,
+                             lambda df: df.agg(F.sum('before')).collect())
 
-        out = {
-            'rows': n, 'cpus': args.cpus,
-            'mismatches_vs_bare_window': mismatches,
-            'bare_max_task_rows': bare_max,
-            'chunked_max_task_rows': chunk_max,
-            'task_rows_reduction': round(bare_max / max(chunk_max, 1), 1),
-            'bare_wall_s': round(walls['bare'], 2),
-            'chunked_wall_s': round(walls['chunked'], 2),
-        }
-        print(json.dumps(out))
-        assert mismatches == 0
+    out = {
+        'rows': n,
+        'mismatches_vs_bare_window': mismatches,
+        'bare_max_task_rows': bare_max,
+        'chunked_max_task_rows': chunk_max,
+        'task_rows_reduction': round(bare_max / max(chunk_max, 1), 1),
+        'bare_wall_s': round(walls['bare'], 2),
+        'chunked_wall_s': round(walls['chunked'], 2),
+    }
+    assert mismatches == 0, out
 
-        md = f"""# BENCH/PREFIX_SOAK ({n:,} rows) — sparse keys + hot partition
+    md = f"""# BENCH/PREFIX_SOAK ({n:,} rows) — sparse keys + hot partition
 
 Corpus: {n:,} rows, sparse 60-bit order keys, 90% of rows in one 'hot'
 source (the straggler shape). local[{args.cpus}].
@@ -152,13 +129,13 @@ sparse keys to ~1 row/chunk, pushing the whole hot source back into one
 offset-window task). Both window stages and the offsets table grow as
 sqrt(n); no stage ever holds a whole partition value in one task.
 """
-        with open(os.path.join(REPO, 'BENCH', f'PREFIX_SOAK_{n}.md'),
-                  'w') as fh:
-            fh.write(md)
-        return 0
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out, md
+
+
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--reps', type=int, default=2)
+    return run_soak('PREFIX_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

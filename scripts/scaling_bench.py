@@ -1,14 +1,15 @@
 """Two-parallelism scaling evidence: the same extraction job at N and 4N
-cores over identical input; reports throughput at both plus scaling
-efficiency eff = (thr_4N / thr_N) / 4 (sandbox stand-in for N vs 4N
-executors). Writes BENCH/BASELINE.md.
+cores over identical input, N = max(1, nproc // 4) and 4N = nproc, so
+neither level asks for more cores than the box has; reports throughput at
+both plus scaling efficiency eff = (thr_4N / thr_N) / (4N / N) (sandbox
+stand-in for N vs 4N executors). Writes BENCH/BASELINE.md.
 
-Two pairs are measured (local[2]->local[8] primary, local[8]->local[32]
-supplementary), each reported raw AND normalized by a hardware ceiling: a
-pure-CPU multiprocessing probe run in the same interleave window, because a
-single box drops per-core turbo clock as active cores rise — a penalty that
-separate N vs 4N *executors* on a real cluster do not share. The normalized
-number is the framework's own scaling; the probe quantifies the box.
+The pair is reported raw AND normalized by a hardware ceiling: perfbench's
+pure-CPU multiprocessing probe run in the same interleave window, because
+a single box drops per-core turbo clock as active cores rise — a penalty
+that separate N vs 4N *executors* on a real cluster do not share. The
+normalized number is the framework's own scaling; the probe quantifies the
+box.
 
 Usage: python3 scripts/scaling_bench.py [--rows 2000000] [--reps 2]
 """
@@ -22,25 +23,22 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import BENCH_TMP  # noqa: E402
+from perfbench.run import cpu_probe, nproc  # noqa: E402
+from pyxml_spark.jobs.extract import build_session  # noqa: E402
 
 RUNNER = r'''
-import json, sys, time
+import json, sys
 sys.path.insert(0, {repo!r})
-from bench import build_session
-from pyxml_spark.pipeline import extract_turns
+from bench import time_extract
+from pyxml_spark.jobs.extract import build_session
 
 cpus = int(sys.argv[1]); path = sys.argv[2]; reps = int(sys.argv[3])
 spark = build_session(cpus)
 spark.sparkContext.setLogLevel('ERROR')
-turns = spark.read.parquet(path)
-n = turns.count()
-extract_turns(turns.limit(20000), partitions=cpus * 2).count()  # warm workers
-best = None
-for _ in range(reps):
-    t0 = time.time()
-    rows = extract_turns(turns, partitions=cpus * 2).count()
-    dt = time.time() - t0
-    best = dt if best is None or dt < best else best
+rows, best = time_extract(spark, spark.read.parquet(path), cpus, reps)
 print(json.dumps({{'cpus': cpus, 'rows': rows, 'seconds': round(best, 3),
                    'turns_per_sec': round(rows / best, 1)}}))
 spark.stop()
@@ -57,24 +55,6 @@ def run_at(cpus: int, path: str, reps: int) -> dict:
     return json.loads(line)
 
 
-#: fixed pure-CPU work unit for the hardware-ceiling probe (~1.5-3s/proc)
-_PROBE_WORK = 'x=0\nfor i in range(12_000_000): x+=i*i\n'
-
-
-def probe_at(nproc: int) -> float:
-    """hardware ceiling: identical CPU-bound work in nproc concurrent
-    processes, zero framework overhead; returns work-units/sec. This
-    measures what the *box* gives N active cores (turbo clock drop with
-    core count + CPU steal) — the component of any single-host scaling
-    ratio that a real N-vs-4N *executor* comparison would not contain."""
-    t0 = time.time()
-    ps = [subprocess.Popen([sys.executable, '-c', _PROBE_WORK])
-          for _ in range(nproc)]
-    for p in ps:
-        p.wait()
-    return nproc / (time.time() - t0)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument('--rows', type=int, default=2_000_000)
@@ -83,12 +63,10 @@ def main() -> int:
                                                   'BASELINE.md'))
     args = ap.parse_args()
 
-    sys.path.insert(0, REPO)
-    from bench import BENCH_TMP, build_session
     from pyxml_spark.pipeline import write_transcripts
     path = os.path.join(BENCH_TMP, f'scaling_v2_{args.rows}.parquet')
     if not os.path.exists(os.path.join(path, '_SUCCESS')):
-        spark = build_session(8)
+        spark = build_session(nproc())
         spark.sparkContext.setLogLevel('ERROR')
         write_transcripts(spark, path, args.rows, seed=42, partitions=64)
         spark.stop()
@@ -98,37 +76,32 @@ def main() -> int:
     # equally; keep the best run per level. The pure-CPU probe runs in the
     # same interleave so the hardware ceiling is measured in the same
     # thermal/steal window as the job it normalizes.
+    lo, hi = max(1, nproc() // 4), nproc()
     results: dict = {}
-    probe: dict = {2: 0.0, 8: 0.0, 32: 0.0}
+    probe = {lo: 0.0, hi: 0.0}
     for _ in range(args.reps):
-        for c in (2, 8, 32):
-            probe[c] = max(probe[c], probe_at(c))
+        for c in (lo, hi):
+            probe[c] = max(probe[c], cpu_probe(c))
             r = run_at(c, path, 1)
             if c not in results or r['seconds'] < results[c]['seconds']:
                 results[c] = r
-    eff_2_8 = (results[8]['turns_per_sec']
-               / results[2]['turns_per_sec']) / 4
-    eff_8_32 = (results[32]['turns_per_sec']
-                / results[8]['turns_per_sec']) / 4
-    hw_2_8 = (probe[8] / probe[2]) / 4
-    hw_8_32 = (probe[32] / probe[8]) / 4
-    norm_2_8 = eff_2_8 / hw_2_8
-    norm_8_32 = eff_8_32 / hw_8_32
+    scale = hi / lo
+    eff = (results[hi]['turns_per_sec'] / results[lo]['turns_per_sec']) \
+        / scale
+    hw = (probe[hi] / probe[lo]) / scale
+    norm = eff / hw
     report = {
         'rows': args.rows,
         'runs': results,
         'probe_units_per_sec': {k: round(v, 3) for k, v in probe.items()},
-        'eff_local2_to_local8': round(eff_2_8, 3),
-        'eff_local8_to_local32': round(eff_8_32, 3),
-        'hw_ceiling_2_to_8': round(hw_2_8, 3),
-        'hw_ceiling_8_to_32': round(hw_8_32, 3),
-        'eff_normalized_2_to_8': round(norm_2_8, 3),
-        'eff_normalized_8_to_32': round(norm_8_32, 3),
+        f'eff_local{lo}_to_local{hi}': round(eff, 3),
+        f'hw_ceiling_{lo}_to_{hi}': round(hw, 3),
+        f'eff_normalized_{lo}_to_{hi}': round(norm, 3),
         # gate on min(raw, normalized): normalization corrects for the
         # hardware all-core ceiling but, because probe and job best-ofs may
         # come from different throttle windows, it can exceed 1.0 — the raw
         # floor keeps a genuine efficiency regression from hiding behind it
-        'pass': min(eff_2_8, norm_2_8) >= 0.8,
+        'pass': min(eff, norm) >= 0.8,
     }
     print(json.dumps(report))
 
@@ -145,18 +118,12 @@ a deterministic synthetic transcripts table ({args.rows:,} turns, seed=42,
 at every parallelism level. Protocol: parallelism levels interleaved across
 {args.reps} repetitions, best run per level kept — this sandbox VM shows
 CPU-steal / burst-throttling (single-thread speed varies ~2x over minutes),
-so interleaving + best-of is required for a fair ratio.
+so interleaving + best-of is required for a fair ratio. Only within-window
+ratios are meaningful; the table below is one window.
 
 | parallelism | wall (s) | turns/sec |
 |---|---|---|
 {rows_tbl}
-
-Window variance note: absolute throughput swings with the VM's burst
-throttle (observed 58k-160k turns/sec at local[32] across windows the same
-day; best measured this round: **160,622 turns/sec** on 1M rows in an
-interleaved batch-size x partition sweep, which also confirmed the tuned
-defaults of arrow batch 16384 and partitions = 2*cores). Only within-window
-ratios are meaningful; the table above is one window.
 
 ## Scaling efficiency (N vs 4N, sandbox stand-in for executor counts)
 
@@ -171,61 +138,10 @@ the normalized number is the framework's own scaling behavior.
 
 | pair | job eff | hardware ceiling (probe) | normalized (job/hw) |
 |---|---|---|---|
-| **local[2] -> local[8]** | {eff_2_8:.3f} | {hw_2_8:.3f} | **{norm_2_8:.3f}** ({'PASS' if norm_2_8 >= 0.8 else 'FAIL'} vs >= 0.8) |
-| local[8] -> local[32] | {eff_8_32:.3f} | {hw_8_32:.3f} | {norm_8_32:.3f} |
+| **local[{lo}] -> local[{hi}]** | {eff:.3f} | {hw:.3f} | **{norm:.3f}** ({'PASS' if report['pass'] else 'FAIL'} vs >= 0.8 on min(raw, normalized)) |
 
-* The primary criterion pair is local[2] -> local[8]: at both levels the
-  32-core host still has headroom for the JVM scan/shuffle/Arrow threads
-  alongside the Python workers, as on a real cluster.
-* local[8] -> local[32] additionally oversubscribes the socket (32 workers
-  + JVM threads on 32 physical cores), so even its hardware ceiling
-  understates the penalty; supplementary only.
-* The job tracks the hardware ceiling at {norm_2_8:.0%} on the criterion
-  pair: the pipeline adds essentially no shuffle- or coordination-bound
-  scaling loss — the only exchange is the explicit salted repartition,
-  extraction is embarrassingly parallel per Arrow batch, and the final
-  count is a map-side aggregate.
-
-## Skew evidence
-
-On an adversarial table where one conversation owns 50% of 200k turns,
-salted repartition (salt=16) beats plain conv_id partitioning by **3.2x**
-at local[8] (12.6s -> 3.9s, same window): without salt the hot key pins
-one task while the other cores idle; with salt the per-turn-independent
-extraction spreads the hot conversation across tasks with no re-merge
-cost beyond the local sort.
-
-## Correctness context
-
-Per-turn text equality vs the reference-parser oracle is enforced by
-`tests/test_pipeline_spark.py::test_extraction_equality_gate` (0 mismatches)
-plus the differential suites (token stream / DOM / serialize / xpath /
-escape parity over ~170 corpus payloads, 1,300 hypothesis-fuzzed inputs per
-run, and a random-xpath probe — tests/test_oracle_diff.py,
-tests/test_fuzz_parity.py). One-off soaks this round, all clean: 16k random
-markup payloads x 2 modes vs the reference parser; 6k payloads on an
-encoding/backslash/CDATA-focused alphabet; 25k random xpaths vs the
-reference engine; 10k serialize round-trips (xml+html tostring bytes
-exact); extraction equality vs heuristics-over-reference-DOMs at 50k and
-200k fresh-seed turns (145,802 parse-compared + 19,912 matched-error rows
-at 200k, 0 mismatches). The streaming no-DOM gather path is pinned to the
-DOM path by tests/test_gather.py. Operational: incremental resume with
-max_buckets=7 converges in 6 runs to exactly 5,000/5,000 rows with zero
-duplicate keys; a post-completion run is a no-op. Determinism: the full
-extraction output (text, spans, errors, counts) hashes bit-identically
-between local[4] and local[16] sessions on the same 20k-turn input — the
-per-row invariant behind the N-vs-4N criterion.
-
-## Single-node comparison vs the reference
-
-The reference publishes no numbers (BASELINE.md at repo root); measured on
-identical payload mixes, interleaved A/B in one process after the
-fused-pump work: our engine parses **~3.7x faster** than the reference's
-byte-at-a-time lexer (15.7k vs 4.3k docs/s; ours additionally tracks char
-spans, which the reference cannot do at all). Full extraction (parse +
-streaming heuristics + spans) runs ~11-12.5k docs/s/core under mild
-throttle — ~1.5x the first complete build of this round (4-cycle
-interleaved subprocess A/B, best-of).
+Host: {nproc()} usable cores; N = max(1, nproc // 4), 4N = nproc, so the
+4N level uses every core and neither level oversubscribes the box.
 
 Config: arrow maxRecordsPerBatch=16384 capped at 64MB/batch,
 partitions=2*cores, AQE on.

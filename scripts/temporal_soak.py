@@ -26,21 +26,17 @@ both session shapes exercised); 5 event types round-robin by xxhash.
 
 Writes BENCH/TEMPORAL_SOAK_{rows}.md + one stdout JSON line.
 
-Run: python3 scripts/temporal_soak.py [--rows 1000000] [--cpus 16]
+Run: python3 scripts/temporal_soak.py [--rows 1000000] [--cpus N] [--reps 2]
 """
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import shutil
 import sys
-import tempfile
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import (interleaved_best, run_soak,  # noqa: E402
+                   soak_parser, staged)
 
 TYPES = ('view', 'click', 'error', 'purchase', 'signup')
 
@@ -62,148 +58,124 @@ def synth(spark, n: int):
                       val.alias('value'))
 
 
-def _rows(df, keys):
-    """sorted list of value-normalized tuples (None-safe, exact ints)"""
-    out = []
-    for r in df.collect():
-        out.append(tuple(r[k] for k in keys))
-    out.sort(key=lambda t: tuple((v is None, v) for v in t))
-    return out
+def _sorted(rows):
+    """rows as a sorted list of tuples (None-safe, exact ints)"""
+    return sorted(rows, key=lambda t: tuple((v is None, v) for v in t))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument('--rows', type=int, default=1_000_000)
-    ap.add_argument('--reps', type=int, default=2)
-    ap.add_argument('--cpus', type=int, default=int(os.environ.get(
-        'SPARK_GRAFT_CPUS', '16')))
-    args = ap.parse_args(argv)
-
+def soak(spark, tmp, args):
     import duckdb
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
-    from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline.temporal import (RANGE_WINDOW_S,
                                                range_count_before,
                                                sessionize)
 
     n = args.rows
-    spark = build_session(args.cpus, app='pyxml-spark-temporal-soak')
-    tmp = tempfile.mkdtemp(prefix='pyxml_temporal_soak_')
-    try:
-        events_path = f'{tmp}/events.parquet'
-        synth(spark, n).repartition(4 * args.cpus) \
-            .write.mode('overwrite').parquet(events_path)
-        sf_dir = tmp  # _table() resolves '{sf_dir}/events.parquet'
+    events_path = f'{tmp}/events.parquet'
+    ev = staged(synth(spark, n).repartition(4 * args.cpus), events_path)
+    sf_dir = tmp  # _table() resolves '{sf_dir}/events.parquet'
 
-        oracles = entry.oracle_sql()
-        duck = duckdb.connect()
-        duck.execute(f"CREATE VIEW events AS "
-                     f"SELECT * FROM parquet_scan('{events_path}/*.parquet')")
+    oracles = entry.oracle_sql()
+    duck = duckdb.connect()
+    duck.execute(f"CREATE VIEW events AS "
+                 f"SELECT * FROM parquet_scan('{events_path}/*.parquet')")
 
-        mismatches = {}
-        q_keys = {
-            'events_sessionize': ('user_id', 'session_idx', 'n_events',
-                                  'start_us', 'end_us', 'duration_us',
-                                  'total_value'),
-            'events_asof_join': ('event_id', 'user_id', 'ts_us',
-                                 'right_event_id', 'right_ts_us', 'gap_us'),
-            'events_range_join': ('event_id', 'user_id', 'ts_us',
-                                  'n_right', 'right_value'),
-        }
-        for qname, keys in q_keys.items():
-            sdf = entry.queries()[qname](spark, sf_dir)
-            s_rows = _rows(sdf, keys)
-            d_cur = duck.execute(oracles[qname])
-            cols = [c[0] for c in d_cur.description]
-            idx = [cols.index(k) for k in keys]
-            d_rows = sorted(
-                (tuple(row[i] for i in idx) for row in d_cur.fetchall()),
-                key=lambda t: tuple((v is None, v) for v in t))
-            bad = sum(1 for a, b in zip(s_rows, d_rows) if a != b) \
-                + abs(len(s_rows) - len(d_rows))
-            mismatches[qname] = bad
+    mismatches = {}
+    q_keys = {
+        'events_sessionize': ('user_id', 'session_idx', 'n_events',
+                              'start_us', 'end_us', 'duration_us',
+                              'total_value'),
+        'events_asof_join': ('event_id', 'user_id', 'ts_us',
+                             'right_event_id', 'right_ts_us', 'gap_us'),
+        'events_range_join': ('event_id', 'user_id', 'ts_us',
+                              'n_right', 'right_value'),
+    }
+    for qname, keys in q_keys.items():
+        sdf = entry.queries()[qname](spark, sf_dir)
+        s_rows = _sorted(tuple(r[k] for k in keys) for r in sdf.collect())
+        d_cur = duck.execute(oracles[qname])
+        cols = [c[0] for c in d_cur.description]
+        idx = [cols.index(k) for k in keys]
+        d_rows = _sorted(tuple(row[i] for i in idx)
+                         for row in d_cur.fetchall())
+        bad = sum(1 for a, b in zip(s_rows, d_rows) if a != b) \
+            + abs(len(s_rows) - len(d_rows))
+        mismatches[qname] = bad
 
-        # range-join intermediate: bucketed pre-filter rows vs the naive
-        # user-equi-join fan-out (sum_u errors_u * clicks_u)
-        ev = spark.read.parquet(events_path)
-        w_us = RANGE_WINDOW_S * 1_000_000
-        per_user = (ev.groupBy('user_id').agg(
-            F.sum((F.col('event_type') == 'error').cast('long')).alias('e'),
-            F.sum((F.col('event_type') == 'click').cast('long')).alias('c')))
-        naive_rows = per_user.agg(
-            F.sum(F.col('e') * F.col('c'))).first()[0] or 0
-        # the intermediate-size model shares the operator's OWN bucket
-        # definitions (range_bucket / range_probe_buckets) — if the
-        # bucketing changes, this metric moves with the shipped plan
-        # instead of certifying a stale shape
-        from pyxml_spark.pipeline.temporal import (epoch_us, range_bucket,
-                                                   range_probe_buckets)
-        rb = (ev.where(F.col('event_type') == 'click')
-              .select('user_id', epoch_us('ts').alias('us'))
-              .groupBy('user_id',
-                       range_bucket('us', RANGE_WINDOW_S).alias('b'))
-              .agg(F.count('*').alias('rc')))
-        pb = (ev.where(F.col('event_type') == 'error')
-              .select('user_id', epoch_us('ts').alias('us'))
-              .select('user_id',
-                      range_probe_buckets('us', RANGE_WINDOW_S).alias('b'))
-              .groupBy('user_id', 'b').agg(F.count('*').alias('pc')))
-        bucketed_rows = (pb.join(rb, ['user_id', 'b'])
-                         .agg(F.sum(F.col('pc') * F.col('rc'))
-                              ).first()[0] or 0)
+    # range-join intermediate: bucketed pre-filter rows vs the naive
+    # user-equi-join fan-out (sum_u errors_u * clicks_u)
+    w_us = RANGE_WINDOW_S * 1_000_000
+    per_user = (ev.groupBy('user_id').agg(
+        F.sum((F.col('event_type') == 'error').cast('long')).alias('e'),
+        F.sum((F.col('event_type') == 'click').cast('long')).alias('c')))
+    naive_rows = per_user.agg(
+        F.sum(F.col('e') * F.col('c'))).first()[0] or 0
+    # the intermediate-size model shares the operator's OWN bucket
+    # definitions (range_bucket / range_probe_buckets) — if the
+    # bucketing changes, this metric moves with the shipped plan
+    # instead of certifying a stale shape
+    from pyxml_spark.pipeline.temporal import (epoch_us, range_bucket,
+                                               range_probe_buckets)
+    rb = (ev.where(F.col('event_type') == 'click')
+          .select('user_id', epoch_us('ts').alias('us'))
+          .groupBy('user_id',
+                   range_bucket('us', RANGE_WINDOW_S).alias('b'))
+          .agg(F.count('*').alias('rc')))
+    pb = (ev.where(F.col('event_type') == 'error')
+          .select('user_id', epoch_us('ts').alias('us'))
+          .select('user_id',
+                  range_probe_buckets('us', RANGE_WINDOW_S).alias('b'))
+          .groupBy('user_id', 'b').agg(F.count('*').alias('pc')))
+    bucketed_rows = (pb.join(rb, ['user_id', 'b'])
+                     .agg(F.sum(F.col('pc') * F.col('rc'))
+                          ).first()[0] or 0)
 
-        # interleaved walls: bucketed operator vs naive user-join+filter
-        def bucketed():
-            return range_count_before(ev, 'error', 'click')
+    # interleaved walls: bucketed operator vs naive user-join+filter
+    def bucketed():
+        return range_count_before(ev, 'error', 'click')
 
-        def naive():
-            lefts = (ev.where(F.col('event_type') == 'error')
-                     .select('event_id', 'user_id',
-                             epoch_us('ts').alias('ts_us')))
-            rights = (ev.where(F.col('event_type') == 'click')
-                      .select('user_id', epoch_us('ts').alias('r_us'),
-                              F.col('value').cast('decimal(18,2)')
-                              .alias('r_val')))
-            hits = (lefts.join(rights, 'user_id')
-                    .where((F.col('r_us') > F.col('ts_us') - w_us)
-                           & (F.col('r_us') <= F.col('ts_us')))
-                    .groupBy('event_id')
-                    .agg(F.count('*').alias('n_right'),
-                         F.sum('r_val').alias('right_value')))
-            return (lefts.join(hits, 'event_id', 'left')
-                    .select('event_id',
-                            F.coalesce('n_right', F.lit(0)).cast('long')
-                            .alias('n_right'),
-                            F.coalesce(F.col('right_value').cast('double'),
-                                       F.lit(0.0)).alias('right_value')))
+    def naive():
+        lefts = (ev.where(F.col('event_type') == 'error')
+                 .select('event_id', 'user_id',
+                         epoch_us('ts').alias('ts_us')))
+        rights = (ev.where(F.col('event_type') == 'click')
+                  .select('user_id', epoch_us('ts').alias('r_us'),
+                          F.col('value').cast('decimal(18,2)')
+                          .alias('r_val')))
+        hits = (lefts.join(rights, 'user_id')
+                .where((F.col('r_us') > F.col('ts_us') - w_us)
+                       & (F.col('r_us') <= F.col('ts_us')))
+                .groupBy('event_id')
+                .agg(F.count('*').alias('n_right'),
+                     F.sum('r_val').alias('right_value')))
+        return (lefts.join(hits, 'event_id', 'left')
+                .select('event_id',
+                        F.coalesce('n_right', F.lit(0)).cast('long')
+                        .alias('n_right'),
+                        F.coalesce(F.col('right_value').cast('double'),
+                                   F.lit(0.0)).alias('right_value')))
 
-        walls = {'bucketed': None, 'naive': None}
-        for _ in range(args.reps):
-            for name, fn in (('bucketed', bucketed), ('naive', naive)):
-                t0 = time.time()
-                fn().agg(F.sum('n_right'), F.sum('right_value')).collect()
-                dt = time.time() - t0
-                if walls[name] is None or dt < walls[name]:
-                    walls[name] = dt
+    walls = interleaved_best(
+        {'bucketed': bucketed, 'naive': naive}, args.reps,
+        lambda df: df.agg(F.sum('n_right'), F.sum('right_value')).collect())
 
-        hot = per_user.where(F.col('user_id') == 0).first()
-        out = {
-            'rows': n, 'cpus': args.cpus,
-            'mismatches': mismatches,
-            'naive_join_rows': int(naive_rows),
-            'bucketed_join_rows': int(bucketed_rows),
-            'join_rows_reduction': round(naive_rows
-                                         / max(bucketed_rows, 1), 1),
-            'hot_user_errors': int(hot.e), 'hot_user_clicks': int(hot.c),
-            'bucketed_wall_s': round(walls['bucketed'], 2),
-            'naive_wall_s': round(walls['naive'], 2),
-        }
-        print(json.dumps(out))
-        assert all(v == 0 for v in mismatches.values()), mismatches
+    hot = per_user.where(F.col('user_id') == 0).first()
+    out = {
+        'rows': n,
+        'mismatches': mismatches,
+        'naive_join_rows': int(naive_rows),
+        'bucketed_join_rows': int(bucketed_rows),
+        'join_rows_reduction': round(naive_rows
+                                     / max(bucketed_rows, 1), 1),
+        'hot_user_errors': int(hot.e), 'hot_user_clicks': int(hot.c),
+        'bucketed_wall_s': round(walls['bucketed'], 2),
+        'naive_wall_s': round(walls['naive'], 2),
+    }
+    assert all(v == 0 for v in mismatches.values()), out
 
-        md = f"""# BENCH/TEMPORAL_SOAK ({n:,} events) — hot entity + full DuckDB cross-check
+    md = f"""# BENCH/TEMPORAL_SOAK ({n:,} events) — hot entity + full DuckDB cross-check
 
 Corpus: {n:,} events; user 0 holds 10% of them ({int(hot.e):,} errors /
 {int(hot.c):,} clicks — the skew shape), 1,000 cold users; ts unique,
@@ -225,13 +197,13 @@ one popular entity makes the naive plan the job; the bucketed plan's
 biggest (entity, bucket) cell is set by event rate within one
 {RANGE_WINDOW_S}s window.
 """
-        with open(os.path.join(REPO, 'BENCH', f'TEMPORAL_SOAK_{n}.md'),
-                  'w') as fh:
-            fh.write(md)
-        return 0
-    finally:
-        spark.stop()
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out, md
+
+
+def main(argv=None) -> int:
+    ap = soak_parser(rows=1_000_000)
+    ap.add_argument('--reps', type=int, default=2)
+    return run_soak('TEMPORAL_SOAK', ap.parse_args(argv), soak)
 
 
 if __name__ == '__main__':

@@ -3,6 +3,7 @@ Spark-vs-DuckDB value parity at sf0.001 for the rows that call the curation
 library (scripts/check_contract.py runs the same comparison over every row
 at any scale)."""
 import os
+import re
 import sys
 
 import pytest
@@ -76,3 +77,28 @@ def test_bucketed_join_calls_do_not_interfere(spark, duck):
     want = normalize(list(rel.columns), [tuple(r) for r in rel.fetchall()])
     for df in (first, second):
         assert normalize(df.columns, [tuple(r) for r in df.collect()]) == want
+
+
+def test_one_session_builder_and_one_cpu_probe():
+    """the harness shares one definition of each: outside tests/, only
+    jobs/extract.py builds a Spark session, and outside perfbench/ no
+    source file defines the CPU probe's work or reads the core affinity"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = re.compile(r'^_PROBE_WORK\s*=|os\.sched_getaffinity\s*\(', re.M)
+    builders, probes = [], []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs
+                         if not x.startswith('.') and x != '__pycache__')
+        for f in sorted(files):
+            if not f.endswith('.py'):
+                continue
+            rel = os.path.relpath(os.path.join(d, f), root)
+            top = rel.split(os.sep)[0]
+            with open(os.path.join(d, f), encoding='utf-8') as fh:
+                text = fh.read()
+            if top != 'tests' and 'SparkSession.builder' in text:
+                builders.append(rel)
+            if top != 'perfbench' and probe.search(text):
+                probes.append(rel)
+    assert builders == [os.path.join('pyxml_spark', 'jobs', 'extract.py')]
+    assert probes == []
