@@ -23,12 +23,20 @@ from array import array
 from itertools import accumulate
 from typing import Optional
 
+from pyspark.accumulators import AccumulatorParam
+
 from .gather import gather_document
 from .heuristics import ExtractConfig, score_fragments, select_main
 from .schema import EXTRACTION_SCHEMA
 
-__all__ = ['extract_payload', 'extract_arrow_batches', 'extract_stage',
-           'extract_turns']
+__all__ = ['BUCKET_SUMS', 'BucketSums', 'extract_payload',
+           'extract_arrow_batches', 'extract_stage', 'extract_turns']
+
+#: the per-bucket sums the resume kernel accumulates, in vector order and
+#: named by their manifest columns: rows, input chars, ``main_text`` chars
+#: (as ``F.length`` counts them), parse errors, nodes and text chars
+BUCKET_SUMS = ('rows_out', 'bytes_in', 'bytes_out', 'parse_errors', 'nodes',
+               'text_chars')
 
 
 def _extract_row(payload: Optional[str], config: ExtractConfig) -> tuple:
@@ -99,7 +107,43 @@ def _string_array(values):
         null_count)
 
 
-def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
+class BucketSums(AccumulatorParam):
+    """accumulator of ``{bucket: [BUCKET_SUMS...]}``: dicts merge by
+    bucket, vectors add element-wise"""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for bucket, vec in other.items():
+            have = acc.get(bucket)
+            if have is None:
+                acc[bucket] = list(vec)
+            else:
+                for k, v in enumerate(vec):
+                    have[k] += v
+        return acc
+
+
+def _bucket_sums(buckets, main_text, perr, nodes, chars, raw) -> dict:
+    """one batch's ``{bucket: [BUCKET_SUMS...]}``"""
+    got: dict = {}
+    for b, mt, pe, nn, nc, r in zip(buckets, main_text, perr, nodes, chars,
+                                    raw):
+        vec = got.get(b)
+        if vec is None:
+            vec = got[b] = [0, 0, 0, 0, 0, 0]
+        vec[0] += 1
+        vec[1] += r
+        vec[2] += len(mt)
+        vec[3] += pe is not None
+        vec[4] += nn
+        vec[5] += nc
+    return got
+
+
+def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig(),
+                          sums=None):
     """mapInArrow kernel: pyarrow RecordBatch in/out, no pandas layer.
 
     Input strings come out once via ``to_pylist``; every output array is
@@ -107,6 +151,12 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
     Arrow->pandas->Arrow copy is paid per batch and the worker never loads
     pandas: pyarrow 16 imports it the first time ``pa.array`` converts a
     python list, about 35 MB per worker.
+
+    With ``sums`` (a :class:`BucketSums` accumulator) the input carries a
+    fourth column, ``bucket``, and each batch adds its per-bucket sums
+    before it is yielded. Spark applies a result task's accumulator
+    updates once per partition, so the stage running this kernel must be
+    the write's result stage (no Exchange after it).
     """
     import pyarrow as pa
 
@@ -138,6 +188,10 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
                 starts.append(s)
                 ends.append(e)
             offsets[i + 1] = len(starts)
+        if sums is not None:
+            sums.add(_bucket_sums(
+                batch.column(cols.index('bucket')).to_pylist(),
+                main_text, perr, nodes, chars, raw))
         span_struct = pa.StructArray.from_arrays(
             [_int32_array(starts), _int32_array(ends)],
             names=['start', 'end'])
@@ -157,13 +211,16 @@ def extract_arrow_batches(batches, config: ExtractConfig = ExtractConfig()):
 
 
 def extract_stage(spread, config: ExtractConfig = ExtractConfig(),
-                  sort_output: bool = True):
+                  sort_output: bool = True, sums=None):
     """the kernel stage behind an exchange: the mapInArrow kernel over
     (conv_id, turn_idx, text), then the local (conv_id, turn_idx) output
     sort. :func:`extract_turns` feeds it the salted exchange, the resume
-    job a range exchange on its buckets."""
-    out = spread.select('conv_id', 'turn_idx', 'text').mapInArrow(
-        lambda it: extract_arrow_batches(it, config),
+    job a range exchange on its buckets, with ``bucket`` as a fourth input
+    column and a ``sums`` accumulator."""
+    cols = ('conv_id', 'turn_idx', 'text') + (() if sums is None
+                                              else ('bucket',))
+    out = spread.select(*cols).mapInArrow(
+        lambda it: extract_arrow_batches(it, config, sums),
         schema=EXTRACTION_SCHEMA)
     if sort_output:
         out = out.sortWithinPartitions('conv_id', 'turn_idx')

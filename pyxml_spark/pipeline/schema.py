@@ -41,7 +41,10 @@ EXTRACTION_SCHEMA = StructType([
     StructField('n_raw_chars', IntegerType(), True),
 ])
 
-#: checkpoint/resume manifest: one row per completed bucket, with lineage
+#: checkpoint/resume manifest: one row per completed bucket, with lineage.
+#: ``nodes`` and ``text_chars`` complete the bucket's output sums, so the
+#: job's totals add up from manifest rows (null in a manifest written
+#: before they existed)
 MANIFEST_SCHEMA = StructType([
     StructField('bucket', IntegerType(), False),
     StructField('status', StringType(), False),
@@ -53,4 +56,6 @@ MANIFEST_SCHEMA = StructType([
     StructField('input_lineage', StringType(), True),
     StructField('run_id', StringType(), True),
     StructField('wall_seconds', StringType(), True),
+    StructField('nodes', LongType(), True),
+    StructField('text_chars', LongType(), True),
 ])

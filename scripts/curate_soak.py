@@ -5,8 +5,9 @@ exercises every stage of the curation job:
 
 * token streams salted with English stopwords (every 4th token) so the
   language gate passes the well-formed docs;
-* a 5% degenerate hot cluster + planted near-dup pairs (the
-  dedup_soak.py shapes) for the MinHash/component stages;
+* a 5% degenerate hot cluster + planted near-dup pairs (dedup_soak.py's
+  generator, with its stopword switch on) for the MinHash/component
+  stages;
 * 2% of docs are a single word repeated (top-bigram fraction 100%) —
   the repetition gate's target;
 * 1% of docs are two tokens long — the quality gate's target;
@@ -30,35 +31,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import run_soak, soak_parser  # noqa: E402
 
-VOCAB = 5_000
 STOPS = ['the', 'and', 'of', 'to', 'in']
 
 
-def synth_docs(spark, n: int, hot: int):
+def curate_docs(spark, n: int, hot: int):
+    """the dedup soak's documents with stopwords, planted gate targets and
+    a source column"""
     from pyspark.sql import functions as F
-    ids = spark.range(0, n).withColumnRenamed('id', 'doc_id')
-    gen = (F.when(F.col('doc_id') < hot, F.lit(0).cast('long'))
-           .when(F.col('doc_id') % 10 == 1, F.col('doc_id') - 1)
-           .otherwise(F.col('doc_id')))
-    d = ids.select('doc_id', gen.alias('gen_id'))
-    ntok = (F.abs(F.xxhash64(F.col('gen_id'), F.lit('len'))) % 18 + 12)
-    stop_arr = F.array(*[F.lit(s) for s in STOPS])
-    toks = F.transform(
-        F.sequence(F.lit(1), ntok.cast('int')),
-        lambda j: F.when(
-            j % 4 == 0,
-            F.element_at(stop_arr,
-                         ((F.abs(F.xxhash64(F.col('gen_id'), j, F.lit('s')))
-                           % 5) + 1).cast('int')))
-        .otherwise(F.concat(
-            F.lit('w'),
-            (F.abs(F.xxhash64(F.col('gen_id'), j)) % VOCAB)
-            .cast('string'))))
-    text = F.concat_ws(' ', toks)
-    near = (F.col('doc_id') % 10 == 1) & (F.col('doc_id') >= hot)
-    text = F.when(near, F.concat(text, F.lit(' x'),
-                                 F.col('doc_id').cast('string'))) \
-        .otherwise(text)
+    from dedup_soak import synth_docs  # same dir
+    text = F.col('text')
     # planted gate targets (outside the hot/near-dup id space)
     repetitive = (F.col('doc_id') % 50 == 7) & (F.col('doc_id') >= hot)
     text = F.when(repetitive,
@@ -67,7 +48,8 @@ def synth_docs(spark, n: int, hot: int):
     tiny = (F.col('doc_id') % 100 == 13) & (F.col('doc_id') >= hot)
     text = F.when(tiny, F.lit('too short')).otherwise(text)
     src = F.concat(F.lit('s'), (F.col('doc_id') % 20).cast('string'))
-    return d.select('doc_id', src.alias('source'), text.alias('text'))
+    return synth_docs(spark, n, hot, STOPS).select(
+        'doc_id', src.alias('source'), text.alias('text'))
 
 
 def soak(spark, tmp, args):
@@ -76,7 +58,7 @@ def soak(spark, tmp, args):
     n = args.rows
     hot = max(1000, n // 20)
     t0 = time.time()
-    synth_docs(spark, n, hot).repartition(4 * args.cpus) \
+    curate_docs(spark, n, hot).repartition(4 * args.cpus) \
         .write.mode('overwrite').parquet(f'{tmp}/documents.parquet')
     synth_wall = round(time.time() - t0, 1)
 

@@ -39,8 +39,10 @@ from bench import run_soak, soak_parser, staged  # noqa: E402
 VOCAB = 5_000
 
 
-def synth_docs(spark, n, hot):
-    """deterministic documents(doc_id, text) with planted dup structure"""
+def synth_docs(spark, n, hot, stopwords=()):
+    """deterministic documents(doc_id, text) with planted dup structure.
+    With ``stopwords``, every 4th token is one of them (drawn per document
+    and position), so a language gate passes the documents."""
     from pyspark.sql import functions as F
     ids = spark.range(0, n).withColumnRenamed('id', 'doc_id')
     gen = (F.when(F.col('doc_id') < hot, F.lit(0).cast('long'))
@@ -48,12 +50,21 @@ def synth_docs(spark, n, hot):
            .otherwise(F.col('doc_id')))
     d = ids.select('doc_id', gen.alias('gen_id'))
     ntok = (F.abs(F.xxhash64(F.col('gen_id'), F.lit('len'))) % 18 + 12)
-    toks = F.transform(
-        F.sequence(F.lit(1), ntok.cast('int')),
-        lambda j: F.concat(
+
+    def token(j):
+        word = F.concat(
             F.lit('w'),
-            (F.abs(F.xxhash64(F.col('gen_id'), j)) % VOCAB).cast('string')))
-    text = F.concat_ws(' ', toks)
+            (F.abs(F.xxhash64(F.col('gen_id'), j)) % VOCAB).cast('string'))
+        if not stopwords:
+            return word
+        stop = F.element_at(
+            F.array(*[F.lit(s) for s in stopwords]),
+            ((F.abs(F.xxhash64(F.col('gen_id'), j, F.lit('s')))
+              % len(stopwords)) + 1).cast('int'))
+        return F.when(j % 4 == 0, stop).otherwise(word)
+
+    text = F.concat_ws(' ', F.transform(
+        F.sequence(F.lit(1), ntok.cast('int')), token))
     near = (F.col('doc_id') % 10 == 1) & (F.col('doc_id') >= hot)
     text = F.when(near, F.concat(text, F.lit(' x'),
                                  F.col('doc_id').cast('string'))) \

@@ -7,7 +7,10 @@ assert the scale-critical properties:
 * relational glue runs in WholeStageCodegen;
 * the extraction stage is a single Exchange (the salted repartition) feeding
   one ArrowEvalPython/MapInArrow stage — no extra shuffles;
-* the resume job's extraction is a single range Exchange on its buckets;
+* the resume job's extraction is a single range Exchange on its buckets,
+  and its data write runs the kernel in the write's result stage (no
+  Exchange between them), where Spark applies each task's accumulator
+  updates once;
 * MinHash banding runs its minima aggregate once and decontamination runs
   no higher-order function (no array builder pasted into an inferred
   Generate filter).
@@ -20,6 +23,7 @@ import io
 import os
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,10 +41,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
 
     import __spark_entry__ as entry
+    from perfbench.child import execution_plans
     from pyspark.sql import functions as F
     from pyxml_spark.jobs.extract import build_session
     from pyxml_spark.pipeline import extract_turns, with_bucket
-    from pyxml_spark.pipeline.resume import extract_buckets, pending_turns
+    from pyxml_spark.pipeline.resume import (extract_buckets, pending_turns,
+                                             run_with_resume)
 
     spark = build_session(8)
     spark.sparkContext.setLogLevel('ERROR')
@@ -102,6 +108,32 @@ def main() -> int:
                    rs_plan.count(') Exchange') == 1
                    and 'rangepartitioning(bucket' in rs_plan))
 
+    # 3c. the resume job's data write, as run_with_resume runs it: no
+    # Exchange between the kernel and the write command, so the kernel runs
+    # in the write's result stage, where Spark applies each task's
+    # accumulator updates (the per-bucket manifest sums) once; in a shuffle
+    # map stage a recomputed task would add them again
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    with tempfile.TemporaryDirectory() as td:
+        turns.write.parquet(os.path.join(td, 'in'))
+        bus.waitUntilEmpty()
+        before = max((i for i, _, _ in execution_plans(spark)), default=-1)
+        run_with_resume(spark, os.path.join(td, 'in'),
+                        os.path.join(td, 'out'), os.path.join(td, 'mf'),
+                        n_buckets=8)
+        bus.waitUntilEmpty()
+        (rw_plan,) = [p for _, _, p in execution_plans(spark, before)
+                      if 'MapInArrow' in p]
+    sections.append(('resume_write', rw_plan))
+    tree = rw_plan.split('== Initial Plan ==')[0]
+    write_to_kernel = tree[tree.find('InsertIntoHadoopFsRelationCommand'):
+                           tree.find('MapInArrow')]
+    checks.append(('resume_write',
+                   'kernel in the write stage (no Exchange between '
+                   'MapInArrow and InsertIntoHadoopFsRelationCommand)',
+                   'InsertIntoHadoopFsRelationCommand' in write_to_kernel
+                   and 'Exchange' not in write_to_kernel))
+
     # 4. join rollup: codegen (simple mode marks codegen stages with '*(n)')
     # + partial aggregation
     def executed_plan(df) -> str:
@@ -134,12 +166,8 @@ def main() -> int:
     checks.append(('pdf_layout_extract', 'single aggregate Exchange',
                    pl_plan.count(') Exchange') == 1))
 
-    # 8. a bucket filter on the bucket-partitioned output prunes partitions.
-    # The resume read-back scans the whole output once, because the job
-    # reports whole-output totals (an observation before its bucket filter
-    # sees every row); the filtered rows become the manifest, with input
-    # lineage via n_raw_chars — the input is never re-read for metrics
-    import tempfile
+    # 8. a bucket filter on the bucket-partitioned output prunes partitions,
+    # so a reader of some buckets' output scans only their directories
     with tempfile.TemporaryDirectory() as td:
         bucketed = with_bucket(
             turns.select('conv_id', 'turn_idx', 'text'), 8)
@@ -492,12 +520,10 @@ def main() -> int:
     # operator anywhere (a hot bucket must never become one task's
     # sort), no cartesian. The key join runs in the eager checkpoint of
     # its hits at call time, so its executed plan leads the section.
-    from perfbench.child import execution_plans
     from pyxml_spark.pipeline.dedup import (incremental_candidate_pairs,
                                             minhash_bands, token_sets)
     di_nb = minhash_bands(token_sets(docs.where(F.col('doc_id') % 10 == 0)))
     di_ib = minhash_bands(token_sets(docs.where(F.col('doc_id') % 10 != 0)))
-    bus = spark.sparkContext._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
     before = max((i for i, _, _ in execution_plans(spark)), default=-1)
     di = incremental_candidate_pairs(di_nb, di_ib)

@@ -155,10 +155,12 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
     this run's counts and the whole output's totals, manifest one done row
     per written bucket, and the data write runs the Arrow kernel and the
     (conv_id, turn_idx) output sort behind one range exchange on bucket.
-    No call builds a frame from a Python list (``Scan ExistingRDD``), an
-    uncapped call runs at most three SQL executions and the no-op rerun,
-    capped or not, at most two: it writes nothing and returns the same
-    totals."""
+    No call builds a frame from a Python list (``Scan ExistingRDD``) or
+    scans the committed output (manifest rows and totals come from the
+    kernel's accumulator and the manifest). The uncapped resume runs at
+    most three SQL executions (the manifest read, the data write and the
+    manifest append) and the no-op rerun, capped or not, at most one (the
+    manifest read): it writes nothing and returns the same totals."""
     from perfbench.child import extraction_plan_ok
     from pyxml_spark.jobs.extract import main
     from pyxml_spark.pipeline import (MANIFEST_SCHEMA, TRANSCRIPTS_SCHEMA,
@@ -204,8 +206,10 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
             (exchange,) = _write_exchanges(plans)
             assert exchange.startswith('rangepartitioning(bucket#'), exchange
         assert not any('Scan ExistingRDD' in p for p in plans.values())
+        assert not [p for plan in plans.values()
+                    for p in _scanned_paths(plan) if 'out.parquet' in p]
         if not run_buckets:
-            assert len(plans) <= 2, sorted(plans)
+            assert len(plans) <= 1, sorted(plans)
             noops.append({k: v for k, v in got.items() if k not in (
                 'run_id', 'wall_seconds', 'throughput_rows_per_s')})
         elif not extra:
@@ -215,12 +219,116 @@ def test_extract_job_resume(spark, turns_pdf, tmp_path, run_job):
     assert sum(r.rows_in for r in manifest) == len(turns_pdf)
 
 
+#: worker-only ``sitecustomize`` of the retry test: the first kernel task
+#: that finds the arm file (on the resume path) consumes it and raises
+#: after yielding a batch, so exactly one task attempt fails
+RETRY_HOOK = r'''
+import os
+from pyxml_spark.pipeline import extract as _extract
+
+_kernel = _extract.extract_arrow_batches
+_ARM = os.environ['PYXML_RETRY_ARM']
+
+
+def extract_arrow_batches(batches, config=_extract.ExtractConfig(),
+                          sums=None):
+    for batch in _kernel(batches, config, sums):
+        yield batch
+        if sums is not None:
+            try:
+                os.rename(_ARM, _ARM + '.fired')
+            except FileNotFoundError:
+                continue
+            raise RuntimeError('injected kernel failure')
+
+
+_extract.extract_arrow_batches = extract_arrow_batches
+'''
+
+#: one local[4,2] session (a failed task gets a second attempt) runs the
+#: resume job twice on the same input, unfailed and with the hook armed,
+#: and prints both runs' manifest rows and totals
+RETRY_SCRIPT = r'''
+import json, os, sys
+from pyspark.sql import SparkSession
+from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, output_metrics,
+                                  run_with_resume)
+from pyxml_spark.pipeline.transcripts import gen_transcripts_pdf
+tmp, hook = sys.argv[1:]
+arm = os.path.join(tmp, 'arm')
+spark = (SparkSession.builder.master('local[4,2]')
+         .config('spark.ui.enabled', 'false')
+         .config('spark.sql.shuffle.partitions', '4')
+         .config('spark.sql.execution.arrow.maxRecordsPerBatch', '16')
+         .config('spark.executorEnv.PYTHONPATH', hook)
+         .config('spark.executorEnv.PYXML_RETRY_ARM', arm)
+         .getOrCreate())
+spark.sparkContext.setLogLevel('FATAL')
+inp = os.path.join(tmp, 'in.parquet')
+spark.createDataFrame(gen_transcripts_pdf(400, seed=7),
+                      schema=TRANSCRIPTS_SCHEMA).write.parquet(inp)
+res = {}
+for name in ('plain', 'failed'):
+    if name == 'failed':
+        open(arm, 'w').close()
+    out = os.path.join(tmp, name)
+    got = run_with_resume(spark, inp, out, out + '.manifest', n_buckets=8)
+    res[name] = {
+        'totals': {k: got[k] for k in ('rows_out', 'chars_out',
+                                       'parse_errors', 'nodes',
+                                       'text_chars')},
+        'output': output_metrics(spark.read.parquet(out)),
+        'manifest': [r.asDict() for r in spark.read.parquet(
+            out + '.manifest').drop('run_id', 'wall_seconds')
+            .orderBy('bucket').collect()]}
+res['fired'] = os.path.exists(arm + '.fired')
+spark.stop()
+print(json.dumps(res))
+'''
+
+
+def test_resume_sums_count_a_retried_task_once(tmp_path):
+    """the kernel's accumulator counts a task once even when its first
+    attempt failed after yielding a batch: in a subprocess session at
+    local[4,2], a worker-only hook fails one kernel task's first attempt,
+    and the run still writes the manifest rows and reports the totals of an
+    unfailed run (Spark applies a result task's accumulator updates once,
+    and none from a failed attempt)"""
+    import json
+    import subprocess
+    import sys
+    from tests.conftest import REPO
+    hook = tmp_path / 'hook'
+    hook.mkdir()
+    (hook / 'sitecustomize.py').write_text(RETRY_HOOK)
+    env = dict(os.environ, PYTHONPATH=REPO)
+    p = subprocess.run([sys.executable, '-c', RETRY_SCRIPT, str(tmp_path),
+                        str(hook)], capture_output=True, text=True, env=env,
+                       cwd=REPO, timeout=600)
+    assert p.returncode == 0, p.stderr[-3000:]
+    res = json.loads(p.stdout.strip().splitlines()[-1])
+    assert res['fired'], 'the hook never failed a kernel task'
+    plain, failed = res['plain'], res['failed']
+    assert len(plain['manifest']) == 8
+    assert failed['manifest'] == plain['manifest']
+    assert failed['totals'] == plain['totals'] == plain['output'] \
+        == failed['output']
+
+
+def _scanned_paths(plan: str) -> list:
+    """the file locations every scan of an executed plan reads"""
+    return re.findall(r'Location: \w+ \[(.*)\]', plan)
+
+
 def test_extract_job_first_call_plans(spark, tmp_path, run_job):
     """a first uncapped call on a fresh manifest path plans no frame of
     Python rows (``Scan ExistingRDD``: the empty done set and its
-    broadcast each ran a job of Python tasks), runs at most three SQL
-    executions, and its local session lists the 64 bucket directories of
-    the read-back without a Spark listing job"""
+    broadcast each ran a job of Python tasks) and runs at most two SQL
+    executions, the data write and the manifest append. Every Spark job of
+    the call runs inside one of them (an input footer-inference job ran
+    outside any), no plan scans the committed output (the manifest rows
+    come from the kernel's accumulator, not a read-back), and no job lists
+    the 64 bucket directories."""
     from pyspark.sql import functions as F
     from pyxml_spark.jobs.extract import main
     inp = os.path.join(tmp_path, 'in.parquet')
@@ -242,13 +350,65 @@ def test_extract_job_first_call_plans(spark, tmp_path, run_job):
         sc._jsc.clearJobGroup()
     assert rc == 0 and got['rows_this_run'] == 400
     assert not any('Scan ExistingRDD' in p for p in plans.values())
-    assert len(plans) <= 3, sorted(plans)
+    assert len(plans) <= 2, sorted(plans)
+    assert not [p for plan in plans.values() for p in _scanned_paths(plan)
+                if 'out.parquet' in p]
+    job_ids = list(sc.statusTracker().getJobIdsForGroup('first-call'))
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    in_execs = [execs.apply(i) for i in range(execs.size())
+                if execs.apply(i).executionId() in plans]
+    assert job_ids and all(any(e.jobs().contains(j) for e in in_execs)
+                           for j in job_ids), job_ids
     store = sc._jsc.sc().statusStore()
-    jobs = [store.job(j).description()
-            for j in sc.statusTracker().getJobIdsForGroup('first-call')]
+    jobs = [store.job(j).description() for j in job_ids]
     assert len(_files_per_bucket(out)) > 32
     assert not [d.get() for d in jobs
                 if d.isDefined() and d.get().startswith('Listing leaf')]
+
+
+def test_extract_job_refuses_input_without_text(spark, turns_pdf, tmp_path,
+                                                run_job):
+    """a parquet input without ``text`` stops the job before it writes:
+    the declared input schema is used only when the footer holds it, so a
+    missing column raises as it did under inference, not read as nulls"""
+    from pyspark.errors import AnalysisException
+    from pyxml_spark.jobs.extract import main
+    from pyxml_spark.pipeline import TRANSCRIPTS_SCHEMA
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    spark.createDataFrame(turns_pdf.head(50), schema=TRANSCRIPTS_SCHEMA) \
+        .drop('text').write.parquet(inp)
+    with pytest.raises(AnalysisException, match='`text` cannot be resolved'):
+        run_job(main, ['--input', inp, '--output', out, '--buckets', '4',
+                       '--cpus', '4'])
+    assert not os.path.exists(out)
+    assert not os.path.exists(out + '.manifest')
+
+
+def test_resume_sums_an_old_manifest(spark, turns_pdf, tmp_path):
+    """a manifest written before ``nodes`` and ``text_chars`` existed (the
+    parent layout, MANIFEST_SCHEMA without them) reads them as null, so the
+    totals fall back to an aggregate over the committed output: a resume
+    and a no-op rerun over it report output_metrics"""
+    from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, output_metrics,
+                                      run_with_resume)
+    inp = os.path.join(tmp_path, 'in.parquet')
+    out = os.path.join(tmp_path, 'out.parquet')
+    mf = os.path.join(tmp_path, 'manifest.parquet')
+    old = os.path.join(tmp_path, 'old_manifest.parquet')
+    spark.createDataFrame(turns_pdf, schema=TRANSCRIPTS_SCHEMA) \
+        .write.parquet(inp)
+    run_with_resume(spark, inp, out, mf, n_buckets=8, max_buckets=3)
+    spark.read.parquet(mf).drop('nodes', 'text_chars').write.parquet(old)
+    assert len(spark.read.parquet(old).columns) == 10
+    keys = ('rows_out', 'chars_out', 'parse_errors', 'nodes', 'text_chars')
+    for _ in range(2):
+        got = run_with_resume(spark, inp, out, old, n_buckets=8)
+        assert got['remaining'] == 0
+        assert {k: got[k] for k in keys} == \
+            output_metrics(spark.read.parquet(out))
+    assert got['buckets_run'] == 0 and got['rows_out'] == len(turns_pdf)
 
 
 def _run_job_uncoalesced(spark, run_job, df, tmp_path, buckets: int):
@@ -360,8 +520,8 @@ def test_resume_ignores_crashed_partial_bucket(spark, turns_pdf, tmp_path):
     crashed run's partial write) must not be marked done by a later run that
     didn't process it, and must be redone (overwritten) eventually"""
     from pyspark.sql import functions as F
-    from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, run_with_resume,
-                                      with_bucket)
+    from pyxml_spark.pipeline import (TRANSCRIPTS_SCHEMA, output_metrics,
+                                      run_with_resume, with_bucket)
     inp = os.path.join(tmp_path, 'in.parquet')
     out = os.path.join(tmp_path, 'out.parquet')
     mf = os.path.join(tmp_path, 'manifest.parquet')
@@ -390,6 +550,11 @@ def test_resume_ignores_crashed_partial_bucket(spark, turns_pdf, tmp_path):
     manifest = spark.read.parquet(mf)
     assert manifest.where(F.col('bucket') == crashed).count() == 0, \
         'crashed bucket must not be manifested by an unrelated run'
+    # the totals count the four manifested buckets, not the garbage row
+    manifested = [r.bucket for r in manifest.collect()]
+    assert {k: r2[k] for k in ('rows_out', 'chars_out', 'parse_errors',
+                               'nodes', 'text_chars')} == output_metrics(
+        spark.read.parquet(out).where(F.col('bucket').isin(manifested)))
 
     # finishing runs redo the crashed bucket; its garbage is overwritten
     run_with_resume(spark, inp, out, mf, n_buckets=8)
