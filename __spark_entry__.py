@@ -658,21 +658,12 @@ def q_ngram_jaccard_pairs(spark, sf_dir) -> DataFrame:
 def q_simsearch_topk(spark, sf_dir) -> DataFrame:
     """brute-force cosine top-10 against the vec_id=0 query embedding;
     double accumulation matches DuckDB's double inner product"""
-    emb = _table(spark, sf_dir, 'embeddings')
-    vec = emb.select('vec_id', F.transform('embedding',
-                                           lambda x: x.cast('double'))
-                     .alias('v'))
-    query = vec.where(F.col('vec_id') == 0) \
-        .select(F.col('v').alias('q'))
-    dot = F.aggregate(F.zip_with('v', 'q', lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    scored = (vec.crossJoin(F.broadcast(query))
-              .select('vec_id',
-                      (dot / (norm('v') * norm('q'))).alias('cos')))
-    return (scored.orderBy(F.desc('cos'), F.asc('vec_id')).limit(10)
-            .select('vec_id', F.round('cos', 4).alias('cos_sim')))
+    from pyxml_spark.pipeline.similarity import as_double_vec, brute_force_topk
+    vec = as_double_vec(_table(spark, sf_dir, 'embeddings')) \
+        .select('vec_id', 'v')
+    query = vec.where(F.col('vec_id') == 0).select(F.col('v').alias('q'))
+    return brute_force_topk(vec, query, k=10) \
+        .select('vec_id', F.round('cos_sim', 4).alias('cos_sim'))
 
 
 def q_extract_spans(spark, sf_dir) -> DataFrame:
@@ -766,17 +757,12 @@ def q_simhash16(spark, sf_dir) -> DataFrame:
 def q_embedding_near_dup(spark, sf_dir) -> DataFrame:
     """embedding-cosine near-dup candidates: adjacent-id pairs scored with a
     double dot product, integer-scaled for exact cross-engine compare"""
-    emb = _table(spark, sf_dir, 'embeddings')
-    vec = emb.select('vec_id', F.transform('embedding',
-                                           lambda x: x.cast('double'))
-                     .alias('v'))
+    from pyxml_spark.pipeline.similarity import as_double_vec, cosine
+    vec = as_double_vec(_table(spark, sf_dir, 'embeddings')) \
+        .select('vec_id', 'v')
     a, b = vec.alias('a'), vec.alias('b')
     pairs = a.join(b, F.col('a.vec_id') + 1 == F.col('b.vec_id'))
-    dot = F.aggregate(F.zip_with('a.v', 'b.v', lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nrm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda p, x: p + x))
-    cos = dot / (nrm('a.v') * nrm('b.v'))
+    cos = cosine('a.v', 'b.v')
     return pairs.select(F.col('a.vec_id').alias('id_a'),
                         F.col('b.vec_id').alias('id_b'),
                         F.round(cos, 4).alias('cos_sim'),

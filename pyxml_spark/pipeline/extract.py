@@ -51,8 +51,7 @@ def _extract_row(payload: Optional[str], config: ExtractConfig) -> tuple:
         n = len(payload)
         return (payload, [(0, n)] if n else [], None, 0, n)
     try:
-        frags, block_boiler, n_nodes = gather_document(
-            payload.encode(), mode='html', fix_broken=True, track_spans=True)
+        frags, block_boiler, n_nodes = gather_document(payload.encode())
     except Exception as exc:  # noqa: BLE001 - per-turn containment
         return ('', [], f'{type(exc).__name__}: {exc}', 0, 0)
     got = select_main(score_fragments(frags, block_boiler), n_nodes, config)
@@ -216,7 +215,8 @@ def extract_stage(spread, config: ExtractConfig = ExtractConfig(),
     (conv_id, turn_idx, text), then the local (conv_id, turn_idx) output
     sort. :func:`extract_turns` feeds it the salted exchange, the resume
     job a range exchange on its buckets, with ``bucket`` as a fourth input
-    column and a ``sums`` accumulator."""
+    column and a ``sums`` accumulator; ``streaming.extract_stream`` feeds
+    it the source's partitions, with no exchange and no sort."""
     cols = ('conv_id', 'turn_idx', 'text') + (() if sums is None
                                               else ('bucket',))
     out = spread.select(*cols).mapInArrow(
@@ -230,15 +230,14 @@ def extract_stage(spread, config: ExtractConfig = ExtractConfig(),
 def extract_turns(df,
                   config: ExtractConfig = ExtractConfig(),
                   partitions: Optional[int] = None,
-                  salt: int = 16,
                   sort_output: bool = True):
     """transcripts DataFrame -> extraction DataFrame.
 
-    ``partitions``/``salt`` control the explicit salted repartition; with
+    ``partitions`` sets the salted repartition's width; with
     ``partitions=None`` the session's shuffle parallelism is used.
     """
     from .skew import salted_repartition
 
     cols = df.select('conv_id', 'turn_idx', 'text')
-    spread = salted_repartition(cols, partitions, salt=salt)
-    return extract_stage(spread, config, sort_output)
+    return extract_stage(salted_repartition(cols, partitions), config,
+                         sort_output)

@@ -17,8 +17,8 @@ from __future__ import annotations
 import re
 from typing import List, NamedTuple, Optional, Tuple
 
-__all__ = ['ExtractConfig', 'Extraction', 'score_blocks', 'score_fragments',
-           'select_main', 'extract_main']
+__all__ = ['ExtractConfig', 'Extraction', 'score_fragments', 'select_main',
+           'extract_main']
 
 Span = Tuple[int, int]
 
@@ -136,13 +136,6 @@ def _gather(root) -> Tuple[list, List[bool], int]:
     return fragments, block_boiler, n_nodes
 
 
-def score_blocks(root, config: ExtractConfig = ExtractConfig()):
-    """aggregate fragments into scored blocks (document order); returns
-    (blocks, n_nodes) — the node count falls out of the same walk"""
-    fragments, block_boiler, n_nodes = _gather(root)
-    return score_fragments(fragments, block_boiler), n_nodes
-
-
 def score_fragments(fragments, block_boiler):
     """fragments (from _gather or the streaming GatherComposer) -> scored
     blocks in document order"""
@@ -175,8 +168,9 @@ def score_fragments(fragments, block_boiler):
 def extract_main(root, config: ExtractConfig = ExtractConfig(),
                  count_nodes: bool = True) -> Extraction:
     """main-content text + spans from a parsed DOM"""
-    blocks, n_nodes = score_blocks(root, config)
-    return select_main(blocks, n_nodes if count_nodes else 0, config)
+    fragments, block_boiler, n_nodes = _gather(root)
+    return select_main(score_fragments(fragments, block_boiler),
+                       n_nodes if count_nodes else 0, config)
 
 
 def select_main(blocks, n_nodes,

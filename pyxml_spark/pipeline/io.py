@@ -1,5 +1,5 @@
-"""Source/sink helpers: Iceberg table when a catalog is configured, parquet
-path fallback (the sandbox has no Iceberg catalog; schemas are identical).
+"""Source helpers: Iceberg table when a catalog is configured, parquet path
+fallback (the sandbox has no Iceberg catalog; schemas are identical).
 
 At production scale the transcripts live in an Iceberg table partitioned by
 a conv_id bucket transform; filters and column pruning push into the scan
@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .schema import TRANSCRIPTS_SCHEMA
 
-__all__ = ['hadoop_path', 'read_transcripts', 'write_output',
-           'is_table_ref']
+__all__ = ['hadoop_path', 'read_transcripts', 'is_table_ref']
 
 
 def is_table_ref(ref: str) -> bool:
@@ -95,13 +94,3 @@ def read_transcripts(spark: SparkSession, ref: str) -> DataFrame:
         return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(ref)
     return spark.read.parquet(ref)
 
-
-def write_output(df: DataFrame, ref: str, mode: str = 'append',
-                 partition_by=None):
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if is_table_ref(ref):
-        writer.format('iceberg').saveAsTable(ref)
-    else:
-        writer.parquet(ref)

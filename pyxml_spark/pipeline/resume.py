@@ -101,7 +101,6 @@ def pending_turns(turns: DataFrame, done: list) -> DataFrame:
 
 def extract_buckets(pending: DataFrame, n_buckets: int,
                     config: ExtractConfig = ExtractConfig(),
-                    partitions: Optional[int] = None,
                     sums=None) -> DataFrame:
     """the resume write's frame: bucketed turns range-partitioned on
     ``(bucket, conv_id, turn_idx)``, through the kernel stage, with
@@ -110,9 +109,7 @@ def extract_buckets(pending: DataFrame, n_buckets: int,
     :class:`~.extract.BucketSums` accumulator) the kernel also reads the
     bucket and adds its per-bucket sums to it."""
     keys = ('bucket', 'conv_id', 'turn_idx')
-    cols = pending.select(*keys, 'text')
-    spread = (cols.repartitionByRange(partitions, *keys) if partitions
-              else cols.repartitionByRange(*keys))
+    spread = pending.select(*keys, 'text').repartitionByRange(*keys)
     return with_bucket(extract_stage(spread, config, sums=sums), n_buckets)
 
 
@@ -163,8 +160,7 @@ def run_with_resume(spark: SparkSession,
                     manifest_path: str,
                     n_buckets: int = 64,
                     max_buckets: Optional[int] = None,
-                    config: ExtractConfig = ExtractConfig(),
-                    partitions: Optional[int] = None) -> dict:
+                    config: ExtractConfig = ExtractConfig()) -> dict:
     """one resumable pass. Returns the manifested output's
     :func:`~.metrics.output_sums` totals (``rows_out``, ``chars_out``, ...)
     and this run's ``rows_this_run``, ``buckets_done`` (before the run),
@@ -200,7 +196,7 @@ def run_with_resume(spark: SparkSession,
         # Spark applies a result task's accumulator updates once per
         # partition, so a retried task is not counted twice
         acc = spark.sparkContext.accumulator({}, BucketSums())
-        out = extract_buckets(pending, n_buckets, config, partitions, acc)
+        out = extract_buckets(pending, n_buckets, config, acc)
 
         # the write observes this run's row count and the buckets it wrote
         # (no extra pass). The observation is also what keeps the (conv_id,

@@ -31,9 +31,10 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ['as_double_vec', 'brute_force_topk', 'add_lsh_signature',
-           'build_lsh_index', 'lsh_topk', 'lsh_topk_batch', 'build_ivf',
-           'ivf_topk', 'grid_assign', 'grid_ivf_topk']
+__all__ = ['as_double_vec', 'cosine', 'brute_force_topk',
+           'add_lsh_signature', 'build_lsh_index', 'lsh_topk',
+           'lsh_topk_batch', 'build_ivf', 'ivf_topk', 'grid_assign',
+           'grid_ivf_topk']
 
 
 def as_double_vec(df: DataFrame, col: str = 'embedding',
@@ -51,7 +52,9 @@ def _norm(c):
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def _cosine(a, b):
+def cosine(a, b):
+    """cosine of two double-array columns: one left-fold dot product over
+    the product of two left-fold norms"""
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
@@ -59,7 +62,7 @@ def brute_force_topk(vec_df: DataFrame, query_df: DataFrame,
                      k: int = 10) -> DataFrame:
     """exact cosine top-k; query_df has one row with column ``q``"""
     scored = (vec_df.crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('vec_id', cosine('v', 'q').alias('cos_sim')))
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
 
 
@@ -163,7 +166,7 @@ def lsh_topk_batch(vec_df: DataFrame, queries_df: DataFrame, k: int = 10,
     cands = cand.distinct()
     scored = (cands.join(vec_df.select('vec_id', 'v'), 'vec_id')
               .join(queries_df, 'qid')
-              .select('qid', 'vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('qid', 'vec_id', cosine('v', 'q').alias('cos_sim')))
     w = Window.partitionBy('qid').orderBy(F.desc('cos_sim'),
                                           F.asc('vec_id'))
     return (scored.withColumn('rnk',
@@ -201,7 +204,7 @@ def ivf_topk(assigned: DataFrame, model, query_df: DataFrame, k: int = 10,
     probe = sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
     cands = assigned.where(F.col('list_id').isin(probe))
     scored = (cands.crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('vec_id', cosine('v', 'q').alias('cos_sim')))
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
 
 
@@ -239,7 +242,7 @@ def grid_ivf_topk(vec_df: DataFrame, query_df: DataFrame, k: int = 10,
     query = query.withColumn('probe', F.explode(F.array(*probes)))
     cands = corpus.join(F.broadcast(query),
                         corpus['list_id'] == query['probe'], 'inner')
-    scored = cands.select('vec_id', _cosine('v', 'q').alias('cos_sim')) \
+    scored = cands.select('vec_id', cosine('v', 'q').alias('cos_sim')) \
         .dropDuplicates(['vec_id'])
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)
 
@@ -324,5 +327,5 @@ def lsh_topk(vec_df: DataFrame, query_df: DataFrame, k: int = 10,
     cand_ids = cand.distinct()
     scored = (vec_df.select('vec_id', 'v').join(cand_ids, 'vec_id')
               .crossJoin(F.broadcast(query_df))
-              .select('vec_id', _cosine('v', 'q').alias('cos_sim')))
+              .select('vec_id', cosine('v', 'q').alias('cos_sim')))
     return scored.orderBy(F.desc('cos_sim'), F.asc('vec_id')).limit(k)

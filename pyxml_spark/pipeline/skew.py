@@ -5,8 +5,8 @@ a handful of conversations carry 10^3-10^4 turns. A plain
 ``repartition('conv_id')`` pins each long conversation to one task; at 10^12
 turns that is a straggler. Per-turn extraction is conversation-independent,
 so the library path (``extract_turns``) salts: partition by
-``(conv_id, hash(conv_id, turn_idx) % salt)``, which spreads a hot
-conversation over up to ``salt`` tasks with no re-merge needed beyond the
+``(conv_id, hash(conv_id, turn_idx) % 16)``, which spreads a hot
+conversation over up to 16 tasks with no re-merge needed beyond the
 final local sort.
 
 The resume job (``resume.extract_buckets``) writes its output partitioned by
@@ -26,25 +26,23 @@ from pyspark.sql import DataFrame, functions as F
 
 __all__ = ['salted_repartition', 'with_bucket']
 
+#: tasks one conversation can spread over behind the salted exchange
+_SALT = 16
 
-def salted_repartition(df: DataFrame, partitions: Optional[int] = None,
-                       salt: int = 16) -> DataFrame:
-    """repartition by (conv_id, per-turn salt); salt<=1 degrades to plain
-    conv_id partitioning"""
-    if salt and salt > 1:
-        keys = [F.col('conv_id'),
-                F.pmod(F.hash('conv_id', 'turn_idx'), F.lit(salt))]
-    else:
-        keys = [F.col('conv_id')]
+
+def salted_repartition(df: DataFrame,
+                       partitions: Optional[int] = None) -> DataFrame:
+    """repartition by (conv_id, per-turn salt)"""
+    keys = [F.col('conv_id'),
+            F.pmod(F.hash('conv_id', 'turn_idx'), F.lit(_SALT))]
     if partitions:
         return df.repartition(partitions, *keys)
     return df.repartition(*keys)
 
 
-def with_bucket(df: DataFrame, n_buckets: int,
-                col_name: str = 'bucket') -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """deterministic conversation bucket used by checkpoint/resume: all turns
     of a conversation land in one bucket, so a bucket is a self-contained
     unit of work"""
     return df.withColumn(
-        col_name, F.pmod(F.hash('conv_id'), F.lit(n_buckets)).cast('int'))
+        'bucket', F.pmod(F.hash('conv_id'), F.lit(n_buckets)).cast('int'))

@@ -19,9 +19,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .extract import extract_arrow_batches
+from .extract import extract_stage
 from .heuristics import ExtractConfig
-from .schema import EXTRACTION_SCHEMA, TRANSCRIPTS_SCHEMA
+from .schema import TRANSCRIPTS_SCHEMA
 
 __all__ = ['read_transcripts_stream', 'extract_stream',
            'conversation_rollup_stream', 'conversation_progress_stream',
@@ -40,11 +40,10 @@ def read_transcripts_stream(spark: SparkSession, path: str,
 
 def extract_stream(stream: DataFrame,
                    config: ExtractConfig = ExtractConfig()) -> DataFrame:
-    """streaming extraction: same kernel, no repartition (stream partitions
-    follow the source; salting is a batch concern)"""
-    cols = stream.select('conv_id', 'turn_idx', 'text', 'ts')
-    return cols.select('conv_id', 'turn_idx', 'text').mapInArrow(
-        lambda it: extract_arrow_batches(it, config), schema=EXTRACTION_SCHEMA)
+    """streaming extraction: the batch kernel stage, with no exchange
+    (stream partitions follow the source; salting is a batch concern) and
+    no output sort"""
+    return extract_stage(stream, config, sort_output=False)
 
 
 def conversation_rollup_stream(stream: DataFrame,

@@ -138,8 +138,7 @@ def soak(spark, tmp, args):
     # query; the batch amortizes both — this is the fan-out shape a
     # cluster job uses.
     from pyspark.sql.window import Window
-    from pyxml_spark.pipeline.similarity import (_cosine,
-                                                 lsh_topk_batch)
+    from pyxml_spark.pipeline.similarity import cosine, lsh_topk_batch
     queries_df = (vecs.where(F.col('vec_id').isin(qids))
                   .select(F.col('vec_id').alias('qid'),
                           F.col('v').alias('q')))
@@ -154,7 +153,7 @@ def soak(spark, tmp, args):
                                           F.asc('vec_id'))
     bf_batch = (vecs.crossJoin(F.broadcast(queries_df))
                 .select('qid', 'vec_id',
-                        _cosine('v', 'q').alias('cos_sim'))
+                        cosine('v', 'q').alias('cos_sim'))
                 .withColumn('rnk', F.row_number().over(w))
                 .where(F.col('rnk') <= 10))
     bf_batch_rows = bf_batch.collect()
