@@ -9,9 +9,12 @@ throttle ramp hits both. The compared metric is the workload's headline:
 ``docs_per_s`` for ``curate_corpus``, ``turns_per_s`` otherwise.
 
 Prints one row per pair (seed, both values, cur/ref ratio, both trees'
-CPU probes before/after), then a summary: pairs the current tree won, both
-medians, the reference tree's quartiles, and whether every run was correct
-with 0 failed rows. Exits non-zero unless every run was.
+CPU probes before/after) and under it both runs' values of every
+end-to-end metric ``BENCHMARK.json`` bounds. Then a summary: pairs the
+current tree won, both medians, the reference tree's quartiles, and
+whether every run was correct with 0 failed rows; then the same summary
+for each bounded metric, with wins counted in that metric's direction.
+Exits non-zero unless every run was correct.
 
 Usage:
     python3 scripts/ab_trees.py --ref-commit <sha> [--workload chat_mixed]
@@ -57,6 +60,25 @@ def perfbench_run(tree: str, workload: str, seed: int,
     return {**json.loads(lines[-2]), 'result': json.loads(lines[-1])}
 
 
+def bounded_metrics() -> dict:
+    """{end-to-end metric: 'higher' or 'lower'} from BENCHMARK.json"""
+    with open(os.path.join(REPO, 'BENCHMARK.json')) as f:
+        return {m['name']: m['better'] for m in json.load(f)['end_to_end']}
+
+
+def summary(metric: str, better: str, ref: list, cur: list) -> dict:
+    """pairs won in the metric's direction, medians, ref quartiles"""
+    q1, _, q3 = statistics.quantiles(ref, n=4)
+    sign = 1 if better == 'higher' else -1
+    return {'metric': metric, 'better': better,
+            'cur_wins': sum(sign * (c - r) > 0 for c, r in zip(cur, ref)),
+            'median_ref': round(statistics.median(ref), 2),
+            'median_cur': round(statistics.median(cur), 2),
+            'ref_q1': round(q1, 2), 'ref_q3': round(q3, 2),
+            'median_pair_ratio': round(statistics.median(
+                c / r for c, r in zip(cur, ref)), 3)}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument('--ref-commit', required=True)
@@ -78,37 +100,40 @@ def main() -> int:
     print(f'{args.workload} {metric}: cur {REPO} vs ref '
           f'{args.ref_commit}, {args.seconds:g} s per run')
     print('pair(first) seed ref cur ratio [ref probe before/after, '
-          'cur probe before/after]', flush=True)
-    vals = {'cur': [], 'ref': []}
+          'cur probe before/after]\n   then per bounded metric: ref cur',
+          flush=True)
+    bounded = bounded_metrics()
+    vals = {(name, m): [] for name in trees for m in bounded}
     ok = True
     for i in range(args.pairs):
         order = ['ref', 'cur'] if i % 2 == 0 else ['cur', 'ref']
         runs = {name: perfbench_run(trees[name], args.workload, args.seed,
                                     args.seconds) for name in order}
         for name, run in runs.items():
-            vals[name].append(run['result']['metrics'][metric]['value'])
+            for m in bounded:
+                vals[name, m].append(run['result']['metrics'][m]['value'])
             ok = ok and run['result']['correct'] \
                 and run['result']['failed'] == 0
         probes = ', '.join(
             f"{name} {runs[name]['cpu_probe_before']:.1f}/"
             f"{runs[name]['cpu_probe_after']:.1f}" for name in ('ref', 'cur'))
-        print(f"{i}({order[0]}) {args.seed} {vals['ref'][-1]:.1f} "
-              f"{vals['cur'][-1]:.1f} "
-              f"x{vals['cur'][-1] / vals['ref'][-1]:.3f} [{probes}]",
-              flush=True)
+        ref, cur = vals['ref', metric][-1], vals['cur', metric][-1]
+        print(f"{i}({order[0]}) {args.seed} {ref:.1f} {cur:.1f} "
+              f"x{cur / ref:.3f} [{probes}]", flush=True)
+        print('   ' + ' | '.join(
+            f"{m} {vals['ref', m][-1]:.2f} {vals['cur', m][-1]:.2f}"
+            for m in bounded), flush=True)
 
-    q1, _, q3 = statistics.quantiles(vals['ref'], n=4)
-    wins = sum(c > r for c, r in zip(vals['cur'], vals['ref']))
     print(json.dumps({
-        'workload': args.workload, 'metric': metric,
-        'ref_commit': args.ref_commit, 'pairs': args.pairs,
-        'cur_wins': wins,
-        'median_ref': round(statistics.median(vals['ref']), 1),
-        'median_cur': round(statistics.median(vals['cur']), 1),
-        'ref_q1': round(q1, 1), 'ref_q3': round(q3, 1),
-        'median_pair_ratio': round(statistics.median(
-            c / r for c, r in zip(vals['cur'], vals['ref'])), 3),
+        'workload': args.workload, 'ref_commit': args.ref_commit,
+        'pairs': args.pairs,
+        **summary(metric, bounded[metric], vals['ref', metric],
+                  vals['cur', metric]),
         'all_correct_0_failed': ok}))
+    for m, better in bounded.items():
+        if m != metric:
+            print(json.dumps(summary(m, better, vals['ref', m],
+                                     vals['cur', m])))
     return 0 if ok else 1
 
 

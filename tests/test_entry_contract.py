@@ -102,3 +102,138 @@ def test_one_session_builder_and_one_cpu_probe():
                 probes.append(rel)
     assert builders == [os.path.join('pyxml_spark', 'jobs', 'extract.py')]
     assert probes == []
+
+
+# ------------------------------------------- the launch's class-data archive
+
+@pytest.fixture
+def fake_install(tmp_path, monkeypatch):
+    """a Spark home with two jars and a templates-only conf directory, and
+    a fresh cache directory; the java binary is the real one"""
+    home = tmp_path / 'spark'
+    (home / 'jars').mkdir(parents=True)
+    (home / 'conf').mkdir()
+    (home / 'conf' / 'spark-defaults.conf.template').write_text('# x\n')
+    for name in ('a.jar', 'b.jar'):
+        (home / 'jars' / name).write_bytes(b'jar')
+    monkeypatch.setenv('SPARK_HOME', str(home))
+    monkeypatch.setenv('XDG_CACHE_HOME', str(tmp_path / 'cache'))
+    monkeypatch.delenv('SPARK_CONF_DIR', raising=False)
+    return home
+
+
+def class_archive(memory='8g'):
+    pytest.importorskip('pyspark')
+    from pyxml_spark.jobs.extract import _ClassArchive
+    return _ClassArchive(memory)
+
+
+def test_class_archive_key_follows_the_install(fake_install, tmp_path,
+                                               monkeypatch):
+    """a jar's size or mtime, the conf directory and the heap's compressed
+    oops each change the archive's key"""
+    base = class_archive().final
+    assert base == class_archive().final
+    jar = fake_install / 'jars' / 'a.jar'
+    st = jar.stat()
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10 ** 9))
+    touched = class_archive().final
+    jar.write_bytes(b'jar, rebuilt')
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10 ** 9))
+    resized = class_archive().final
+    other_conf = tmp_path / 'other-conf'
+    other_conf.mkdir()
+    monkeypatch.setenv('SPARK_CONF_DIR', str(other_conf))
+    moved = class_archive().final
+    big_heap = class_archive('40g').final
+    assert len({base, touched, resized, moved, big_heap}) == 5
+
+
+def test_class_archive_miss_dumps_to_a_per_process_file(fake_install):
+    archive = class_archive()
+    assert archive.dump == f'{archive.final}.{os.getpid()}.tmp'
+    assert f'-XX:ArchiveClassesAtExit={archive.dump} ' in archive.options
+    assert 'SharedArchiveFile' not in archive.options
+    assert '-Xlog:cds=off -Xlog:cds+dynamic=off' in archive.options
+    with archive.launch_env():
+        assert os.environ['SPARK_CONF_DIR'] == archive.conf_dir
+        assert os.listdir(archive.conf_dir) == []
+    assert 'SPARK_CONF_DIR' not in os.environ
+
+
+def test_class_archive_off_with_a_real_conf_file(fake_install):
+    """a non-template file in the conf directory would void the archive,
+    so the launch goes as without one and SPARK_CONF_DIR is left alone"""
+    (fake_install / 'conf' / 'spark-defaults.conf').write_text('a b\n')
+    archive = class_archive()
+    assert archive.options is None
+    with archive.launch_env():
+        assert 'SPARK_CONF_DIR' not in os.environ
+    assert 'SPARK_CONF_DIR' not in os.environ
+
+
+def test_build_session_with_a_live_session_changes_nothing(
+        spark, tmp_path, monkeypatch):
+    """the shared session's JVM exists, so building a session sets no
+    option, no environment variable and no cache file"""
+    from conftest import restored_conf
+    from pyxml_spark.jobs.extract import build_session
+    monkeypatch.setenv('XDG_CACHE_HOME', str(tmp_path / 'cache'))
+    env = dict(os.environ)
+    with restored_conf(spark):
+        assert build_session(4) is spark
+        assert 'Archive' not in spark.conf.get(
+            'spark.driver.extraJavaOptions', '')
+    assert dict(os.environ) == env
+    assert not (tmp_path / 'cache').exists()
+
+
+def test_class_archive_failed_jvm_publishes_nothing(fake_install):
+    """a dump of a JVM that exited non-zero is removed, never published"""
+    import subprocess
+    archive = class_archive()
+    with open(archive.dump, 'wb') as f:
+        f.write(b'truncated')
+    archive.publish(subprocess.Popen([sys.executable, '-c',
+                                      'raise SystemExit(3)']))
+    assert not os.path.exists(archive.final)
+    assert not os.path.exists(archive.dump)
+
+
+def test_class_archive_maps_spark_classes(tmp_path, monkeypatch):
+    """end to end on the real install: a JVM dumps an archive at exit,
+    publish renames it into place, and the next JVM with the use-options
+    loads SparkSubmit from the archive, not from its jar"""
+    import shutil
+    import subprocess
+    java_home = os.environ.get('JAVA_HOME')
+    java = (os.path.join(java_home, 'bin', 'java') if java_home
+            else shutil.which('java'))
+    if not java or not os.path.exists(java):
+        pytest.skip('no java')
+    from pyspark.find_spark_home import _find_spark_home
+    monkeypatch.setenv('XDG_CACHE_HOME', str(tmp_path / 'cache'))
+    creating = class_archive()
+    assert creating.dump is not None
+    cp = os.pathsep.join([creating.conf_dir,
+                          os.path.join(_find_spark_home(), 'jars', '*')])
+    main = ['-Xmx1g', '-cp', cp, 'org.apache.spark.deploy.SparkSubmit',
+            '--version']
+    proc = subprocess.Popen([java, *creating.options.split(), *main],
+                            stdout=subprocess.PIPE, stderr=subprocess.PIPE)
+    out, _ = proc.communicate(timeout=120)
+    assert out == b''  # the dump prints nothing to stdout
+    creating.publish(proc)
+    assert os.path.isfile(creating.final)
+    assert not os.path.exists(creating.dump)
+
+    mapping = class_archive()
+    assert mapping.dump is None and mapping.final == creating.final
+    assert f'-XX:SharedArchiveFile={creating.final} ' in mapping.options
+    log = tmp_path / 'load.log'
+    subprocess.run([java, *mapping.options.split(),
+                    f'-Xlog:class+load:file={log}', *main],
+                   capture_output=True, check=True, timeout=120)
+    loads = [ln for ln in log.read_text().splitlines()
+             if ' org.apache.spark.deploy.SparkSubmit source:' in ln]
+    assert loads and loads[0].endswith('source: shared objects file (top)')
